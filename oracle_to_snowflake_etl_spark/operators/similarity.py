@@ -566,11 +566,14 @@ def _cell_sims(V: "np.ndarray", C: "np.ndarray") -> "np.ndarray":
     cumsum dots, sqrt of the PRODUCT of squared norms (sqrt(a*b), never
     sqrt(a)*sqrt(b) — different rounding). O(n x cells x dims) cumsum
     work — the reference implementation the masked fast path
-    (:func:`_cell_sims_masked`) is verified against."""
+    (:func:`_cell_sims_masked`) is verified against. Zero-norm vectors
+    or centroids score NaN without a RuntimeWarning — executors meet
+    real zero vectors, and NaN is the value the parity tests pin."""
     proj = np.cumsum(V[:, None, :] * C[None, :, :], axis=2)[:, :, -1]
     nv = np.cumsum(V * V, axis=1)[:, -1]
     nc = np.cumsum(C * C, axis=1)[:, -1]
-    return proj / np.sqrt(nv[:, None] * nc[None, :])
+    with np.errstate(divide="ignore", invalid="ignore"):
+        return proj / np.sqrt(nv[:, None] * nc[None, :])
 
 
 #: BLAS-vs-sequential-fold disagreement bound for the assignment
@@ -627,7 +630,7 @@ def ivf_cell(vec: Column, cells: int = IVF_CELLS,
     oracle's list_position-of-max). Leaf function: it sees only a Column
     and cannot train, so ``centroids=None`` means the reproducible md5
     matrix — the TRAINED default lives one level up (:func:`ivf_topk` /
-    :func:`write_ivf_index` train on their corpus)."""
+    :func:`write_ivf_int8_index` train on their corpus)."""
     from pyspark.sql.functions import pandas_udf
 
     C = np.array(centroids if centroids is not None
@@ -704,7 +707,7 @@ def ivf_train_centroids(corpus: DataFrame, cells: int = IVF_CELLS,
     metric; empty cells keep their previous centroid). The collect is
     bounded by ``sample`` x dims floats (4096 x 64 = 1 MB) — at 100 TB
     you still sample thousands, not billions; train once, version the
-    snapshot with the index directory (write_ivf_index docstring).
+    snapshot with the index directory (write_ivf_int8_index docstring).
 
     ``init="sample"`` seeds Lloyd's from the first ``cells`` DISTINCT
     sample vectors (hash order — still deterministic) instead of the
@@ -718,7 +721,7 @@ def ivf_train_centroids(corpus: DataFrame, cells: int = IVF_CELLS,
 
     Returns a tuple-of-tuples centroid matrix for the ``centroids``
     parameter of :func:`ivf_cell` / :func:`ivf_probe_cells` /
-    :func:`ivf_topk` / :func:`write_ivf_index`.
+    :func:`ivf_topk` / :func:`write_ivf_int8_index`.
     """
     from ..functions.hashing import hash60
 
@@ -791,7 +794,7 @@ def ivf_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
     (SCALE.md). This mirrors standard IVF practice (FAISS trains on the
     indexed vectors or a sample). Pass an :func:`ivf_train_centroids`
     snapshot explicitly to amortize training across calls — the
-    at-rest form (:func:`write_ivf_index`) does exactly that, persisting
+    at-rest form (:func:`write_ivf_int8_index`) does exactly that, persisting
     its matrix with the index.
 
     100 TB shape: NO corpus shuffle — the tiny (query_id, cell) probe set
@@ -1281,7 +1284,7 @@ def semantic_dedup_incremental(new_df: DataFrame, corpus: DataFrame,
     100 TB shape: per-batch cost is |new| x (corpus cell loads), one
     hash shuffle on cell; the corpus side arrives cell-partitioned when
     the survivor store is written partitionBy(cell)
-    (:func:`write_ivf_index` layout), so the join prunes to the cells
+    (:func:`write_ivf_int8_index` layout), so the join prunes to the cells
     the batch actually touches. Since round 11 the per-cell cosines run
     as an asymmetric blocked GEMM inside each task
     (:func:`_cell_dropped_gemm_incr`) — only assignment rows shuffle,
@@ -1667,8 +1670,8 @@ ANN_INT8_MAX_QUERIES = 4096
 #: contract cap on the attribute-filter allow-set of the filtered ANN
 #: scans — 4M ids is a 32 MB int64 broadcast (the practical executor
 #: broadcast budget). Beyond it, an id-list filter is corpus-shaped:
-#: store the attribute IN the index (write_ivf_int8_index /
-#: write_pq_index ``meta_cols``) and push the predicate into the scan
+#: store the attribute IN the index (write_ivf_int8_index
+#: ``meta_cols``) and push the predicate into the scan
 #: (``filter_pred``), which broadcasts NOTHING and prunes at the
 #: parquet reader.
 ANN_FILTER_MAX_IDS = 4_000_000
@@ -1717,6 +1720,11 @@ def _resolve_filter_ids(filter_ids, id_col: str,
 #: measure within noise (83.6 vs 84.8 s), so the gate errs toward the
 #: one BLAS GEMM there.
 ANN_GATHER_MIN_ROWS_PER_CELL = 64
+
+#: row schema of the at-rest int8 ANN store (:func:`write_ivf_int8_index`)
+#: — passed explicitly to its readers, since inference would read a
+#: footer + merge before the first task launches
+_INT8_STORE_SCHEMA = "neighbor_id long, scale double, qb binary, cell int"
 
 
 def _int8_quantize_np(Cf: "np.ndarray") -> tuple["np.ndarray", "np.ndarray"]:
@@ -2017,616 +2025,6 @@ def _int8_cut_and_rescore(part_top: DataFrame, corpus: DataFrame,
             .select("query_id", "neighbor_id", "sim_q6"))
 
 
-#: product-quantization geometry: PQ_M subspaces of dims/PQ_M elements,
-#: PQ_K codewords per subspace -> PQ_M bytes per vector at rest (8 B at
-#: the 64-dim default: 8x under the int8 codes, 32x under float32 —
-#: the FAISS IVFPQ storage point, expressed Spark-first)
-PQ_M = 8
-PQ_K = 16
-
-
-def pq_train_codebooks(corpus: DataFrame, m: int = PQ_M, k: int = PQ_K,
-                       dims: int = DEFAULT_DIMS,
-                       sample: int = 4096, iters: int = 10,
-                       vec_col: str = "embedding",
-                       id_col: str = "vec_id",
-                       residual_centroids: tuple | None = None) -> tuple:
-    """Deterministic per-subspace L2 k-means codebooks for product
-    quantization (Jégou, Douze, Schmid 2011, TPAMI — 'Product
-    quantization for nearest neighbor search'): the vector is split
-    into ``m`` contiguous subspaces and each learns its own ``k``
-    centroids, so a code of m small integers (m bytes at k<=256)
-    reconstructs the vector as the concatenation of its per-subspace
-    codewords. Determinism follows the house k-means recipe
-    (:func:`ivf_train_centroids`): lowest-hash sample of ``sample``
-    vectors, per-subspace first-k-DISTINCT member seeding (L2 space —
-    the md5 unit-sphere matrix is meaningless off the sphere), exactly
-    ``iters`` Lloyd's rounds, empty cells keep their centroid. Same
-    corpus -> byte-identical codebooks, which is what lets the DuckDB
-    oracle embed the training output as a literal
-    (tools/train_pq_snapshot.py, the IVF_SNAPSHOT convention).
-
-    ``residual_centroids``: train on RESIDUALS x - centroid(cell(x))
-    under the given IVF matrix instead of raw vectors — the actual
-    FAISS IVFPQ construction (Jégou 2011 §IV.B, 'IVFADC'): inside one
-    cell the residual magnitudes are smaller and more isotropic than
-    the raw coordinates, so the same m bytes quantize them with lower
-    distortion. Sample cells are assigned with the index's own
-    assignment kernel, so training and encoding see identical
-    residuals.
-
-    Returns ``tuple[m]`` of ``tuple[k]`` of ``tuple[dims//m]``."""
-    from ..functions.hashing import hash60
-
-    if dims % m:
-        raise ValueError(f"dims={dims} not divisible by m={m}")
-    s = (corpus.select(F.col(vec_col).alias("v"),
-                       hash60(F.col(id_col).cast("string")).alias("_h"))
-         .orderBy("_h", F.col("v")[0])
-         .limit(sample))
-    X = np.stack([r.v for r in s.collect()]).astype(np.float64)
-    if residual_centroids is not None:
-        C = np.array(residual_centroids, dtype=np.float64)
-        cell = np.argmax(_cell_sims_masked(X, C, top=1), axis=1)
-        X = X - C[cell]
-    ds = dims // m
-    books = []
-    for j in range(m):
-        Xj = X[:, j * ds:(j + 1) * ds]
-        _, first = np.unique(Xj.round(12), axis=0, return_index=True)
-        seeds = Xj[np.sort(first)[:k]]
-        C = np.zeros((k, ds), dtype=np.float64)
-        C[:len(seeds)] = seeds
-        for _ in range(iters):
-            d2 = ((Xj[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
-            a = np.argmin(d2, axis=1)
-            for c in range(k):
-                mem = Xj[a == c]
-                if len(mem):
-                    C[c] = mem.mean(axis=0)
-        books.append(tuple(tuple(float(x) for x in row) for row in C))
-    return tuple(books)
-
-
-def _pq_encode_np(X: "np.ndarray", CB: tuple) -> "np.ndarray":
-    """(n, m) int64 PQ codes with the EXACT arithmetic of the DuckDB
-    oracle: per subspace, squared L2 to every codeword via the
-    sequential cumsum fold (mirroring list_reduce's left fold), argmin
-    with first-min ties (mirroring list_position-of-list_min)."""
-    n, dims = X.shape
-    m = len(CB)
-    ds = dims // m
-    codes = np.empty((n, m), dtype=np.int64)
-    for j in range(m):
-        C = np.asarray(CB[j], dtype=np.float64)
-        diff = X[:, None, j * ds:(j + 1) * ds] - C[None, :, :]
-        d2 = np.cumsum(diff * diff, axis=2)[:, :, -1]
-        codes[:, j] = np.argmin(d2, axis=1)
-    return codes
-
-
-def _pq_lut_np(Q: "np.ndarray", CB: tuple) -> "np.ndarray":
-    """(nq, m, k) float64 ADC lookup tables — LUT[q, j, c] =
-    dot(q_subspace_j, codeword_c) via the same sequential fold the
-    oracle's inner list_reduce performs."""
-    nq, dims = Q.shape
-    m = len(CB)
-    ds = dims // m
-    k = len(CB[0])
-    lut = np.empty((nq, m, k), dtype=np.float64)
-    for j in range(m):
-        C = np.asarray(CB[j], dtype=np.float64)
-        prod = Q[:, None, j * ds:(j + 1) * ds] * C[None, :, :]
-        lut[:, j, :] = np.cumsum(prod, axis=2)[:, :, -1]
-    return lut
-
-
-def ann_pq_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
-                rescore: int = 3, codebooks: tuple | None = None,
-                vec_col: str = "embedding", id_col: str = "vec_id",
-                max_queries: int = ANN_INT8_MAX_QUERIES) -> DataFrame:
-    """Product-quantization ANN top-k via asymmetric distance
-    computation (ADC): the scan term reads PQ codes — ``PQ_M`` bytes
-    per vector, 8x smaller than the int8 store, 32x smaller than
-    float32 — scores every (query, vector) pair as a sum of m table
-    lookups (no per-pair arithmetic beyond m adds), and exact-rescores
-    only ``k * rescore`` float candidates per query. Same output
-    contract as :func:`brute_force_topk` / :func:`ann_int8_topk`:
-    (query_id, neighbor_id, sim_q6), self-matches excluded, total
-    order (score DESC, neighbor_id ASC).
-
-    Why this exists at 100 TB: the int8 path's scan term is
-    dims bytes/vector; PQ cuts it to m bytes/vector (64 -> 8 at the
-    default geometry) — the difference between a 6.4 TB and an 0.8 TB
-    scan per full pass over a 100-billion-vector corpus — at the price
-    of a coarser first-pass ranking (recall is bought back by the
-    exact rescore widening, the ``rescore`` dial; measured floor
-    pinned in tests/test_recall.py). This is FAISS's IVFPQ storage
-    point re-hosted on the repo's Arrow-scan + window-cut machinery;
-    compose with IVF cells exactly like :func:`ann_int8_topk`
-    (store codes partitionBy(cell)) when probing should also prune
-    the scan.
-
-    Cross-engine determinism (the family contract): codes are
-    assigned by the oracle's own sequential-fold L2 with first-min
-    ties (:func:`_pq_encode_np`); the ADC score folds the m lookup
-    terms LEFT TO RIGHT from 0.0 (:func:`_pq_scan_kernel`) exactly as
-    the oracle's list_reduce; ties break on neighbor_id; the rescore
-    is the family's sequential-fold cos_q6. ``codebooks=None`` trains
-    on the corpus (:func:`pq_train_codebooks`, deterministic);
-    differential mirrors pass the committed snapshot
-    (operators/pq_snapshot.py)."""
-    qrows = (queries.select(F.col(id_col), F.col(vec_col))
-             .limit(max_queries + 1).collect())
-    if len(qrows) > max_queries:
-        raise ValueError(
-            f"query set exceeds max_queries={max_queries}: the "
-            f"broadcast ADC path is for bounded query batches.")
-    if not qrows:
-        return corpus.sparkSession.createDataFrame(
-            [], "query_id long, neighbor_id long, sim_q6 long")
-    if codebooks is None:
-        codebooks = pq_train_codebooks(corpus, vec_col=vec_col,
-                                       id_col=id_col)
-    q_ids = np.array([r[0] for r in qrows], dtype=np.int64)
-    Qf = np.array([r[1] for r in qrows], dtype=np.float64)
-    lut = _pq_lut_np(Qf, codebooks)
-    bc = corpus.sparkSession.sparkContext.broadcast(
-        (q_ids, lut, codebooks))
-    r_cut = k * rescore
-    scan = _pq_scan_kernel(bc, r_cut)
-    qc = corpus.select(F.col(id_col).alias("neighbor_id"),
-                       F.col(vec_col).alias("c_vec"))
-    part_top = qc.mapInPandas(
-        scan, schema="query_id long, neighbor_id long, approx double")
-    return _int8_cut_and_rescore(part_top, corpus, queries, k, r_cut,
-                                 vec_col, id_col)
-
-
-def _pq_scan_kernel(bc, r_cut: int):
-    """Arrow scan kernel of :func:`ann_pq_topk`: encode the batch
-    under the broadcast codebooks (in production the codes are the
-    at-rest store and this step is a read), gather each query's ADC
-    score as a LEFT FOLD of m LUT lookups (term order mirrors the
-    oracle's list_reduce), mask self-matches, emit the per-partition
-    top ``r_cut`` per query under (approx DESC, neighbor ASC) — the
-    distributive-top-k cut shared with :func:`_int8_scan_kernel`."""
-
-    def scan(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        q_ids, lut, CB = bc.value
-        m = len(CB)
-        bq: list[np.ndarray] = []
-        bn: list[np.ndarray] = []
-        bs: list[np.ndarray] = []
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            nid = pdf["neighbor_id"].to_numpy(dtype=np.int64)
-            X = np.stack(pdf["c_vec"].values).astype(np.float64)
-            codes = _pq_encode_np(X, CB)
-            # approx[q, row]: left fold over j from 0.0 — exact mirror
-            # of list_reduce(list_prepend(0.0, terms), +)
-            S = np.zeros((q_ids.shape[0], nid.shape[0]),
-                         dtype=np.float64)
-            for j in range(m):
-                S += lut[:, j, codes[:, j]]
-            S[q_ids[:, None] == nid[None, :]] = -np.inf
-            cut = min(r_cut, nid.shape[0])
-            for qi in range(q_ids.shape[0]):
-                col = S[qi]
-                order = np.lexsort((nid, -col))[:cut]
-                keep = np.isfinite(col[order])
-                order = order[keep]
-                bq.append(np.full(order.shape[0], q_ids[qi],
-                                  dtype=np.int64))
-                bn.append(nid[order])
-                bs.append(col[order])
-        if not bq:
-            return
-        yield pd.DataFrame({
-            "query_id": np.concatenate(bq),
-            "neighbor_id": np.concatenate(bn),
-            "approx": np.concatenate(bs)})
-
-    return scan
-
-
-def codebook_md5(codebooks: tuple) -> str:
-    """Geometry fingerprint of a PQ codebook set — the
-    :func:`centroid_md5` convention applied to the second geometry an
-    IVFPQ store carries: rows encoded under foreign codebooks decode
-    to the wrong reconstructions just as silently as rows assigned
-    under foreign centroids land in the wrong cells."""
-    import hashlib
-
-    return hashlib.md5(
-        repr(tuple(tuple(tuple(float(x) for x in row) for row in book)
-                   for book in codebooks)).encode()).hexdigest()
-
-
-def _write_codebooks(spark, path: str, codebooks: tuple,
-                     residual: bool = False) -> None:
-    """Persist the PQ codebooks INTO an index directory
-    (``_codebooks`` parquet sidecar, the ``_centroids`` convention):
-    whichever codebooks encoded the rows travel with them — INCLUDING
-    whether they encode RESIDUALS (x - centroid(cell)) or raw vectors:
-    decoding a residual store as raw (or vice versa) mis-scores every
-    candidate, so the flag is part of the store's geometry stamp and
-    the readers branch on it automatically."""
-    import pyarrow as pa
-
-    rows = [(j, c, [float(x) for x in w], bool(residual))
-            for j, book in enumerate(codebooks)
-            for c, w in enumerate(book)]
-    _sidecar_write(spark, path + "/_codebooks", pa.table({
-        "sub": pa.array([r[0] for r in rows], pa.int32()),
-        "code": pa.array([r[1] for r in rows], pa.int32()),
-        "w": pa.array([r[2] for r in rows], pa.list_(pa.float64())),
-        "residual": pa.array([r[3] for r in rows], pa.bool_()),
-    }))
-
-
-def read_pq_residual(spark, index_path: str) -> bool:
-    """Whether a PQ store's codes encode residuals — False for
-    pre-flag stores (raw encoding was the only form then)."""
-    t = _sidecar_read(spark, index_path + "/_codebooks")
-    if t is None:
-        raise FileNotFoundError(index_path + "/_codebooks")
-    if "residual" not in t.column_names:
-        return False
-    return bool(t.column("residual")[0].as_py())
-
-
-def read_pq_codebooks(spark, index_path: str) -> tuple:
-    """The codebooks a :func:`write_pq_index` store was encoded with,
-    from its ``_codebooks`` sidecar."""
-    t = _sidecar_read(spark, index_path + "/_codebooks")
-    if t is None:
-        raise FileNotFoundError(index_path + "/_codebooks")
-    recs = sorted(((r["sub"], r["code"], tuple(r["w"]))
-                   for r in t.select(["sub", "code", "w"]).to_pylist()),
-                  key=lambda x: (x[0], x[1]))
-    books: dict[int, list] = {}
-    for sub, _code, w in recs:
-        books.setdefault(sub, []).append(w)
-    return tuple(tuple(books[j]) for j in sorted(books))
-
-
-def _pq_index_rows(corpus: DataFrame, centroids: tuple,
-                   codebooks: tuple, residual: bool,
-                   vec_col: str, id_col: str,
-                   meta_cols: tuple[str, ...] = ()) -> DataFrame:
-    """The (neighbor_id, cell, pqb[, meta...]) frame of the at-rest PQ
-    index — ONE Arrow pass computing cell assignment and codes
-    together, shared by :func:`write_pq_index` and
-    :func:`append_pq_index` so base and appended rows are encoded by
-    exactly the same kernels. With ``residual`` the codes quantize
-    x - centroid(cell) (the IVFADC form) — which is why cell and code
-    must come from one kernel: the residual depends on the
-    assignment."""
-    from pyspark.sql.functions import pandas_udf
-
-    cb = codebooks
-    C_np = np.array(centroids, dtype=np.float64)
-    res = bool(residual)
-
-    @pandas_udf("struct<cell: int, pqb: binary>")
-    def _enc(v: pd.Series) -> pd.DataFrame:
-        if len(v) == 0:
-            return pd.DataFrame({"cell": [], "pqb": []})
-        X = np.stack(v.values).astype(np.float64)
-        cell = np.argmax(_cell_sims_masked(X, C_np, top=1), axis=1)
-        codes = _pq_encode_np(X - C_np[cell] if res else X, cb)
-        return pd.DataFrame(
-            {"cell": cell.astype(np.int32),
-             "pqb": [r.astype(np.uint8).tobytes() for r in codes]})
-
-    return (corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        _enc(F.col(vec_col)).alias("_cp"),
-        *[F.col(c) for c in meta_cols])
-        .select("neighbor_id",
-                F.col("_cp.cell").alias("cell"),
-                F.col("_cp.pqb").alias("pqb"),
-                *[F.col(c) for c in meta_cols]))
-
-
-def write_pq_index(corpus: DataFrame, path: str,
-                   vec_col: str = "embedding", id_col: str = "vec_id",
-                   cells: int = IVF_CELLS,
-                   centroids: tuple | None = None,
-                   codebooks: tuple | None = None,
-                   meta_cols: tuple[str, ...] = (),
-                   residual: bool = False) -> None:
-    """Materialize the IVFPQ index AT REST: PQ codes (``PQ_M`` bytes
-    per vector — 8x under the int8 store, 32x under float32) written
-    ``partitionBy(cell)``, so :func:`ann_ivf_pq_topk` gets BOTH wins
-    as plan-real facts: probing opens only probed directories
-    (partition pruning via the shared one-glob resolution) and the
-    bytes under them are the m-byte codes. Float vectors do NOT live
-    in this index — the rescore reads them from the primary table for
-    candidates only. Both geometries travel with the store
-    (``_centroids`` + ``_meta`` for the cells, ``_codebooks`` for the
-    quantizer); a probe or decode under foreign geometry is the same
-    silent-wrong-neighbors failure the int8 family's stamps exist to
-    prevent, so the readers load the stored matrices by default and
-    explicitly-passed ones are md5-checked. ``meta_cols``: attribute
-    columns carried into the store for
-    ``ann_ivf_pq_topk(filter_pred=...)`` — the
-    :func:`write_ivf_int8_index` contract (appends must pass the same
-    list).
-
-    ``residual``: encode x - centroid(cell) instead of x — FAISS's
-    IVFADC form (:func:`pq_train_codebooks` ``residual_centroids``),
-    which buys recall at the SAME m bytes/vector on clustered corpora
-    (measured in SCALE.md; near-orthogonal random vectors barely
-    cluster, so the gate corpus shows the honest small end of the
-    gain). The flag is stamped into ``_codebooks`` and the probed
-    scan branches on it automatically — with the per-(query, cell)
-    centroid dot added back at scoring time, ADC cost is unchanged
-    (m lookup adds + one broadcast table lookup per pair).
-    ``codebooks=None`` trains on residuals when ``residual`` is set."""
-    spark = corpus.sparkSession
-    if centroids is None:
-        centroids = ivf_train_centroids(corpus, cells, vec_col=vec_col,
-                                        id_col=id_col)
-    if codebooks is None:
-        codebooks = pq_train_codebooks(
-            corpus, vec_col=vec_col, id_col=id_col,
-            residual_centroids=centroids if residual else None)
-    out = _pq_index_rows(corpus, centroids, codebooks, residual,
-                         vec_col, id_col, meta_cols)
-    (out.repartition(len(centroids), "cell")
-        .write.mode("overwrite").partitionBy("cell").parquet(path))
-    _write_centroids(spark, path, centroids)
-    _write_codebooks(spark, path, codebooks, residual=residual)
-
-
-def ann_ivf_pq_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
-                    nprobe: int = IVF_NPROBE, rescore: int = 3,
-                    cells: int = IVF_CELLS,
-                    centroids: tuple | None = None,
-                    codebooks: tuple | None = None,
-                    vec_col: str = "embedding", id_col: str = "vec_id",
-                    max_queries: int = ANN_INT8_MAX_QUERIES,
-                    index_path: str | None = None,
-                    filter_ids=None,
-                    filter_pred: Column | None = None,
-                    residual: bool | None = None) -> DataFrame:
-    """IVFPQ — the composed FAISS-style 100 TB ANN path with PQ codes
-    as the scan term: a corpus vector is scored for a query only if
-    its (single-assign) cell is among the query's ``nprobe`` probed
-    cells, scoring is the ADC left fold of :func:`ann_pq_topk` (m
-    lookup adds per surviving pair), and floats are touched only to
-    rescore ``k * rescore`` candidates per query. With ``index_path``
-    (a :func:`write_pq_index` store) both wins are plan-real: the
-    probed cells' directories are resolved with ONE glob
-    (:func:`_probed_cell_dirs` — the int8 family's discovery) and the
-    scanned bytes are the m-byte codes, so a full pass over a
-    100-billion-vector corpus reads ~nprobe/cells x 0.8 TB instead of
-    nprobe/cells x 6.4 TB (int8) or 25.6 TB (float32). Recall is the
-    product of the two approximations and is bought back by ``nprobe``
-    and ``rescore`` (both dials measured in tests/test_recall.py).
-
-    Cross-engine determinism: the family contract — probe sets from
-    the stable argsort, codes from the sequential-fold L2 argmin, ADC
-    as the j-ordered left fold, ties on neighbor_id, sequential-fold
-    cos_q6 rescore. ``centroids``/``codebooks`` default to the STORED
-    matrices when ``index_path`` is given (explicit ones are
-    md5-checked against the stamps) and to corpus training otherwise.
-
-    ``filter_ids`` / ``filter_pred``: attribute-filtered top-k, the
-    :func:`ann_ivf_int8_topk` contract verbatim — the allow-set rides
-    the ADC broadcast and masks rows BEFORE scoring/top-R; the
-    predicate form needs the attribute stored in the index
-    (``write_pq_index(meta_cols=...)``) and pushes into the parquet
-    reader of the probed partitions.
-
-    ``residual``: score RESIDUAL-encoded codes (IVFADC —
-    :func:`write_pq_index` ``residual=True``): approx(q, x) =
-    dot(q, centroid(cell)) + Σ_j LUT[j, code_j] over the residual
-    codebooks, with the per-(query, cell) centroid dots precomputed
-    driver-side (nq x cells doubles, riding the broadcast — zero
-    extra shuffle) in the family's sequential-fold order so the
-    DuckDB oracle mirrors bitwise. With ``index_path`` the STORED
-    flag decides (None = auto; an explicit conflicting value raises
-    — decoding residual codes as raw mis-scores every pair);
-    in-memory defaults to raw.
-    """
-    qrows = (queries.select(F.col(id_col), F.col(vec_col))
-             .limit(max_queries + 1).collect())
-    if len(qrows) > max_queries:
-        raise ValueError(
-            f"query set exceeds max_queries={max_queries}: the "
-            f"broadcast ADC path is for bounded query batches.")
-    spark = corpus.sparkSession
-    if not qrows:
-        return spark.createDataFrame(
-            [], "query_id long, neighbor_id long, sim_q6 long")
-    if index_path is not None:
-        stored_c = read_ivf_centroids(spark, index_path)
-        if centroids is not None and \
-                centroid_md5(centroids) != centroid_md5(stored_c):
-            raise ValueError(
-                f"ann_ivf_pq_topk: centroids do not match the geometry "
-                f"the index at {index_path} was written with — probing "
-                f"a foreign matrix silently probes the wrong cells. "
-                f"Pass centroids=None to use the stored matrix.")
-        centroids = stored_c
-        stored_b = read_pq_codebooks(spark, index_path)
-        if codebooks is not None and \
-                codebook_md5(codebooks) != codebook_md5(stored_b):
-            raise ValueError(
-                f"ann_ivf_pq_topk: codebooks do not match the ones the "
-                f"index at {index_path} was encoded with — decoding "
-                f"under a foreign quantizer silently mis-scores every "
-                f"candidate. Pass codebooks=None to use the stored "
-                f"codebooks.")
-        codebooks = stored_b
-        stored_res = read_pq_residual(spark, index_path)
-        if residual is not None and bool(residual) != stored_res:
-            raise ValueError(
-                f"ann_ivf_pq_topk: residual={residual} conflicts with "
-                f"the encoding stamped into the index at {index_path} "
-                f"(residual={stored_res}) — decoding under the wrong "
-                f"form silently mis-scores every candidate. Pass "
-                f"residual=None to use the stored flag.")
-        residual = stored_res
-    else:
-        residual = bool(residual)
-        if centroids is None:
-            centroids = ivf_train_centroids(corpus, cells,
-                                            vec_col=vec_col,
-                                            id_col=id_col)
-        if codebooks is None:
-            codebooks = pq_train_codebooks(
-                corpus, vec_col=vec_col, id_col=id_col,
-                residual_centroids=centroids if residual else None)
-    n_cells = len(centroids)
-    q_ids = np.array([r[0] for r in qrows], dtype=np.int64)
-    Qf = np.array([r[1] for r in qrows], dtype=np.float64)
-    C = np.array(centroids, dtype=np.float64)
-    probe_rows = _probe_cells_np(Qf, C, min(nprobe, n_cells))
-    allowed = np.zeros((n_cells, q_ids.shape[0]), dtype=bool)
-    for qi, row in enumerate(probe_rows):
-        allowed[row, qi] = True
-    lut = _pq_lut_np(Qf, codebooks)
-    sel = _resolve_filter_ids(filter_ids, id_col)
-    qc_dot = C_res = None
-    if residual:
-        # per-(query, cell) centroid dots, sequential-fold order (the
-        # _pq_lut_np convention — a BLAS GEMM here would diverge from
-        # the oracle's list_reduce in the last ulps); nq x cells
-        # doubles ride the broadcast, zero extra shuffle or join
-        qc_dot = np.cumsum(Qf[:, None, :] * C[None, :, :],
-                           axis=2)[:, :, -1]
-        C_res = C
-    payload = (q_ids, lut, codebooks, allowed, sel, qc_dot, C_res)
-    bc = spark.sparkContext.broadcast(payload)
-    r_cut = k * rescore
-    scan = _ivf_pq_scan_kernel(bc, r_cut)
-    if index_path is not None:
-        probed = sorted({int(c) for row in probe_rows for c in row})
-        paths = _probed_cell_dirs(spark, index_path, probed)
-        if not paths:
-            return spark.createDataFrame(
-                [], "query_id long, neighbor_id long, sim_q6 long")
-        if filter_pred is not None:
-            # metadata-predicate form (write_pq_index meta_cols):
-            # pushed into the probed partitions' parquet reader —
-            # schema inferred because the predicate's columns are
-            # store-specific (the ann_ivf_int8_topk convention)
-            qc = (spark.read.option("basePath", index_path)
-                  .parquet(*paths)
-                  .where(F.col("cell").isin(probed))
-                  .where(filter_pred)
-                  .select("neighbor_id", "cell", "pqb"))
-        else:
-            qc = (spark.read.option("basePath", index_path)
-                  .schema("neighbor_id long, pqb binary, cell int")
-                  .parquet(*paths)
-                  .where(F.col("cell").isin(probed))
-                  .select("neighbor_id", "cell", "pqb"))
-        tomb = read_ann_tombstones(spark, index_path)
-        if tomb is not None:
-            # tombstoned ids invisible to serving (the int8 twin's
-            # contract — see ann_ivf_int8_topk)
-            qc = qc.join(F.broadcast(tomb.select("neighbor_id")),
-                         "neighbor_id", "left_anti")
-    else:
-        src = corpus if filter_pred is None else corpus.where(filter_pred)
-        qc = src.select(F.col(id_col).alias("neighbor_id"),
-                        ivf_cell(F.col(vec_col), n_cells,
-                                 centroids=centroids).alias("cell"),
-                        F.col(vec_col).alias("c_vec"))
-    part_top = qc.mapInPandas(
-        scan, schema="query_id long, neighbor_id long, approx double")
-    return _int8_cut_and_rescore(part_top, corpus, queries, k, r_cut,
-                                 vec_col, id_col)
-
-
-def _ivf_pq_scan_kernel(bc, r_cut: int):
-    """Arrow scan kernel of :func:`ann_ivf_pq_topk`: decode (at-rest
-    ``pqb`` binary — one frombuffer per batch) or encode (in-memory
-    float rows) the PQ codes, fold the ADC score left-to-right over
-    subspaces, mask (cell not probed by query) and self-match pairs to
-    -inf, emit per-partition top ``r_cut`` per query under the total
-    order — :func:`_pq_scan_kernel` with the IVF probe mask of
-    :func:`_int8_scan_kernel`."""
-
-    def scan(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        payload = bc.value
-        q_ids, lut, CB, allowed = payload[:4]
-        sel_b = payload[4] if len(payload) > 4 else None
-        qc_b = payload[5] if len(payload) > 5 else None
-        Cr_b = payload[6] if len(payload) > 6 else None
-        m = len(CB)
-        bq: list[np.ndarray] = []
-        bn: list[np.ndarray] = []
-        bs: list[np.ndarray] = []
-        for pdf in batches:
-            if sel_b is not None and len(pdf):
-                # attribute-filter allow-set, applied BEFORE decode /
-                # ADC / top-R (the _int8_scan_kernel contract)
-                pdf = pdf[np.isin(
-                    pdf["neighbor_id"].to_numpy(dtype=np.int64), sel_b)]
-            if not len(pdf):
-                continue
-            nid = pdf["neighbor_id"].to_numpy(dtype=np.int64)
-            cell = pdf["cell"].to_numpy(dtype=np.int64)
-            if "pqb" in pdf.columns:
-                if pdf["pqb"].isna().any():
-                    raise ValueError(
-                        "PQ index store has NULL pqb rows: the packed "
-                        "code column is NOT NULL by construction "
-                        "(write_pq_index) — the store is corrupt or "
-                        "was written by something else.")
-                buf = b"".join(pdf["pqb"])
-                if not buf:
-                    continue
-                codes = np.frombuffer(buf, dtype=np.uint8) \
-                    .reshape(len(pdf), m).astype(np.int64)
-            else:
-                X = np.stack(pdf["c_vec"].values).astype(np.float64)
-                if Cr_b is not None:
-                    # residual form, in-memory: encode x - centroid
-                    # exactly as the writer kernel does
-                    X = X - Cr_b[cell]
-                codes = _pq_encode_np(X, CB)
-            if qc_b is not None:
-                # IVFADC: the score SEED is dot(q, centroid(cell)) —
-                # the left fold then adds the m residual LUT terms in
-                # j order, mirroring the oracle's list_prepend seed
-                S = qc_b[:, cell].copy()
-            else:
-                S = np.zeros((q_ids.shape[0], nid.shape[0]),
-                             dtype=np.float64)
-            for j in range(m):
-                S += lut[:, j, codes[:, j]]
-            # IVF mask: a pair survives only when the row's cell is
-            # among the query's probes (allowed is cells x nq)
-            S[~allowed[cell].T] = -np.inf
-            S[q_ids[:, None] == nid[None, :]] = -np.inf
-            cut = min(r_cut, nid.shape[0])
-            for qi in range(q_ids.shape[0]):
-                col = S[qi]
-                order = np.lexsort((nid, -col))[:cut]
-                keep = np.isfinite(col[order])
-                order = order[keep]
-                bq.append(np.full(order.shape[0], q_ids[qi],
-                                  dtype=np.int64))
-                bn.append(nid[order])
-                bs.append(col[order])
-        if not bq:
-            return
-        yield pd.DataFrame({
-            "query_id": np.concatenate(bq),
-            "neighbor_id": np.concatenate(bn),
-            "approx": np.concatenate(bs)})
-
-    return scan
-
-
 def ann_ivf_int8_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
                       nprobe: int = IVF_NPROBE, rescore: int = 3,
                       cells: int = IVF_CELLS,
@@ -2800,12 +2198,8 @@ def ann_ivf_int8_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
                           F.col("scale").alias("c_scale"),
                           F.col("qb").alias("c_qb")))
         else:
-            # schema passed explicitly: the store's shape is fixed by
-            # write_ivf_int8_index, and inference would read a footer
-            # + merge before the first task launches
             qc = (spark.read.option("basePath", index_path)
-                  .schema("neighbor_id long, scale double, qb binary, "
-                          "cell int")
+                  .schema(_INT8_STORE_SCHEMA)
                   .parquet(*paths)
                   .where(F.col("cell").isin(probed))
                   .select(F.col("neighbor_id"),
@@ -2834,13 +2228,13 @@ def ann_ivf_int8_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
 def _probed_cell_dirs(spark, index_path: str, probed: list[int]) -> list[str]:
     """The probed cells' EXISTING ``cell=`` directories of a
     partitioned index, resolved with ONE globStatus round-trip —
-    shared by the indexed scans (:func:`ann_ivf_int8_topk`,
-    :func:`ivf_topk_indexed`). Passing the whole directory to
-    spark.read has the file index walk every ``cell=*`` subdir just to
-    discover partitions (~3 s at 1.4k dirs, paid whether or not the
-    isin prunes them), and a listStatus of the base dir costs one py4j
-    hop PER entry (measured 0.6 s at 1.4k dirs); the single glob
-    resolves only probed matches (k-means cells can be empty)."""
+    used by the indexed scan (:func:`ann_ivf_int8_topk`). Passing the
+    whole directory to spark.read has the file index walk every
+    ``cell=*`` subdir just to discover partitions (~3 s at 1.4k dirs,
+    paid whether or not the isin prunes them), and a listStatus of the
+    base dir costs one py4j hop PER entry (measured 0.6 s at 1.4k
+    dirs); the single glob resolves only probed matches (k-means cells
+    can be empty)."""
     if not probed:
         # an empty query set probes nothing (hadoop's {} glob throws)
         return []
@@ -2912,49 +2306,9 @@ def emb_cell_sample(df: DataFrame, fraction: float,
             .select(id_col, "cell"))
 
 
-def write_ivf_index(corpus: DataFrame, path: str,
-                    vec_col: str = "embedding",
-                    id_col: str = "vec_id",
-                    cells: int = IVF_CELLS,
-                    centroids: tuple | None = None,
-                    meta_cols: tuple[str, ...] = ()) -> None:
-    """Materialize the IVF index AT REST: the corpus written
-    partitionBy(cell), so probing stops being a join-side filter and
-    becomes PARTITION PRUNING — a query that probes 4 of 16 cells
-    opens 4/16 of the directories and never lists the rest
-    (plan-asserted in tests/test_maintenance.py). This is the claim
-    ivf_topk's docstring makes, made concrete.
-
-    At 100 TB: cells (or cell-prefix buckets for finer geometry) keep
-    each directory file-count bounded; re-centering (new k-means
-    snapshot) is a full rewrite, so version the index directory per
-    centroid snapshot the same way the SRP salt versions shard
-    assignments.
-
-    ``centroids=None`` trains on the corpus (:func:`ivf_train_centroids`
-    — the recall default, see :func:`ivf_topk`); whichever matrix built
-    the index is PERSISTED INTO IT (an ``_centroids`` parquet subdir —
-    the underscore prefix hides it from the data scan, like
-    ``_metadata``), so :func:`ivf_topk_indexed` probes with exactly the
-    geometry the cells were assigned under. A probe/index centroid
-    mismatch silently probes the wrong cells; storing the matrix with
-    the index makes it impossible."""
-    if centroids is None:
-        centroids = ivf_train_centroids(corpus, cells, vec_col=vec_col,
-                                        id_col=id_col)
-    out = corpus.select(F.col(id_col).alias("neighbor_id"),
-                        F.col(vec_col).alias("c_vec"),
-                        ivf_cell(F.col(vec_col), cells,
-                                 centroids=centroids).alias("cell"),
-                        *[F.col(c) for c in meta_cols])
-    (out.repartition(cells, "cell")
-        .write.mode("overwrite").partitionBy("cell").parquet(path))
-    _write_centroids(corpus.sparkSession, path, centroids)
-
-
 def _sidecar_write(spark, dir_path: str, table) -> None:
     """Write a KB-sized metadata sidecar (``_centroids``/``_meta``/
-    ``_codebooks``/``_tombstones``) as one parquet file DRIVER-SIDE
+    ``_tombstones``) as one parquet file DRIVER-SIDE
     through the Hadoop FileSystem API — zero Spark jobs (r15, guide
     §1.2: these sidecars are driver-local metadata; a Spark write of a
     1-row local relation still pays a full job's scheduling + commit
@@ -3136,7 +2490,7 @@ def write_ivf_int8_index(corpus: DataFrame, path: str,
     scan); the kernel decodes a whole batch with one frombuffer. Cell assignment is the
     family's masked-exact-rescored BLAS :func:`ivf_cell`.
 
-    Like :func:`write_ivf_index`: re-centering is a full rewrite
+    Re-centering is a full rewrite
     (version the directory per centroid snapshot), and the matrix that
     built the index is persisted into it (``_centroids``) so
     :func:`ann_ivf_int8_topk` probes with exactly the geometry the
@@ -3255,7 +2609,7 @@ def append_ivf_int8_index(batch: DataFrame, path: str,
                 f"foreign matrix land in the wrong cells and vanish "
                 f"from probed scans. Pass centroids=None to use the "
                 f"stored matrix, or version a new index directory per "
-                f"centroid snapshot (write_ivf_index convention).")
+                f"centroid snapshot (reindex_ann_store).")
     out = _int8_index_rows(batch, stored, vec_col, id_col,
                            meta_cols=meta_cols)
     # repartition on cell so each touched cell gets ONE new file per
@@ -3283,28 +2637,15 @@ def flatten_streamed_ann_index(spark, src_path: str,
     caller once the new store serves). The geometry sidecars travel:
     the stored ``_centroids`` matrix is re-stamped into the
     destination, so probed scans and future appends keep the exact
-    cell geometry the rows were assigned under — and for a streamed PQ
-    store (streaming/jobs.maintain_pq_index_stream) the ``_codebooks``
-    sidecar (with its residual flag) travels too, the store KIND
-    detected like everywhere else. Returns the row count folded.
+    cell geometry the rows were assigned under. Returns the row count
+    folded.
     Cost: one column-pruned read of the packed rows + one shuffle on
     cell — ∝ index, paid once at stream retirement."""
-    jvm = spark._jvm
-    fs = jvm.org.apache.hadoop.fs.Path(src_path).getFileSystem(
-        spark._jsc.hadoopConfiguration())
-    is_pq = fs.exists(
-        jvm.org.apache.hadoop.fs.Path(src_path + "/_codebooks"))
     cents = read_ivf_centroids(spark, src_path)
-    if is_pq:
-        schema = "neighbor_id long, pqb binary, cell int"
-        cols = ["neighbor_id", "cell", "pqb"]
-    else:
-        schema = "neighbor_id long, scale double, qb binary, cell int"
-        cols = ["neighbor_id", "cell", "scale", "qb"]
     rows = (spark.read.option("basePath", src_path)
-            .schema(schema)
+            .schema(_INT8_STORE_SCHEMA)
             .parquet(src_path)
-            .select(*cols))
+            .select("neighbor_id", "cell", "scale", "qb"))
     tomb = read_ann_tombstones(spark, src_path)
     if tomb is not None:
         # RETIRE the purge tombstones: the flatten is the store's one
@@ -3319,10 +2660,6 @@ def flatten_streamed_ann_index(spark, src_path: str,
          .write.mode("overwrite").partitionBy("cell").parquet(dst_path))
     rows.unpersist()
     _write_centroids(spark, dst_path, cents)
-    if is_pq:
-        _write_codebooks(spark, dst_path,
-                         read_pq_codebooks(spark, src_path),
-                         residual=read_pq_residual(spark, src_path))
     return n
 
 
@@ -3353,9 +2690,8 @@ def ann_index_report(spark, index_path: str) -> dict:
     purging, reindexing) a store, computed from ONE recursive listing
     plus the 1-row sidecar reads; no data file is opened:
 
-    - ``kind`` ("int8" | "pq"), ``layout`` ("flat" | "streamed"),
-      ``residual`` (PQ stores), ``cells``/``dims``/``centroid_md5``
-      (the ``_meta`` stamp);
+    - ``layout`` ("flat" | "streamed"), ``cells``/``dims``/
+      ``centroid_md5`` (the ``_meta`` stamp);
     - ``n_cells`` (directories present — k-means cells can be empty),
       ``n_batches`` (streamed layout), ``data_bytes``, ``n_files``;
     - fragmentation: ``max_files_per_cell`` and
@@ -3372,8 +2708,6 @@ def ann_index_report(spark, index_path: str) -> dict:
     fs = base.getFileSystem(spark._jsc.hadoopConfiguration())
     if not fs.exists(base):
         raise ValueError(f"no ANN index at {index_path}")
-    is_pq = fs.exists(
-        jvm.org.apache.hadoop.fs.Path(index_path + "/_codebooks"))
     layout = ann_index_partition_cols(spark, index_path)
     meta = read_ivf_index_meta(spark, index_path)
     cells_seen: set[int] = set()
@@ -3406,10 +2740,7 @@ def ann_index_report(spark, index_path: str) -> dict:
     tomb = read_ann_tombstones(spark, index_path)
     max_fpc = max(files_per_cell.values()) if files_per_cell else 0
     return {
-        "kind": "pq" if is_pq else "int8",
         "layout": "streamed" if layout[0] == "batch" else "flat",
-        "residual": (read_pq_residual(spark, index_path)
-                     if is_pq else False),
         "cells": None if meta is None else meta["cells"],
         "dims": None if meta is None else meta["dims"],
         "centroid_md5": None if meta is None else meta["centroid_md5"],
@@ -3428,32 +2759,22 @@ def ann_topk(corpus: DataFrame, queries: DataFrame, index_path: str,
              vec_col: str = "embedding", id_col: str = "vec_id",
              filter_ids=None,
              filter_pred: Column | None = None) -> DataFrame:
-    """Serve top-k from ANY at-rest ANN store — the one entry point a
-    user needs once an index exists: the store KIND is auto-detected
-    from its sidecars (``_codebooks`` present → PQ store, scored by
-    :func:`ann_ivf_pq_topk` with the stamped raw/residual form;
-    otherwise the int8 store of :func:`ann_ivf_int8_topk`), the
-    geometry always comes from the stamps, and the attribute filters
-    pass through unchanged. ``corpus`` supplies the float vectors for
-    the exact rescore (candidate rows only) and the query vectors are
-    taken from ``queries`` — the same contract as the underlying
-    scans. Output: (query_id, neighbor_id, sim_q6)."""
+    """Serve top-k from an at-rest ANN store — the one entry point a
+    user needs once an index exists: the int8 store of
+    :func:`write_ivf_int8_index` (flat or streamed), scored by
+    :func:`ann_ivf_int8_topk` with the geometry always taken from the
+    stamps; the attribute filters pass through unchanged. ``corpus``
+    supplies the float vectors for the exact rescore (candidate rows
+    only) and the query vectors are taken from ``queries`` — the same
+    contract as the underlying scan. Output: (query_id, neighbor_id,
+    sim_q6)."""
     spark = corpus.sparkSession
-    jvm = spark._jvm
-    base = jvm.org.apache.hadoop.fs.Path(index_path)
+    base = spark._jvm.org.apache.hadoop.fs.Path(index_path)
     fs = base.getFileSystem(spark._jsc.hadoopConfiguration())
     if not fs.exists(base):
         raise ValueError(
             f"ann_topk: no index at {index_path} — build one first "
-            f"(write_ivf_int8_index / write_pq_index).")
-    is_pq = fs.exists(
-        jvm.org.apache.hadoop.fs.Path(index_path + "/_codebooks"))
-    if is_pq:
-        return ann_ivf_pq_topk(corpus, queries, k=k, nprobe=nprobe,
-                               rescore=rescore, vec_col=vec_col,
-                               id_col=id_col, index_path=index_path,
-                               filter_ids=filter_ids,
-                               filter_pred=filter_pred)
+            f"(write_ivf_int8_index).")
     return ann_ivf_int8_topk(corpus, queries, k=k, nprobe=nprobe,
                              rescore=rescore, vec_col=vec_col,
                              id_col=id_col, index_path=index_path,
@@ -3463,17 +2784,16 @@ def ann_topk(corpus: DataFrame, queries: DataFrame, index_path: str,
 
 def reindex_ann_store(spark, corpus: DataFrame, index_path: str,
                       centroids: tuple | None = None,
-                      codebooks: tuple | None = None,
                       cells: int = IVF_CELLS,
                       vec_col: str = "embedding",
                       id_col: str = "vec_id",
                       meta_cols: tuple[str, ...] = ()) -> int:
     """Geometry migration of an at-rest ANN index (VERDICT r14
     Missing #4): rebuild the store at ``index_path`` from ``corpus``
-    under FRESH centroids (and, for a PQ store, fresh codebooks) with
-    an atomic swap — the operation the ``_meta`` stamps point at when
-    the corpus drifts ("version a new index directory per centroid
-    snapshot") but which was previously a manual write + path juggle.
+    under FRESH centroids with an atomic swap — the operation the
+    ``_meta`` stamps point at when the corpus drifts ("version a new
+    index directory per centroid snapshot") but which was previously a
+    manual write + path juggle.
 
     Why it exists: the stamps make foreign-geometry access raise
     (correct — silent wrong cells is the failure mode), so adopting a
@@ -3482,9 +2802,8 @@ def reindex_ann_store(spark, corpus: DataFrame, index_path: str,
     in SCALE.md). The swap keeps serving states unambiguous:
 
     1. the new store is built in a ``<path>.reindex`` SIBLING
-       (:func:`write_ivf_int8_index` / :func:`write_pq_index` — the
-       store kind is auto-detected from the ``_codebooks`` sidecar and
-       preserved), readers keep serving the old store throughout;
+       (:func:`write_ivf_int8_index`), readers keep serving the old
+       store throughout;
     2. the old store is renamed to ``<path>.old``, the sibling renamed
        into place (two FS renames — the narrow window where readers
        must retry, the standard swap contract), ``.old`` deleted.
@@ -3499,8 +2818,12 @@ def reindex_ann_store(spark, corpus: DataFrame, index_path: str,
     (pytest-pinned in tests/test_maintenance.py) — exactly the
     fail-fast the migration exists to serve. ``centroids=None``
     re-trains on ``corpus`` (:func:`ivf_train_centroids`), the drift
-    remedy; PQ codebooks likewise via :func:`pq_train_codebooks`.
-    Returns the number of rows in the new store.
+    remedy. Returns the number of rows in the new store.
+
+    The rebuild is always an int8 store, whatever rows sit at
+    ``index_path``: a legacy store in a retired row format (one
+    without int8 ``qb`` codes, which serving refuses) migrates by
+    reindexing it from its corpus.
 
     Cost: one full corpus pass (quantize + assign + write) — a
     rebuild is inherently ∝ corpus, which is WHY it is an explicit
@@ -3511,7 +2834,7 @@ def reindex_ann_store(spark, corpus: DataFrame, index_path: str,
     if not fs.exists(base):
         raise ValueError(
             f"reindex_ann_store: no index at {index_path} — build one "
-            f"first (write_ivf_int8_index / write_pq_index).")
+            f"first (write_ivf_int8_index).")
     staging = jvm.org.apache.hadoop.fs.Path(index_path + ".reindex")
     old = jvm.org.apache.hadoop.fs.Path(index_path + ".old")
     for p, what in ((staging, "a staging sibling"),
@@ -3530,29 +2853,12 @@ def reindex_ann_store(spark, corpus: DataFrame, index_path: str,
                 f"store owned by its stream's checkpoint: reindexing "
                 f"under it would desync replay. Retire the stream and "
                 f"fold it flat first (flatten_streamed_ann_index).")
-    is_pq = fs.exists(
-        jvm.org.apache.hadoop.fs.Path(index_path + "/_codebooks"))
     if centroids is None:
         centroids = ivf_train_centroids(corpus, cells=cells,
                                         vec_col=vec_col, id_col=id_col)
-    if is_pq:
-        # the residual flag is part of the store's identity: a reindex
-        # keeps the encoding form, retraining its codebooks under the
-        # NEW centroids (residual codebooks depend on the cell
-        # geometry, so they must re-train with it)
-        res = read_pq_residual(spark, index_path)
-        if codebooks is None:
-            codebooks = pq_train_codebooks(
-                corpus, vec_col=vec_col, id_col=id_col,
-                residual_centroids=centroids if res else None)
-        write_pq_index(corpus, index_path + ".reindex",
-                       vec_col=vec_col, id_col=id_col,
-                       centroids=centroids, codebooks=codebooks,
-                       meta_cols=meta_cols, residual=res)
-    else:
-        write_ivf_int8_index(corpus, index_path + ".reindex",
-                             vec_col=vec_col, id_col=id_col,
-                             centroids=centroids, meta_cols=meta_cols)
+    write_ivf_int8_index(corpus, index_path + ".reindex",
+                         vec_col=vec_col, id_col=id_col,
+                         centroids=centroids, meta_cols=meta_cols)
     n = spark.read.parquet(index_path + ".reindex") \
         .select("neighbor_id").count()
     if not fs.rename(base, old):
@@ -3588,7 +2894,7 @@ def _write_ann_tombstones(spark, index_path: str, keys) -> None:
     """Merge a purge's key set into the ``_tombstones`` sidecar
     (union + distinct with any prior set; materialized BEFORE the
     overwrite replaces the files its lineage reads — the
-    _compact_cell_store pattern)."""
+    compact_ivf_int8_index pattern)."""
     import pyarrow as pa
 
     merged = {int(k) for k in keys}
@@ -3764,27 +3070,6 @@ def compact_ivf_int8_index(spark, path: str,
     partitioned index layout: the generic form rewrites the WHOLE
     directory (and would destroy the partition structure the probed
     scan's pruning depends on)."""
-    return _compact_cell_store(
-        spark, path, "neighbor_id long, scale double, qb binary, cell int",
-        max_files_per_cell)
-
-
-def compact_pq_index(spark, path: str,
-                     max_files_per_cell: int = 4) -> int:
-    """:func:`compact_ivf_int8_index` for the PQ store layout
-    (:func:`write_pq_index` / :func:`append_pq_index` — same cell
-    partitioning, m-byte ``pqb`` codes instead of int8 rows): cells
-    fragmented past ``max_files_per_cell`` are rewritten as one file,
-    under-threshold cells byte-identical, sidecars untouched."""
-    return _compact_cell_store(
-        spark, path, "neighbor_id long, pqb binary, cell int",
-        max_files_per_cell)
-
-
-def _compact_cell_store(spark, path: str, schema: str,
-                        max_files_per_cell: int) -> int:
-    """Shared per-cell compaction core of the at-rest index family
-    (int8 and PQ layouts differ only in their row schema)."""
     from ..sources.readers import overwrite_partitions_dynamic
 
     jvm = spark._jvm
@@ -3812,7 +3097,7 @@ def _compact_cell_store(spark, path: str, schema: str,
         return 0
     dirs = [f"{path}/cell={c}" for c in sorted(frag)]
     df = (spark.read.option("basePath", path)
-          .schema(schema)
+          .schema(_INT8_STORE_SCHEMA)
           .parquet(*dirs)
           .where(F.col("cell").isin(frag)))
     # force the read to finish before the overwrite replaces the files
@@ -3825,124 +3110,12 @@ def _compact_cell_store(spark, path: str, schema: str,
     return len(frag)
 
 
-def append_pq_index(batch: DataFrame, path: str,
-                    vec_col: str = "embedding",
-                    id_col: str = "vec_id",
-                    meta_cols: tuple[str, ...] = ()) -> int:
-    """Grow a :func:`write_pq_index` store WITHOUT the O(index)
-    rebuild — :func:`append_ivf_int8_index`'s contract for the PQ
-    layout: the batch is cell-assigned under the STORED ``_centroids``
-    and encoded under the STORED ``_codebooks`` (both geometries are
-    non-negotiable — foreign matrices put rows in wrong cells or
-    mis-score every candidate, and there is no explicit-matrix
-    parameter here on purpose: the store's stamps are the only source
-    of truth for an append), and its packed rows are appended into
-    their ``cell=`` partitions — cost ∝ batch, readers keep working
-    mid-append, one new file per touched cell. Streamed
-    ``batch=/cell=`` layouts refuse (same reader-mixing hazard as the
-    int8 append). Fold small files back with :func:`compact_pq_index`.
-    Returns the number of rows appended."""
-    spark = batch.sparkSession
-    jvm = spark._jvm
-    base = jvm.org.apache.hadoop.fs.Path(path)
-    fs = base.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(base):
-        raise ValueError(
-            f"append_pq_index: no index at {path} — a store without "
-            f"_centroids/_codebooks is not a PQ index. Build one "
-            f"first (write_pq_index).")
-    for st in fs.listStatus(base):
-        if (st.isDirectory()
-                and st.getPath().getName().startswith("batch=")):
-            raise ValueError(
-                f"index at {path} is a STREAMED batch=/cell= store: "
-                f"batch appends into it would mix partition layouts "
-                f"under one root and break the reader.")
-    centroids = read_ivf_centroids(spark, path)
-    codebooks = read_pq_codebooks(spark, path)
-    # the stored residual flag decides the encoding — appended rows
-    # must quantize exactly what the base rows did
-    residual = read_pq_residual(spark, path)
-    out = _pq_index_rows(batch, centroids, codebooks, residual,
-                         vec_col, id_col, meta_cols)
-    out = out.repartition(F.col("cell")).persist()
-    n = out.count()
-    out.write.mode("append").partitionBy("cell").parquet(path)
-    out.unpersist()
-    return n
-
-
 def read_ivf_centroids(spark, index_path: str) -> tuple:
-    """The centroid matrix a :func:`write_ivf_index` table was built
-    with, from its ``_centroids`` subdir (driver-side single-file
+    """The centroid matrix a :func:`write_ivf_int8_index` store was
+    built with, from its ``_centroids`` subdir (driver-side single-file
     read — zero Spark jobs, r15)."""
     t = _sidecar_read(spark, index_path + "/_centroids")
     if t is None:
         raise FileNotFoundError(index_path + "/_centroids")
     recs = sorted(t.to_pylist(), key=lambda r: r["cell"])
     return tuple(tuple(r["w"]) for r in recs)
-
-
-def ivf_topk_indexed(spark, index_path: str, queries: DataFrame,
-                     k: int = 10, nprobe: int = IVF_NPROBE,
-                     cells: int = IVF_CELLS, dims: int = DEFAULT_DIMS,
-                     vec_col: str = "embedding",
-                     id_col: str = "vec_id",
-                     centroids: tuple | None = None,
-                     filter_ids=None,
-                     filter_pred: Column | None = None) -> DataFrame:
-    """ivf_topk against a :func:`write_ivf_index` table: the probed
-    cell set is collected (tiny — |queries| x nprobe ints), pushed as a
-    literal IN-filter on the partition column so the scan prunes at
-    PLANNING time, then rescored exactly as ivf_topk. Equality with the
-    in-memory path is pytest-asserted. ``centroids=None`` loads the
-    matrix the index was WRITTEN with (:func:`read_ivf_centroids`) —
-    probing with any other geometry would silently probe the wrong
-    cells; pass ``centroids`` explicitly only to avoid the one-time
-    metadata read when the snapshot is already in hand.
-    ``filter_ids``/``filter_pred``: the family's attribute-filter
-    contract (:func:`ann_ivf_int8_topk`) on the EXACT path —
-    eligibility restricts the candidate side before scoring/top-k
-    (the predicate form needs ``write_ivf_index(meta_cols=...)``)."""
-    if centroids is None:
-        centroids = read_ivf_centroids(spark, index_path)
-    cells = len(centroids)  # geometry over argument, as above
-    qx = (queries.select(F.col(id_col).alias("query_id"),
-                         F.col(vec_col).alias("q_vec"),
-                         ivf_probe_cells(F.col(vec_col), nprobe,
-                                         cells, dims,
-                                         centroids=centroids).alias("cells"))
-          .select("query_id", "q_vec", F.explode("cells").alias("cell")))
-    probed = sorted({r.cell for r in qx.select("cell").distinct().collect()})
-    # probed dirs resolved by ONE globStatus and handed to the reader
-    # explicitly (the int8 form's discovery fix — the file index would
-    # otherwise walk every cell=* dir before pruning); the isin stays
-    # as the plan-level PartitionFilter guard (plan-asserted)
-    dirs = _probed_cell_dirs(spark, index_path, probed)
-    if not dirs:
-        return spark.createDataFrame(
-            [], "query_id long, neighbor_id long, sim_q6 long")
-    c = (spark.read.option("basePath", index_path).parquet(*dirs)
-         .where(F.col("cell").isin(probed)))
-    if filter_pred is not None:
-        # attribute predicate over stored meta_cols — pushed into the
-        # probed partitions' parquet reader, before scoring/top-k
-        c = c.where(filter_pred)
-    sel = _resolve_filter_ids(filter_ids, id_col)
-    if sel is not None:
-        allow = spark.createDataFrame(
-            [(int(i),) for i in sel], "neighbor_id long")
-        c = c.join(F.broadcast(allow), "neighbor_id", "left_semi")
-    scored = (
-        c.join(F.broadcast(qx), "cell")
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id",
-                _cos_q6_udf()(F.col("q_vec"), F.col("c_vec")).alias("sim_q6"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("sim_q6"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "sim_q6")
-    )

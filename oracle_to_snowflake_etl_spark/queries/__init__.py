@@ -107,11 +107,10 @@ PRIORITY = [
     # dedup_containment_scale, the round-6 top-item scale-safe path,
     # so the hot-key-window fix sits under the driver's hard signal
     # alongside the window-path originals the verdict pinned)
-    # (round-15 rotation, VERDICT r14 ask #7: the three round-15
-    # registrations — ann_ivf_int8_filtered + ann_ivf_pq_filtered
-    # (attribute-filtered ANN, Missing #1, both filter mechanisms)
-    # and mv_hll_refresh (HLL distinct-count MV, Missing #3) — plus
-    # three long-dormant rotate-backs the verdict named
+    # (round-15 rotation, VERDICT r14 ask #7: the round-15
+    # registrations — ann_ivf_int8_filtered (attribute-filtered ANN,
+    # Missing #1) and mv_hll_refresh (HLL distinct-count MV, Missing
+    # #3) — plus three long-dormant rotate-backs the verdict named
     # (recursive_key_depth, pivot_priority_status, hist_order_totals).
     # Rotated to full-local: dedup_containment_scale +
     # dedup_ngram_jaccard (both stable since r6/r2; containment keeps
@@ -147,19 +146,13 @@ PRIORITY = [
     # (round-13: ann_ivf_int8_append — the grown base+appended store
     # must be indistinguishable from indexed-at-once, VERDICT r12
     # Missing #1)
-    # (round-14 late rotation: ann_ivf_pq_topk — the new at-rest IVFPQ
-    # composition — takes the driver slot of ann_int8_topk (the
-    # floor-bound 2k-corpus toy the r13 verdict itself flagged;
-    # long-stable, full-local + recall-pytested) and
-    # mv_join_dim_refresh takes ann_srp_neardup's (stable since r8,
-    # recall-pytested; SRP keeps ann_srp_incremental full-local).)
-    # (round-15 late addition: ann_ivf_pq_residual — the IVFADC
-    # residual-encoding registration — takes
-    # funnel_view_click_purchase's slot (r13 rotate-back, cycling out
-    # again; the funnel oracle stays full-local + pytest-covered).)
-    "ann_ivf_pq_topk", "ann_ivf_pq_residual", "ann_ivf_int8_topk",
+    # (round-14: mv_join_dim_refresh takes ann_srp_neardup's slot —
+    # stable since r8, recall-pytested; SRP keeps ann_srp_incremental
+    # full-local.) ann_int8_topk and ann_ivf_topk hold the two
+    # in-memory ANN operators' slots beside the at-rest int8 store.
+    "ann_int8_topk", "ann_ivf_topk", "ann_ivf_int8_topk",
     "ann_ivf_int8_append", "ann_ivf_int8_filtered",
-    "ann_ivf_pq_filtered", "mv_join_dim_refresh",
+    "mv_join_dim_refresh",
     # Text analysis (text_quality_filter stays full-local-checked; its
     # slot carries the round-4 MV-maintenance family instead)
     # (text_lang_id rotated to full-local in round 11 — floor-class
@@ -218,17 +211,18 @@ PRIORITY = [
     # w_running_spend to full-local — long-stable running-sum window,
     # its slot carries stream_ann_index_maintain, the round-13
     # streaming serving-index fold)
-    # (round-14: ev_ohlc_hourly rotates BACK in per ask #7)
-    "ev_sessions", "ev_ohlc_hourly",
+    # (round-14: ev_ohlc_hourly rotates BACK in per ask #7;
+    # funnel_view_click_purchase holds the funnel operator's slot)
+    "ev_sessions", "ev_ohlc_hourly", "funnel_view_click_purchase",
     "stream_ann_index_maintain",
-    # round-16 rotation (VERDICT r15 ask #8): the four r15
-    # registrations (filtered ANN x2, IVFADC residual, HLL MV) keep
-    # their slots one more round; the r15 rotate-backs
-    # (recursive_key_depth, pivot_priority_status, hist_order_totals)
-    # cycle back to full-local after their round under the gate (the
-    # r13->r15 precedent), and three of the LONGEST-dormant full-local
-    # entries rotate in: pii_redact_contacts + text_corpus_quantiles
-    # (both out since round 5) and dedup_exact (out since round 6).
+    # round-16 rotation (VERDICT r15 ask #8): the r15 registrations
+    # (filtered ANN, HLL MV) keep their slots one more round; the r15
+    # rotate-backs (recursive_key_depth, pivot_priority_status,
+    # hist_order_totals) cycle back to full-local after their round
+    # under the gate (the r13->r15 precedent), and three of the
+    # LONGEST-dormant full-local entries rotate in: pii_redact_contacts
+    # + text_corpus_quantiles (both out since round 5) and dedup_exact
+    # (out since round 6).
     "pii_redact_contacts", "text_corpus_quantiles", "dedup_exact",
     # TPC-H representative (full 22-query suite keeps full-local oracle
     # coverage in registration order below)

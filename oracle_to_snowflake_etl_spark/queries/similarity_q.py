@@ -949,375 +949,6 @@ def q_ann_int8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                          k=TOP_K, rescore=3)
 
 
-from ..operators.pq_snapshot import PQ_SNAPSHOT  # noqa: E402
-
-
-def _duck_pq_sql() -> str:
-    """DuckDB oracle for product-quantization ADC ANN
-    (operators/similarity.ann_pq_topk): the committed codebook
-    snapshot as a literal (pq_snapshot.PQ_SNAPSHOT — the IVF_SNAPSHOT
-    convention), corpus codes assigned by the EXACT sequential-fold
-    squared-L2 with first-min ties the numpy kernel computes
-    (_pq_encode_np), the ADC score as the left fold over subspaces of
-    sequential-fold dot(q_sub, codeword) terms (_pq_lut_np + the
-    kernel's j-ordered accumulation), top k*rescore by (approx DESC,
-    neighbor ASC), exact cos_q6 rescore, top k. Every float operation
-    happens in the same order on both engines — approx is bitwise."""
-    m, k = len(PQ_SNAPSHOT), len(PQ_SNAPSHOT[0])
-    ds = len(PQ_SNAPSHOT[0][0])
-    b_lit = "[" + ", ".join(
-        "[" + ", ".join(
-            "[" + ", ".join(repr(w) for w in row) + "]"
-            for row in book) + "]"
-        for book in PQ_SNAPSHOT) + "]"
-    d2_terms = (f"list_transform(range(0, {ds}), e -> "
-                f"(CAST(embedding[j * {ds} + e + 1] AS DOUBLE)"
-                f" - B[j + 1][c + 1][e + 1])"
-                f" * (CAST(embedding[j * {ds} + e + 1] AS DOUBLE)"
-                f" - B[j + 1][c + 1][e + 1]))")
-    d2 = (f"list_reduce(list_prepend(CAST(0 AS DOUBLE), {d2_terms}), "
-          f"(pa, qa) -> pa + qa)")
-    codes = (f"list_transform("
-             f"list_transform(range(0, {m}), j -> "
-             f"list_transform(range(0, {k}), c -> {d2})), "
-             f"d2s -> list_position(d2s, list_min(d2s)) - 1)")
-    lut_term = (f"list_reduce(list_prepend(CAST(0 AS DOUBLE), "
-                f"list_transform(range(0, {ds}), e -> "
-                f"CAST(q_vec[j * {ds} + e + 1] AS DOUBLE)"
-                f" * B[j + 1][codes[j + 1] + 1][e + 1])), "
-                f"(pa, qa) -> pa + qa)")
-    approx = (f"list_reduce(list_prepend(CAST(0 AS DOUBLE), "
-              f"list_transform(range(0, {m}), j -> {lut_term})), "
-              f"(pa, qa) -> pa + qa)")
-    return f"""
-    WITH cb AS (SELECT {b_lit} AS B),
-    enc AS (
-      SELECT vec_id, embedding, {codes} AS codes
-      FROM embeddings, cb
-    ),
-    qs AS (SELECT vec_id AS query_id, embedding AS q_vec
-           FROM embeddings WHERE vec_id < {N_QUERIES}),
-    cand AS (
-      SELECT query_id, neighbor_id, q_vec, c_vec,
-             {approx} AS approx
-      FROM (SELECT vec_id AS neighbor_id, embedding AS c_vec, codes
-            FROM enc) cs, qs, cb
-      WHERE query_id != neighbor_id
-      QUALIFY row_number() OVER (
-          PARTITION BY query_id
-          ORDER BY approx DESC, neighbor_id ASC) <= {TOP_K * 3}
-    )
-    SELECT query_id, neighbor_id, {_duck_cos_q6('q_vec', 'c_vec')} AS sim_q6
-    FROM cand
-    QUALIFY row_number() OVER (
-        PARTITION BY query_id
-        ORDER BY {_duck_cos_q6('q_vec', 'c_vec')} DESC, neighbor_id ASC)
-        <= {TOP_K}
-    """
-
-
-def _duck_ivf_pq_sql(corpus_where: str = "") -> str:
-    """DuckDB oracle for the composed IVFPQ path
-    (operators/similarity.ann_ivf_pq_topk): the pinned IVF snapshot's
-    single-assign corpus cells and nprobe query probes (the
-    _duck_ivf_sql fragments), the pinned PQ codebooks' sequential-fold
-    code assignment and j-ordered ADC fold (the _duck_pq_sql
-    fragments), approx rank within probed cells, exact cos_q6 rescore
-    of the top k*rescore. ``corpus_where`` restricts the CANDIDATE
-    side only (the _duck_ivf_int8_sql convention — the filtered-ANN
-    oracle)."""
-    cs = IVF_SNAPSHOT
-    c_lit = "[" + ", ".join(
-        "[" + ", ".join(repr(w) for w in row) + "]" for row in cs) + "]"
-    dot_vc = ("list_reduce(list_prepend(CAST(0 AS DOUBLE), "
-              "list_transform(embedding, (x, i) -> "
-              "CAST(x AS DOUBLE) * C[c + 1][i])), (p, q) -> p + q)")
-    nsq_v = _duck_dot("embedding", "embedding")
-    nsq_c = ("list_reduce(list_prepend(CAST(0 AS DOUBLE), "
-             "list_transform(C[c + 1], (x, i) -> x * C[c + 1][i])), "
-             "(p, q) -> p + q)")
-    sims = (f"list_transform(range(0, {IVF_CELLS}), c -> "
-            f"{dot_vc} / sqrt({nsq_v} * {nsq_c}))")
-    m, k = len(PQ_SNAPSHOT), len(PQ_SNAPSHOT[0])
-    ds = len(PQ_SNAPSHOT[0][0])
-    b_lit = "[" + ", ".join(
-        "[" + ", ".join(
-            "[" + ", ".join(repr(w) for w in row) + "]"
-            for row in book) + "]"
-        for book in PQ_SNAPSHOT) + "]"
-    d2_terms = (f"list_transform(range(0, {ds}), e -> "
-                f"(CAST(embedding[j * {ds} + e + 1] AS DOUBLE)"
-                f" - B[j + 1][c2 + 1][e + 1])"
-                f" * (CAST(embedding[j * {ds} + e + 1] AS DOUBLE)"
-                f" - B[j + 1][c2 + 1][e + 1]))")
-    d2 = (f"list_reduce(list_prepend(CAST(0 AS DOUBLE), {d2_terms}), "
-          f"(pa, qa) -> pa + qa)")
-    codes = (f"list_transform("
-             f"list_transform(range(0, {m}), j -> "
-             f"list_transform(range(0, {k}), c2 -> {d2})), "
-             f"d2s -> list_position(d2s, list_min(d2s)) - 1)")
-    lut_term = (f"list_reduce(list_prepend(CAST(0 AS DOUBLE), "
-                f"list_transform(range(0, {ds}), e -> "
-                f"CAST(q_vec[j * {ds} + e + 1] AS DOUBLE)"
-                f" * B[j + 1][codes[j + 1] + 1][e + 1])), "
-                f"(pa, qa) -> pa + qa)")
-    approx = (f"list_reduce(list_prepend(CAST(0 AS DOUBLE), "
-              f"list_transform(range(0, {m}), j -> {lut_term})), "
-              f"(pa, qa) -> pa + qa)")
-    return f"""
-    WITH cents AS (SELECT {c_lit} AS C),
-    cb AS (SELECT {b_lit} AS B),
-    corpus AS (
-      SELECT t.vec_id AS neighbor_id, t.embedding AS c_vec, t.cell,
-             {codes.replace('embedding', 't.embedding')} AS codes
-      FROM (SELECT vec_id, embedding,
-                   list_position(sims, list_max(sims)) - 1 AS cell
-            FROM (SELECT vec_id, embedding, {sims} AS sims
-                  FROM embeddings, cents)) t, cb
-      {corpus_where}
-    ),
-    qsims AS (
-      SELECT e.vec_id AS query_id, e.embedding AS q_vec, {sims} AS sims
-      FROM embeddings e, cents
-      WHERE e.vec_id < {N_QUERIES}
-    ),
-    qprobe AS (
-      SELECT query_id, q_vec, c AS cell
-      FROM qsims, (SELECT UNNEST(range(0, {IVF_CELLS})) AS c)
-      QUALIFY row_number() OVER (
-          PARTITION BY query_id
-          ORDER BY sims[c + 1] DESC, c ASC) <= {IVF_NPROBE}
-    ),
-    cand AS (
-      SELECT query_id, neighbor_id, q_vec, c_vec,
-             {approx} AS approx
-      FROM corpus JOIN qprobe USING (cell), cb
-      WHERE query_id != neighbor_id
-      QUALIFY row_number() OVER (
-          PARTITION BY query_id
-          ORDER BY approx DESC, neighbor_id ASC) <= {TOP_K * 3}
-    )
-    SELECT query_id, neighbor_id, {_duck_cos_q6('q_vec', 'c_vec')} AS sim_q6
-    FROM cand
-    QUALIFY row_number() OVER (
-        PARTITION BY query_id
-        ORDER BY {_duck_cos_q6('q_vec', 'c_vec')} DESC, neighbor_id ASC)
-        <= {TOP_K}
-    """
-
-
-@register("ann_ivf_pq_topk", _duck_ivf_pq_sql())
-def q_ann_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVFPQ at rest, end to end (operators/similarity.ann_ivf_pq_topk
-    over a write_pq_index store): IVF partition pruning on top of the
-    8-byte-per-vector ADC scan — the FAISS IVFPQ storage point — with
-    floats read only to rescore k*rescore candidates. Both geometries
-    are the committed snapshots (IVF_SNAPSHOT + PQ_SNAPSHOT) so the
-    oracle mirrors bitwise; the store is built once per (session,
-    corpus fingerprint) like the int8 indexed query — the repeated
-    calls measure the PRUNED SCAN, not a rebuild."""
-    from ..operators.similarity import ann_ivf_pq_topk
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    path = _shared_pq_index_path(sf_dir, emb)
-    return ann_ivf_pq_topk(emb, emb.where(F.col("vec_id") < N_QUERIES),
-                           k=TOP_K, rescore=3, index_path=path)
-
-
-def _shared_pq_index_path(sf_dir: str, emb: DataFrame) -> str:
-    """The shared per-(process, corpus-fingerprint) at-rest PQ store —
-    the _shared_int8_index_path convention for the 8-byte-code
-    layout."""
-    import tempfile
-
-    from ..operators.similarity import write_pq_index
-
-    key = _ivf_index_cache_key(sf_dir, "pq")
-    path = _IVF_INT8_INDEX_CACHE.get(key)
-    if path is None:
-        tmp = tempfile.mkdtemp(prefix="ivf_pq_idx_")
-        _IVF_INT8_INDEX_TMPDIRS.append(tmp)
-        path = tmp + "/index"
-        write_pq_index(emb, path, centroids=IVF_SNAPSHOT,
-                       codebooks=PQ_SNAPSHOT)
-        _IVF_INT8_INDEX_CACHE[key] = path
-    return path
-
-
-def _duck_ivf_pq_residual_sql() -> str:
-    """DuckDB oracle for RESIDUAL-encoded IVFPQ (IVFADC — Jégou 2011
-    §IV.B; operators/similarity write_pq_index(residual=True) +
-    ann_ivf_pq_topk auto-branching on the stored flag): corpus codes
-    are the sequential-fold L2 argmin over RESIDUALS
-    x - centroid(cell) against the committed residual codebooks
-    (PQ_RESIDUAL_SNAPSHOT), and approx(q, x) is the left fold SEEDED
-    with dot(q, centroid(cell)) — the kernel's qc_dot broadcast —
-    plus the m residual LUT terms in j order. Every float op happens
-    in the same order as the numpy kernel: approx is bitwise."""
-    from ..operators.pq_snapshot import PQ_RESIDUAL_SNAPSHOT
-
-    cs = IVF_SNAPSHOT
-    c_lit = "[" + ", ".join(
-        "[" + ", ".join(repr(w) for w in row) + "]" for row in cs) + "]"
-    dot_vc = ("list_reduce(list_prepend(CAST(0 AS DOUBLE), "
-              "list_transform(embedding, (x, i) -> "
-              "CAST(x AS DOUBLE) * C[c + 1][i])), (p, q) -> p + q)")
-    nsq_v = _duck_dot("embedding", "embedding")
-    nsq_c = ("list_reduce(list_prepend(CAST(0 AS DOUBLE), "
-             "list_transform(C[c + 1], (x, i) -> x * C[c + 1][i])), "
-             "(p, q) -> p + q)")
-    sims = (f"list_transform(range(0, {IVF_CELLS}), c -> "
-            f"{dot_vc} / sqrt({nsq_v} * {nsq_c}))")
-    m, kk = len(PQ_RESIDUAL_SNAPSHOT), len(PQ_RESIDUAL_SNAPSHOT[0])
-    ds = len(PQ_RESIDUAL_SNAPSHOT[0][0])
-    b_lit = "[" + ", ".join(
-        "[" + ", ".join(
-            "[" + ", ".join(repr(w) for w in row) + "]"
-            for row in book) + "]"
-        for book in PQ_RESIDUAL_SNAPSHOT) + "]"
-    # codes over the RESIDUAL array (already double — no CAST)
-    d2_terms = (f"list_transform(range(0, {ds}), e -> "
-                f"(resid[j * {ds} + e + 1] - B[j + 1][c2 + 1][e + 1])"
-                f" * (resid[j * {ds} + e + 1]"
-                f" - B[j + 1][c2 + 1][e + 1]))")
-    d2 = (f"list_reduce(list_prepend(CAST(0 AS DOUBLE), {d2_terms}), "
-          f"(pa, qa) -> pa + qa)")
-    codes = (f"list_transform("
-             f"list_transform(range(0, {m}), j -> "
-             f"list_transform(range(0, {kk}), c2 -> {d2})), "
-             f"d2s -> list_position(d2s, list_min(d2s)) - 1)")
-    lut_term = (f"list_reduce(list_prepend(CAST(0 AS DOUBLE), "
-                f"list_transform(range(0, {ds}), e -> "
-                f"CAST(q_vec[j * {ds} + e + 1] AS DOUBLE)"
-                f" * B[j + 1][codes[j + 1] + 1][e + 1])), "
-                f"(pa, qa) -> pa + qa)")
-    qc_seed = ("list_reduce(list_prepend(CAST(0 AS DOUBLE), "
-               "list_transform(q_vec, (x, i) -> "
-               "CAST(x AS DOUBLE) * C[cell + 1][i])), "
-               "(pa, qa) -> pa + qa)")
-    approx = (f"list_reduce(list_prepend({qc_seed}, "
-              f"list_transform(range(0, {m}), j -> {lut_term})), "
-              f"(pa, qa) -> pa + qa)")
-    return f"""
-    WITH cents AS (SELECT {c_lit} AS C),
-    cb AS (SELECT {b_lit} AS B),
-    corpus AS (
-      SELECT neighbor_id, c_vec, cell, {codes} AS codes
-      FROM (SELECT t.vec_id AS neighbor_id, t.embedding AS c_vec,
-                   t.cell,
-                   list_transform(t.embedding, (x, i) ->
-                       CAST(x AS DOUBLE) - C[t.cell + 1][i]) AS resid
-            FROM (SELECT vec_id, embedding,
-                         list_position(sims, list_max(sims)) - 1 AS cell
-                  FROM (SELECT vec_id, embedding, {sims} AS sims
-                        FROM embeddings, cents)) t, cents) r, cb
-    ),
-    qsims AS (
-      SELECT e.vec_id AS query_id, e.embedding AS q_vec, {sims} AS sims
-      FROM embeddings e, cents
-      WHERE e.vec_id < {N_QUERIES}
-    ),
-    qprobe AS (
-      SELECT query_id, q_vec, c AS cell
-      FROM qsims, (SELECT UNNEST(range(0, {IVF_CELLS})) AS c)
-      QUALIFY row_number() OVER (
-          PARTITION BY query_id
-          ORDER BY sims[c + 1] DESC, c ASC) <= {IVF_NPROBE}
-    ),
-    cand AS (
-      SELECT query_id, neighbor_id, q_vec, c_vec,
-             {approx} AS approx
-      FROM corpus JOIN qprobe USING (cell), cb, cents
-      WHERE query_id != neighbor_id
-      QUALIFY row_number() OVER (
-          PARTITION BY query_id
-          ORDER BY approx DESC, neighbor_id ASC) <= {TOP_K * 3}
-    )
-    SELECT query_id, neighbor_id, {_duck_cos_q6('q_vec', 'c_vec')} AS sim_q6
-    FROM cand
-    QUALIFY row_number() OVER (
-        PARTITION BY query_id
-        ORDER BY {_duck_cos_q6('q_vec', 'c_vec')} DESC, neighbor_id ASC)
-        <= {TOP_K}
-    """
-
-
-@register("ann_ivf_pq_residual", _duck_ivf_pq_residual_sql())
-def q_ann_ivf_pq_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RESIDUAL-encoded IVFPQ at rest — the actual FAISS IVFADC
-    construction (operators/similarity.write_pq_index residual=True):
-    codes quantize x - centroid(cell), bought recall at the SAME 8
-    bytes/vector on clustered corpora (measured: recall@10 0.24→0.29
-    at rescore=3 and 0.53→0.59 at rescore=10 on the planted-cluster
-    fixture, reconstruction MSE -21%; the near-orthogonal gate corpus
-    shows parity — the honest small end, numbers in SCALE.md). The
-    encoding flag is stamped into ``_codebooks`` and the probed scan
-    branches automatically; scoring seeds the ADC fold with the
-    broadcast per-(query, cell) centroid dot. Both geometries are
-    committed snapshots so the oracle mirrors bitwise."""
-    from ..operators.pq_snapshot import PQ_RESIDUAL_SNAPSHOT
-    from ..operators.similarity import ann_ivf_pq_topk, write_pq_index
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    key = _ivf_index_cache_key(sf_dir, "pqres")
-    path = _IVF_INT8_INDEX_CACHE.get(key)
-    if path is None:
-        import tempfile
-
-        tmp = tempfile.mkdtemp(prefix="ivf_pqres_idx_")
-        _IVF_INT8_INDEX_TMPDIRS.append(tmp)
-        path = tmp + "/index"
-        write_pq_index(emb, path, centroids=IVF_SNAPSHOT,
-                       codebooks=PQ_RESIDUAL_SNAPSHOT, residual=True)
-        _IVF_INT8_INDEX_CACHE[key] = path
-    return ann_ivf_pq_topk(emb, emb.where(F.col("vec_id") < N_QUERIES),
-                           k=TOP_K, rescore=3, index_path=path)
-
-
-@register("ann_ivf_pq_filtered",
-          _duck_ivf_pq_sql(
-              f"WHERE t.vec_id IN (SELECT vec_id FROM embeddings "
-              f"WHERE {_ANN_FILTER_SQL})"))
-def q_ann_ivf_pq_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Attribute-filtered IVFPQ top-k via the ALLOW-SET form (VERDICT
-    r14 Missing #1's other mechanism — predicate results computed
-    OUTSIDE the index, the FAISS IDSelector shape): the eligible id
-    set (label % 3 = 0) rides the same broadcast as the ADC lookup
-    tables and the kernel drops ineligible rows while they are still
-    8-byte codes — before any ADC fold and before the per-partition
-    top-R cut. Runs against the shared at-rest PQ store; the oracle is
-    the composed-IVFPQ SQL with the predicate on the candidate side.
-    The int8 twin (ann_ivf_int8_filtered) exercises the pushed
-    metadata-predicate form; together they cover both filtered-ANN
-    designs."""
-    from ..operators.similarity import ann_ivf_pq_topk
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    path = _shared_pq_index_path(sf_dir, emb)
-    return ann_ivf_pq_topk(emb, emb.where(F.col("vec_id") < N_QUERIES),
-                           k=TOP_K, rescore=3, index_path=path,
-                           filter_ids=emb.where(F.expr(_ANN_FILTER_SQL))
-                           .select("vec_id"))
-
-
-@register("ann_pq_topk", _duck_pq_sql())
-def q_ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Product-quantization ADC ANN (operators/similarity.ann_pq_topk
-    — the FAISS IVFPQ storage point, Jégou et al. 2011): the scan term
-    reads 8-byte PQ codes (8x under the int8 store, 32x under
-    float32), scores each (query, vector) pair as a left fold of 8
-    lookup-table terms, and float vectors are touched only to rescore
-    k*rescore candidates with the family's sequential-fold cos_q6.
-    Passes the committed codebook snapshot (operators/pq_snapshot.py)
-    so query and oracle are bitwise mirrors; the train-on-corpus
-    default is exercised by tests/test_recall.py."""
-    from ..operators.similarity import ann_pq_topk
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    return ann_pq_topk(emb, emb.where(F.col("vec_id") < N_QUERIES),
-                       k=TOP_K, rescore=3, codebooks=PQ_SNAPSHOT)
-
-
 #: ingest split for the incremental SRP query — same split as the text
 #: incremental family (queries/dedup_q._INC_SPLIT)
 from .dedup_q import _INC_SPLIT as SRP_INC_SPLIT  # noqa: E402

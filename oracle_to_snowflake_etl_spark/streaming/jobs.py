@@ -823,7 +823,7 @@ def ingest_embeddings_stream(stream: DataFrame, accepted_path: str,
     ``centroids`` is REQUIRED (an ivf_train_centroids snapshot):
     training per batch would re-assign historic rows to different
     cells across batches and break the contract above. Version the
-    matrix with the index directory, exactly like write_ivf_index.
+    matrix with the index directory, exactly like write_ivf_int8_index.
 
     Exactly-once without markers: the same ``batch=<id>``
     overwrite-subdirectory layout as the document loop — an
@@ -929,7 +929,7 @@ def ingest_embeddings_stream(stream: DataFrame, accepted_path: str,
                         f"probes with {geom}: stored probe arrays are "
                         f"meaningless across geometries — version the "
                         f"index directory per centroid snapshot "
-                        f"(write_ivf_index convention) instead of "
+                        f"(write_ivf_int8_index convention) instead of "
                         f"resuming it.")
                 # unstamped (pre-round-12) index: read unpruned
             survivors = semantic_dedup_incremental(
@@ -1074,7 +1074,7 @@ def fold_ann_index_batch(spark: SparkSession, batch: DataFrame,
             f"ANN index at {index_path} was stamped with centroid "
             f"md5 {meta['centroid_md5']} but this stream folds "
             f"with {md5}: version a new index directory per "
-            f"centroid snapshot (write_ivf_index convention) "
+            f"centroid snapshot (write_ivf_int8_index convention) "
             f"instead of resuming it.")
     rows = (_int8_index_rows(batch, centroids, vec_col, id_col,
                              meta_cols=meta_cols)
@@ -1092,111 +1092,6 @@ def fold_ann_index_batch(spark: SparkSession, batch: DataFrame,
         # the two heals on replay: the batch dir is rewritten and
         # the stamp retried)
         _write_centroids(spark, index_path, centroids)
-
-
-def maintain_pq_index_stream(stream: DataFrame, index_path: str,
-                             checkpoint: str, centroids: tuple,
-                             codebooks: tuple,
-                             residual: bool = False,
-                             vec_col: str = "embedding",
-                             id_col: str = "vec_id",
-                             meta_cols: tuple[str, ...] = ()
-                             ) -> StreamingQuery:
-    """:func:`maintain_ann_index_stream` for the PQ (8-byte-code)
-    serving layout — each micro-batch is cell-assigned and PQ-encoded
-    (raw or residual) under the PINNED geometries by exactly the
-    kernel `write_pq_index` / `append_pq_index` use
-    (operators/similarity._pq_index_rows) and dynamically overwritten
-    into its own ``batch=<id>`` subdirs — same exactly-once replay
-    contract, same tombstone durability, same probed serving through
-    `ann_ivf_pq_topk(index_path=…)` / `ann_topk` (the reader glob
-    covers both layouts; the stored `_codebooks` residual flag decides
-    scoring). BOTH geometries are required and stamped with the first
-    batch; resuming with foreign matrices raises on the md5 compares.
-    Retire with `flatten_streamed_ann_index` (kind-aware — codebooks
-    travel, tombstones retire)."""
-    if centroids is None or codebooks is None:
-        raise ValueError(
-            "maintain_pq_index_stream requires pinned centroid AND "
-            "codebook snapshots: per-batch training would scatter "
-            "cells and mis-code rows across batches.")
-    spark = stream.sparkSession
-
-    def fold(batch: DataFrame, batch_id: int) -> None:
-        fold_pq_index_batch(spark, batch, batch_id, index_path,
-                            centroids, codebooks, residual,
-                            vec_col, id_col, meta_cols=meta_cols)
-
-    return (
-        stream.writeStream
-        .foreachBatch(fold)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def fold_pq_index_batch(spark: SparkSession, batch: DataFrame,
-                        batch_id: int, index_path: str,
-                        centroids: tuple, codebooks: tuple,
-                        residual: bool = False,
-                        vec_col: str = "embedding",
-                        id_col: str = "vec_id",
-                        meta_cols: tuple[str, ...] = ()) -> None:
-    """One micro-batch fold of :func:`maintain_pq_index_stream` —
-    module-level like :func:`fold_ann_index_batch` so the crash-replay
-    contract (same batch id + rows == at-least-once replay) and the
-    tombstone anti-join are directly testable."""
-    from ..operators.similarity import (
-        _pq_index_rows,
-        _write_centroids,
-        _write_codebooks,
-        centroid_md5,
-        codebook_md5,
-        read_ann_tombstones,
-        read_ivf_index_meta,
-        read_pq_codebooks,
-        read_pq_residual,
-    )
-
-    meta = read_ivf_index_meta(spark, index_path)
-    if meta is not None:
-        if meta["centroid_md5"] != centroid_md5(centroids):
-            raise ValueError(
-                f"PQ index at {index_path} was stamped with centroid "
-                f"md5 {meta['centroid_md5']} but this stream folds "
-                f"with {centroid_md5(centroids)}: version a new index "
-                f"directory per geometry snapshot instead of resuming "
-                f"it.")
-        stored_books = read_pq_codebooks(spark, index_path)
-        if codebook_md5(stored_books) != codebook_md5(codebooks):
-            raise ValueError(
-                f"PQ index at {index_path} was encoded under codebook "
-                f"md5 {codebook_md5(stored_books)} but this stream "
-                f"folds with {codebook_md5(codebooks)}: mixed "
-                f"codebooks mis-score every candidate of the foreign "
-                f"batches.")
-        if read_pq_residual(spark, index_path) != bool(residual):
-            raise ValueError(
-                f"PQ index at {index_path} is stamped "
-                f"residual={read_pq_residual(spark, index_path)} but "
-                f"this stream folds residual={bool(residual)}: one "
-                f"store cannot mix encoding forms.")
-    rows = (_pq_index_rows(batch, centroids, codebooks, residual,
-                           vec_col, id_col, meta_cols)
-            .withColumn("batch", F.lit(int(batch_id))))
-    tomb = read_ann_tombstones(spark, index_path)
-    if tomb is not None:
-        rows = rows.join(F.broadcast(tomb.select("neighbor_id")),
-                         "neighbor_id", "left_anti")
-    (rows.repartition(F.col("cell"))
-         .write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy("batch", "cell").parquet(index_path))
-    if meta is None:
-        _write_centroids(spark, index_path, centroids)
-        _write_codebooks(spark, index_path, codebooks,
-                         residual=residual)
 
 
 def _read_parquet_or_none(spark: SparkSession, path: str):

@@ -9,6 +9,7 @@ tie and degenerate (zero-norm) geometry.
 """
 
 import numpy as np
+import pytest
 
 from oracle_to_snowflake_etl_spark.operators.similarity import (
     _cell_sims,
@@ -65,6 +66,7 @@ def test_tie_geometry():
     assert (full == fast).all()
 
 
+@pytest.mark.filterwarnings("error::RuntimeWarning")
 def test_zero_norm_vector_row():
     """A zero vector yields an all-NaN reference row (argmax 0); the
     masked path's degenerate fallback must agree."""
@@ -76,6 +78,7 @@ def test_zero_norm_vector_row():
     assert (full == fast).all()
 
 
+@pytest.mark.filterwarnings("error::RuntimeWarning")
 def test_zero_norm_centroid_column():
     """A zero CENTROID makes one column NaN for every row — np.argmax
     returns the first NaN index on the reference; the fallback path

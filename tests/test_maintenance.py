@@ -426,36 +426,6 @@ def test_apply_changes_partitioned_cdc_with_deletes(spark, tmp_path):
     assert day1.where("k = 4").count() == 0              # delete applied
 
 
-def test_ivf_index_at_rest_prunes_and_matches(spark, tmp_path):
-    """write_ivf_index + ivf_topk_indexed: the persisted-index probe
-    (1) returns exactly the in-memory ivf_topk result and (2) plans
-    partition filters on the cell column, so unprobed cell directories
-    are pruned at planning time."""
-    from pyspark.sql import functions as F
-
-    from oracle_to_snowflake_etl_spark.operators.similarity import (
-        ivf_topk,
-        ivf_topk_indexed,
-        write_ivf_index,
-    )
-    from oracle_to_snowflake_etl_spark.plans.inspect import partition_filters
-    from oracle_to_snowflake_etl_spark.sources.readers import load_table
-
-    emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-    path = str(tmp_path / "ivf")
-    write_ivf_index(emb, path)
-    queries = emb.where(F.col("vec_id") < 4)
-
-    mem = {(r.query_id, r.neighbor_id, r.sim_q6)
-           for r in ivf_topk(emb, queries).collect()}
-    idx_df = ivf_topk_indexed(spark, path, queries)
-    idx = {(r.query_id, r.neighbor_id, r.sim_q6) for r in idx_df.collect()}
-    assert idx == mem and idx
-
-    pf = partition_filters(idx_df)
-    assert any("cell" in f for f in pf), pf
-
-
 def test_approx_group_quantiles_rank_error_bound(spark):
     """approx_group_quantiles' GK contract: each reported per-group
     quantile must sit within the rank band [ (p - 1/accuracy)*n,
@@ -964,22 +934,23 @@ def test_reindex_ann_store_atomic_swap_and_stamps(spark, tmp_path):
     indexed == in-memory under the NEW geometry, queries passing the
     OLD matrix explicitly RAISE on the _meta stamp (the fail-fast the
     migration exists for), mid-swap leftovers refuse with the recovery
-    named, streamed stores refuse, and the PQ store kind is
-    auto-detected and preserved (codebooks sidecar rebuilt)."""
+    named, and streamed stores refuse. A legacy product-quantization
+    store (a retired format: packed ``pqb`` codes, no int8 ``qb``)
+    fails serving with the kernel's corrupt-store error and migrates
+    by reindex to an int8 store equal to a fresh build."""
     import os
 
     import pytest as _pt
     from pyspark.sql import functions as F
 
     from oracle_to_snowflake_etl_spark.operators.similarity import (
+        _write_centroids,
         ann_ivf_int8_topk,
-        ann_ivf_pq_topk,
+        ann_topk,
         ivf_train_centroids,
         read_ivf_centroids,
-        read_pq_codebooks,
         reindex_ann_store,
         write_ivf_int8_index,
-        write_pq_index,
     )
     from oracle_to_snowflake_etl_spark.sources.readers import load_table
     from oracle_to_snowflake_etl_spark.streaming.jobs import (
@@ -1021,20 +992,40 @@ def test_reindex_ann_store_atomic_swap_and_stamps(spark, tmp_path):
     with _pt.raises(ValueError, match="STREAMED"):
         reindex_ann_store(spark, emb, sidx, centroids=new_c)
 
-    # PQ kind auto-detected: codebooks retrained + restamped
-    pq = str(tmp_path / "pq")
-    write_pq_index(emb, pq, centroids=old_c)
-    old_books = read_pq_codebooks(spark, pq)
-    assert reindex_ann_store(spark, emb, pq,
+    # legacy product-quantization store, laid out by hand as its
+    # retired writer left it: 8-byte pqb codes partitioned by cell,
+    # the _centroids/_meta stamps and the quantizer sidecar dir
+    legacy = str(tmp_path / "legacy")
+    (emb.select(F.col("vec_id").alias("neighbor_id"),
+                F.expr("unhex(repeat('0f', 8))").alias("pqb"),
+                (F.col("vec_id") % 8).cast("int").alias("cell"))
+     .write.partitionBy("cell").parquet(legacy))
+    _write_centroids(spark, legacy, old_c)
+    quantizer = legacy + "/_codebooks"
+    spark.createDataFrame(
+        [(j, c, [0.0] * 8, False) for j in range(8) for c in range(16)],
+        "sub int, code int, w array<double>, residual boolean") \
+        .write.parquet(quantizer)
+    # serving reads it as an int8 store: qb is absent, so every row
+    # carries a NULL code and the kernel refuses the store
+    with _pt.raises(Exception, match="int8 index store has NULL qb rows"):
+        ann_topk(emb, q, legacy, k=10).collect()
+    # reindex migrates it: an int8 store equal to a fresh build
+    assert reindex_ann_store(spark, emb, legacy,
                              centroids=new_c) == emb.count()
-    assert read_ivf_centroids(spark, pq) == new_c
-    assert read_pq_codebooks(spark, pq) == old_books  # same corpus ->
-    # same deterministic codebooks (subspace training ignores cells)
-    got = sorted(map(tuple, ann_ivf_pq_topk(
-        emb, q, k=10, index_path=pq).collect()))
-    mem = sorted(map(tuple, ann_ivf_pq_topk(
-        emb, q, k=10, centroids=new_c, codebooks=old_books).collect()))
-    assert got == mem and got
+    assert not os.path.isdir(quantizer)
+    fresh = str(tmp_path / "fresh")
+    write_ivf_int8_index(emb, fresh, centroids=new_c)
+    cols = ("neighbor_id", "cell", "scale", "qb")
+
+    def stored(path):
+        return sorted(map(tuple, spark.read.parquet(path)
+                          .select(*cols).collect()))
+
+    assert stored(legacy) == stored(fresh)
+    got = sorted(map(tuple, ann_topk(emb, q, legacy, k=10).collect()))
+    want = sorted(map(tuple, ann_topk(emb, q, fresh, k=10).collect()))
+    assert got == want and got
 
 
 def test_filtered_serving_on_live_streamed_store(spark, tmp_path):
@@ -1082,7 +1073,7 @@ def test_filtered_serving_on_live_streamed_store(spark, tmp_path):
 
 def test_ann_index_report_and_everywhere_fanout(spark, tmp_path):
     """ann_index_report: the serving owner's health view from one
-    metadata walk — kind/layout/geometry stamps, fragmentation (the
+    metadata walk — layout/geometry stamps, fragmentation (the
     compaction trigger surfaced as a number), tombstone backlog.
     purge_keys_everywhere(kind='ann_index') routes ANN stores through
     the layout-aware wrapper, so ONE forget request covers corpus +
@@ -1099,7 +1090,6 @@ def test_ann_index_report_and_everywhere_fanout(spark, tmp_path):
         ivf_train_centroids,
         purge_ann_index_keys,
         write_ivf_int8_index,
-        write_pq_index,
     )
     from oracle_to_snowflake_etl_spark.sources.readers import load_table
     from oracle_to_snowflake_etl_spark.streaming.jobs import (
@@ -1113,7 +1103,7 @@ def test_ann_index_report_and_everywhere_fanout(spark, tmp_path):
     flat = str(tmp_path / "flat")
     write_ivf_int8_index(emb, flat, centroids=cents)
     r = ann_index_report(spark, flat)
-    assert r["kind"] == "int8" and r["layout"] == "flat"
+    assert r["layout"] == "flat"
     assert r["cells"] == 8 and r["dims"] == 64
     assert r["n_cells"] <= 8 and r["n_files"] >= r["n_cells"]
     assert r["data_bytes"] > 0 and r["tombstones"] == 0
@@ -1124,12 +1114,6 @@ def test_ann_index_report_and_everywhere_fanout(spark, tmp_path):
     r2 = ann_index_report(spark, flat)
     assert r2["n_files"] > base_files
     assert r2["max_files_per_cell"] >= 5 and r2["frag_cells"] >= 1
-
-    pq = str(tmp_path / "pq")
-    write_pq_index(emb, pq, centroids=cents, residual=True)
-    rp = ann_index_report(spark, pq)
-    assert rp["kind"] == "pq" and rp["residual"] is True
-    assert rp["data_bytes"] < r["data_bytes"]  # the PQ byte win
 
     sidx = str(tmp_path / "sidx")
     fold_ann_index_batch(spark, emb.where(F.col("vec_id") % 2 == 0),
@@ -1166,117 +1150,6 @@ def test_ann_index_report_and_everywhere_fanout(spark, tmp_path):
     purge_ann_index_keys(spark, sidx, more)
     assert ann_index_report(spark, sidx)["tombstones"] == \
         len(set(victims) | set(more))
-
-
-def test_streamed_pq_index_lifecycle(spark, tmp_path):
-    """The streamed serving fold for the PQ layout
-    (maintain_pq_index_stream / fold_pq_index_batch): two folded
-    batches serve through ann_topk identically to the in-memory
-    residual scan; replay is idempotent; purge tombstones hold
-    through replay (the int8 contract verbatim); foreign geometry /
-    codebooks / encoding-form resume all raise; the kind-aware
-    flatten retires tombstones and carries the codebooks + residual
-    flag so the flat store serves and appends."""
-    import os
-
-    import pytest as _pt
-    from pyspark.sql import functions as F
-
-    from oracle_to_snowflake_etl_spark.operators.similarity import (
-        ann_ivf_pq_topk,
-        ann_topk,
-        append_pq_index,
-        flatten_streamed_ann_index,
-        ivf_train_centroids,
-        pq_train_codebooks,
-        purge_ann_index_keys,
-        read_ann_tombstones,
-        read_pq_codebooks,
-        read_pq_residual,
-    )
-    from oracle_to_snowflake_etl_spark.sources.readers import load_table
-    from oracle_to_snowflake_etl_spark.streaming.jobs import (
-        fold_pq_index_batch,
-        maintain_pq_index_stream,
-    )
-
-    emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-    cents = ivf_train_centroids(emb, cells=8)
-    books = pq_train_codebooks(emb, residual_centroids=cents)
-    idx = str(tmp_path / "idx")
-    b0 = emb.where(F.col("vec_id") % 2 == 0)
-    b1 = emb.where(F.col("vec_id") % 2 == 1)
-    fold_pq_index_batch(spark, b0, 0, idx, cents, books, residual=True)
-    fold_pq_index_batch(spark, b1, 1, idx, cents, books, residual=True)
-    assert read_pq_residual(spark, idx) is True
-
-    q = emb.where(F.col("vec_id") < 10)
-
-    def pairs(df):
-        return {(r.query_id, r.neighbor_id) for r in df.collect()}
-
-    got = pairs(ann_topk(emb, q, idx, k=5))
-    mem = pairs(ann_ivf_pq_topk(emb, q, k=5, centroids=cents,
-                                codebooks=books, residual=True))
-    assert got == mem and got
-    # replay idempotence: re-fold batch 1, nothing changes
-    fold_pq_index_batch(spark, b1, 1, idx, cents, books, residual=True)
-    assert pairs(ann_topk(emb, q, idx, k=5)) == got
-
-    # foreign geometry / codebooks / encoding form refuse
-    other_c = ivf_train_centroids(emb, cells=16)
-    with _pt.raises(ValueError, match="centroid"):
-        fold_pq_index_batch(spark, b0, 2, idx, other_c,
-                            books, residual=True)
-    other_b = pq_train_codebooks(emb)
-    with _pt.raises(ValueError, match="codebook"):
-        fold_pq_index_batch(spark, b0, 2, idx, cents,
-                            other_b, residual=True)
-    with _pt.raises(ValueError, match="encoding"):
-        fold_pq_index_batch(spark, b0, 2, idx, cents,
-                            books, residual=False)
-
-    # purge + crash replay: tombstoned ids stay gone
-    victims = [r.vec_id for r in
-               b1.where(F.col("vec_id") % 7 == 3)
-               .select("vec_id").collect()]
-    assert purge_ann_index_keys(spark, idx, victims) == len(victims)
-    fold_pq_index_batch(spark, b1, 1, idx, cents, books, residual=True)
-    stored = {r.neighbor_id for r in
-              spark.read.parquet(idx).select("neighbor_id").collect()}
-    assert not stored & set(victims)
-    qs = q.where(~F.col("vec_id").isin(victims))
-    assert not {n for _, n in
-                pairs(ann_topk(emb, qs, idx, k=5))} & set(victims)
-
-    # kind-aware flatten: codebooks + residual travel, tombstones
-    # retire, the flat store appends
-    flat = str(tmp_path / "flat")
-    n = flatten_streamed_ann_index(spark, idx, flat)
-    assert n == emb.count() - len(victims)
-    assert read_pq_codebooks(spark, flat) == books
-    assert read_pq_residual(spark, flat) is True
-    assert read_ann_tombstones(spark, flat) is None
-    keep = pairs(ann_topk(emb, qs, flat, k=5))
-    memk = pairs(ann_ivf_pq_topk(
-        emb.where(~F.col("vec_id").isin(victims)), qs, k=5,
-        centroids=cents, codebooks=books, residual=True))
-    assert keep == memk
-    append_pq_index(emb.where(F.col("vec_id").isin(victims)), flat)
-    assert pairs(ann_topk(emb, qs, flat, k=5)) == pairs(
-        ann_ivf_pq_topk(emb, qs, k=5, centroids=cents,
-                        codebooks=books, residual=True))
-
-    # the streaming entry point itself drains availableNow
-    src = tmp_path / "src"
-    b0.coalesce(1).write.parquet(str(src))
-    sidx = str(tmp_path / "sidx")
-    stream = (spark.readStream.schema(emb.schema).parquet(str(src)))
-    sq = maintain_pq_index_stream(stream, sidx, str(tmp_path / "ckp"),
-                                  cents, books, residual=True)
-    assert sq.awaitTermination(180)
-    assert os.path.isdir(os.path.join(sidx, "batch=0"))
-    assert read_pq_residual(spark, sidx) is True
 
 
 def test_purge_keys_null_and_duplicate_keys_counting(spark, tmp_path):

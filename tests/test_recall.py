@@ -348,160 +348,6 @@ def test_int8_indexed_scan_null_qb_raises(spark, emb, tmp_path):
                           index_path=path).collect()
 
 
-def test_pq_adc_recall_dial_and_contract(spark, emb):
-    """ann_pq_topk (8-byte ADC codes + float rescore): the first pass
-    is deliberately coarse — 8 subspaces x 16 codewords quantize far
-    harder than int8 — and recall is bought back by the rescore
-    width, the operator's documented dial. Pin the measured curve
-    (train-on-corpus default, 50 queries at sf0.01: 0.512 / 0.842 /
-    0.992 at rescore 3/10/30 — tools measurement round 14) as floors
-    plus monotonicity, and the output contract (k rows per query, no
-    self matches)."""
-    from pyspark.sql import functions as F
-
-    from oracle_to_snowflake_etl_spark.operators.similarity import (
-        ann_pq_topk,
-        brute_force_topk,
-        pq_train_codebooks,
-    )
-
-    q = emb.where(F.col("vec_id") < 50)
-    exact = brute_force_topk(emb, q, k=10).collect()
-    books = pq_train_codebooks(emb)  # train once, reuse across widths
-    rec = {}
-    for resc, floor in ((3, 0.45), (10, 0.78), (30, 0.95)):
-        got = ann_pq_topk(emb, q, k=10, rescore=resc,
-                          codebooks=books).collect()
-        by_q: dict[int, set[int]] = {}
-        for r in got:
-            assert r.query_id != r.neighbor_id
-            by_q.setdefault(r.query_id, set()).add(r.neighbor_id)
-        assert all(len(v) == 10 for v in by_q.values())
-        assert len(by_q) == 50
-        rec[resc] = sum(r.neighbor_id in by_q[r.query_id]
-                        for r in exact) / len(exact)
-        assert rec[resc] >= floor, (resc, rec[resc])
-    assert rec[3] < rec[10] < rec[30]  # the dial is monotone
-
-
-def test_ivf_pq_indexed_equals_inmemory_and_guards(spark, emb, tmp_path):
-    """ann_ivf_pq_topk: the at-rest write_pq_index store serves
-    EXACTLY what the in-memory form computes (both geometries read
-    from the sidecars), composed recall clears the measured floors
-    (0.532 / 0.78 / 0.804 at rescore 3/10/30 — the dial saturates at
-    the IVF probe ceiling ~0.80, same as the int8 composition), and
-    foreign geometry fails fast on BOTH stamps (centroids md5,
-    codebooks md5)."""
-    import pytest as _pt
-    from pyspark.sql import functions as F
-
-    from oracle_to_snowflake_etl_spark.operators.similarity import (
-        ann_ivf_pq_topk,
-        brute_force_topk,
-        ivf_train_centroids,
-        pq_train_codebooks,
-        write_pq_index,
-    )
-
-    cents = ivf_train_centroids(emb)
-    books = pq_train_codebooks(emb)
-    idx = str(tmp_path / "pqidx")
-    write_pq_index(emb, idx, centroids=cents, codebooks=books)
-    q = emb.where(F.col("vec_id") < 50)
-    exact = brute_force_topk(emb, q, k=10).collect()
-    rec = {}
-    for resc, floor in ((3, 0.48), (10, 0.72), (30, 0.75)):
-        got = ann_ivf_pq_topk(emb, q, k=10, rescore=resc,
-                              index_path=idx).collect()
-        if resc == 3:
-            mem = ann_ivf_pq_topk(emb, q, k=10, rescore=resc,
-                                  centroids=cents,
-                                  codebooks=books).collect()
-            assert sorted(map(tuple, got)) == sorted(map(tuple, mem))
-        by_q: dict[int, set[int]] = {}
-        for r in got:
-            assert r.query_id != r.neighbor_id
-            by_q.setdefault(r.query_id, set()).add(r.neighbor_id)
-        rec[resc] = sum(r.neighbor_id in by_q[r.query_id]
-                        for r in exact) / len(exact)
-        assert rec[resc] >= floor, (resc, rec[resc])
-    assert rec[3] <= rec[10] <= rec[30]
-
-    # foreign geometry raises on the stamps, never mis-scores silently
-    foreign_c = ivf_train_centroids(emb.where(F.col("vec_id") % 2 == 0))
-    with _pt.raises(ValueError, match="wrong cells"):
-        ann_ivf_pq_topk(emb, q, k=10, index_path=idx,
-                        centroids=foreign_c)
-    foreign_b = pq_train_codebooks(emb.where(F.col("vec_id") % 2 == 0))
-    with _pt.raises(ValueError, match="foreign quantizer"):
-        ann_ivf_pq_topk(emb, q, k=10, index_path=idx,
-                        codebooks=foreign_b)
-
-
-def test_pq_append_compact_purge_lifecycle(spark, emb, tmp_path):
-    """The PQ store supports the int8 store's full lifecycle: append
-    under the STORED geometries equals indexed-at-once (probed scan
-    identical), compaction folds the append's small files back with
-    under-threshold cells byte-identical, and the layout-agnostic
-    purge removes forgotten neighbor_ids while the sidecars survive."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from oracle_to_snowflake_etl_spark.operators.similarity import (
-        ann_ivf_pq_topk,
-        append_pq_index,
-        compact_pq_index,
-        ivf_train_centroids,
-        pq_train_codebooks,
-        purge_ann_index_keys,
-        read_ivf_centroids,
-        write_pq_index,
-    )
-
-    cents = ivf_train_centroids(emb)
-    books = pq_train_codebooks(emb)
-    whole = str(tmp_path / "whole")
-    grown = str(tmp_path / "grown")
-    write_pq_index(emb, whole, centroids=cents, codebooks=books)
-    write_pq_index(emb.where(F.col("vec_id") % 4 != 3), grown,
-                   centroids=cents, codebooks=books)
-    n = append_pq_index(emb.where(F.col("vec_id") % 4 == 3), grown)
-    assert n == emb.where(F.col("vec_id") % 4 == 3).count()
-    q = emb.where(F.col("vec_id") < 20)
-    a = sorted(map(tuple, ann_ivf_pq_topk(
-        emb, q, k=10, index_path=whole).collect()))
-    b = sorted(map(tuple, ann_ivf_pq_topk(
-        emb, q, k=10, index_path=grown).collect()))
-    assert a == b and a  # append == index-at-once on the serving path
-
-    def files_of(path, cell):
-        d = os.path.join(path, f"cell={cell}")
-        return {f for f in os.listdir(d) if f.startswith("part-")}
-
-    cells_dirs = sorted(int(d.split("=")[1]) for d in os.listdir(grown)
-                        if d.startswith("cell="))
-    before = {c: files_of(grown, c) for c in cells_dirs}
-    frag = [c for c in cells_dirs if len(before[c]) > 1]
-    assert frag  # the append fragmented at least one cell
-    compacted = compact_pq_index(spark, grown, max_files_per_cell=1)
-    assert compacted == len(frag)
-    for c in cells_dirs:
-        if c not in frag:
-            assert files_of(grown, c) == before[c]  # byte-identical
-    assert b == sorted(map(tuple, ann_ivf_pq_topk(
-        emb, q, k=10, index_path=grown).collect()))
-
-    victims = [r.vec_id for r in
-               emb.where(F.col("vec_id") % 11 == 5)
-               .select("vec_id").collect()]
-    removed = purge_ann_index_keys(spark, grown, victims)
-    assert removed == len(victims)
-    assert read_ivf_centroids(spark, grown) == cents  # sidecars live
-    got = ann_ivf_pq_topk(emb, q, k=10, index_path=grown).collect()
-    assert got and not {r.neighbor_id for r in got} & set(victims)
-
-
 def test_filtered_ann_recall_parity_and_contracts(spark, emb, tmp_path):
     """Attribute-filtered ANN (VERDICT r14 Missing #1): the k results
     are the top k among ELIGIBLE rows, with recall measured against
@@ -517,12 +363,9 @@ def test_filtered_ann_recall_parity_and_contracts(spark, emb, tmp_path):
 
     from oracle_to_snowflake_etl_spark.operators.similarity import (
         ann_ivf_int8_topk,
-        ann_ivf_pq_topk,
         brute_force_topk,
         ivf_train_centroids,
-        pq_train_codebooks,
         write_ivf_int8_index,
-        write_pq_index,
     )
 
     pred = F.col("label") % 3 == 0
@@ -561,21 +404,6 @@ def test_filtered_ann_recall_parity_and_contracts(spark, emb, tmp_path):
     post = {(qq, n) for qq, n in unf if n in elig}
     assert len(post) < len(a)  # fewer results ...
     assert len(post & truth) < len(a & truth)  # ... and worse recall
-
-    # PQ twin: all entrances agree, results eligible-only
-    books = pq_train_codebooks(emb)
-    ppq = str(tmp_path / "pq")
-    write_pq_index(emb, ppq, centroids=cents, codebooks=books,
-                   meta_cols=("label",))
-    e = pairs(ann_ivf_pq_topk(emb, q, k=10, centroids=cents,
-                              codebooks=books, filter_ids=ids))
-    f = pairs(ann_ivf_pq_topk(emb, q, k=10, index_path=ppq,
-                              filter_ids=ids))
-    g = pairs(ann_ivf_pq_topk(emb, q, k=10, index_path=ppq,
-                              filter_pred=pred))
-    assert e == f == g and {n for _, n in e} <= elig
-    truth_pq = len(e & truth) / len(truth)
-    assert truth_pq >= 0.45  # PQ floor: 0.512 dial at rescore=3
 
     # contract edges: empty allow-set -> empty result; cap raises
     assert ann_ivf_int8_topk(emb, q, k=10, centroids=cents,
@@ -623,88 +451,3 @@ def test_filter_pred_pushes_to_index_scan(spark, emb, tmp_path):
     assert any("label" in f for f in pushed), pushed
     pf = partition_filters(scan)
     assert any("cell" in f for f in pf), pf
-
-
-def test_residual_pq_recall_gain_and_flag_contracts(spark, tmp_path):
-    """Residual-encoded IVFPQ (IVFADC, write_pq_index residual=True):
-    on a CLUSTERED corpus — where PQ distortion actually lives — the
-    residual codes buy recall at the same 8 bytes/vector (measured
-    0.237→0.293 @rescore=3 on this seeded fixture; raw PQ quantizes
-    raw coordinates whose variance is dominated by the cluster mean).
-    The flag is stamped into _codebooks: indexed == in-memory under
-    the same books, a conflicting explicit flag raises, appends
-    encode under the stored flag, and reindex preserves it."""
-    import numpy as np
-    import pytest as _pt
-    from pyspark.sql import functions as F
-
-    from oracle_to_snowflake_etl_spark.operators.similarity import (
-        ann_ivf_pq_topk,
-        append_pq_index,
-        brute_force_topk,
-        ivf_train_centroids,
-        pq_train_codebooks,
-        read_pq_residual,
-        reindex_ann_store,
-        write_pq_index,
-    )
-
-    rng = np.random.default_rng(42)
-    d, kc, n = 64, 32, 8000
-    centers = rng.standard_normal((kc, d))
-    centers /= np.linalg.norm(centers, axis=1, keepdims=True)
-    lab = rng.integers(0, kc, n)
-    X = centers[lab] + 0.15 * rng.standard_normal((n, d))
-    X /= np.linalg.norm(X, axis=1, keepdims=True)
-    emb = spark.createDataFrame(
-        [(int(i), [float(x) for x in X[i]]) for i in range(n)],
-        "vec_id long, embedding array<float>").repartition(8).persist()
-    emb.count()
-    try:
-        q = emb.where(F.col("vec_id") < 30)
-        cents = ivf_train_centroids(emb, cells=64)
-
-        def pairs(df):
-            return {(r.query_id, r.neighbor_id) for r in df.collect()}
-
-        truth = pairs(brute_force_topk(emb, q, k=10))
-        raw = pairs(ann_ivf_pq_topk(emb, q, k=10, centroids=cents))
-        res = pairs(ann_ivf_pq_topk(emb, q, k=10, centroids=cents,
-                                    residual=True))
-        r_raw = len(raw & truth) / len(truth)
-        r_res = len(res & truth) / len(truth)
-        # the IVFADC gain on a deterministic fixture: measured
-        # 0.457 vs 0.433 here (0.293 vs 0.237 on the 20k/32-cluster
-        # variant, SCALE.md) — pin the gap and a floor
-        assert r_res - r_raw >= 0.02
-        assert r_res >= 0.44
-
-        # at-rest: flag stamped, indexed == in-memory, conflict raises
-        path = str(tmp_path / "pqres")
-        write_pq_index(emb, path, centroids=cents, residual=True)
-        assert read_pq_residual(spark, path) is True
-        idx = pairs(ann_ivf_pq_topk(emb, q, k=10, index_path=path))
-        assert idx == res
-        with _pt.raises(ValueError, match="residual"):
-            ann_ivf_pq_topk(emb, q, k=10, index_path=path,
-                            residual=False)
-
-        # append encodes under the stored flag: grown == at-once
-        part = str(tmp_path / "pqgrow")
-        books = pq_train_codebooks(emb, residual_centroids=cents)
-        write_pq_index(emb.where(F.col("vec_id") % 4 != 3), part,
-                       centroids=cents, codebooks=books, residual=True)
-        append_pq_index(emb.where(F.col("vec_id") % 4 == 3), part)
-        assert pairs(ann_ivf_pq_topk(emb, q, k=10,
-                                     index_path=part)) == idx
-
-        # reindex preserves the encoding form under fresh geometry
-        new_c = ivf_train_centroids(emb, cells=16)
-        reindex_ann_store(spark, emb, path, centroids=new_c)
-        assert read_pq_residual(spark, path) is True
-        again = pairs(ann_ivf_pq_topk(emb, q, k=10, index_path=path))
-        mem = pairs(ann_ivf_pq_topk(emb, q, k=10, centroids=new_c,
-                                    residual=True))
-        assert again == mem and again
-    finally:
-        emb.unpersist()
