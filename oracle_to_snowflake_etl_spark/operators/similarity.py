@@ -272,8 +272,7 @@ def _cell_pairs_gemm(assigned: DataFrame, threshold_q6: int) -> DataFrame:
     :func:`_int8_prefilter_mats`; survivors bit-identical either way)
     — measured and documented as the non-default (see the flag). The
     flag is read HERE at plan-build time and captured in the closure —
-    a worker-side module re-import would not see a driver toggle
-    (_int8_scan_kernel's broadcast-the-override lesson)."""
+    a worker-side module re-import would not see a driver toggle."""
     thr_pre = _gemm_prefilter_threshold(threshold_q6)
     thr_cert = _gemm_certain_threshold(threshold_q6)
     use_int8 = SEMANTIC_INT8_PREFILTER
@@ -629,8 +628,9 @@ def ivf_cell(vec: Column, cells: int = IVF_CELLS,
     """Nearest-centroid cell id (first index on cosine ties — matches the
     oracle's list_position-of-max). Leaf function: it sees only a Column
     and cannot train, so ``centroids=None`` means the reproducible md5
-    matrix — the TRAINED default lives one level up (:func:`ivf_topk` /
-    :func:`write_ivf_int8_index` train on their corpus)."""
+    matrix — the TRAINED default lives one level up
+    (:func:`ann_ivf_int8_topk` / :func:`write_ivf_int8_index` train on
+    their corpus)."""
     from pyspark.sql.functions import pandas_udf
 
     C = np.array(centroids if centroids is not None
@@ -721,7 +721,7 @@ def ivf_train_centroids(corpus: DataFrame, cells: int = IVF_CELLS,
 
     Returns a tuple-of-tuples centroid matrix for the ``centroids``
     parameter of :func:`ivf_cell` / :func:`ivf_probe_cells` /
-    :func:`ivf_topk` / :func:`write_ivf_int8_index`.
+    :func:`ann_ivf_int8_topk` / :func:`write_ivf_int8_index`.
     """
     from ..functions.hashing import hash60
 
@@ -773,61 +773,6 @@ def ivf_train_centroids(corpus: DataFrame, cells: int = IVF_CELLS,
                 if n > 0:
                     C[c] = m / n
     return tuple(tuple(float(x) for x in row) for row in C)
-
-
-def ivf_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
-             nprobe: int = IVF_NPROBE, vec_col: str = "embedding",
-             id_col: str = "vec_id",
-             centroids: tuple | None = None) -> DataFrame:
-    """IVF approximate top-k: assign the corpus to IVF_CELLS trained
-    cells (one Arrow pass, map-only), probe each query's nprobe nearest
-    cells, exact-rescore only the probed fraction (~nprobe/cells of the
-    corpus per query), per-query window rank.
-
-    ``centroids=None`` — the SHIPPED DEFAULT — trains on the corpus
-    being indexed (:func:`ivf_train_centroids`, deterministic, one
-    sample-bounded pass): that is where IVF recall lives. The round-7
-    sweep showed the k-means gain is IN-CORPUS adaptation — a snapshot
-    trained on one uniform-random corpus transfers to a disjoint one at
-    random-centroid recall (0.667 vs md5's 0.674 at nprobe=24), while
-    per-corpus training holds 0.81-0.82 recall@10 at BOTH bench scales
-    (SCALE.md). This mirrors standard IVF practice (FAISS trains on the
-    indexed vectors or a sample). Pass an :func:`ivf_train_centroids`
-    snapshot explicitly to amortize training across calls — the
-    at-rest form (:func:`write_ivf_int8_index`) does exactly that, persisting
-    its matrix with the index.
-
-    100 TB shape: NO corpus shuffle — the tiny (query_id, cell) probe set
-    broadcasts into the join, scoring stays map-side, and only the scored
-    candidates (|queries| x corpus x nprobe/cells) shuffle for the top-k
-    window. The cell column is the natural partitionBy/bucketBy key for a
-    materialized index table, which turns probing into partition pruning.
-    """
-    if centroids is None:
-        centroids = ivf_train_centroids(corpus, vec_col=vec_col,
-                                        id_col=id_col)
-    c = corpus.select(F.col(id_col).alias("neighbor_id"),
-                      F.col(vec_col).alias("c_vec"),
-                      ivf_cell(F.col(vec_col),
-                               centroids=centroids).alias("cell"))
-    qx = (queries.select(F.col(id_col).alias("query_id"),
-                         F.col(vec_col).alias("q_vec"),
-                         ivf_probe_cells(F.col(vec_col), nprobe,
-                                         centroids=centroids).alias("cells"))
-          .select("query_id", "q_vec", F.explode("cells").alias("cell")))
-    scored = (
-        c.join(F.broadcast(qx), "cell")
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id",
-                _cos_q6_udf()(F.col("q_vec"), F.col("c_vec")).alias("sim_q6"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("sim_q6"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "sim_q6")
-    )
 
 
 def label_centroids(df: DataFrame, vec_col: str = "embedding",
@@ -1522,19 +1467,20 @@ def ann_recall_at_k(corpus: DataFrame, queries: DataFrame, k: int = 10,
                     nprobe: int = IVF_NPROBE, vec_col: str = "embedding",
                     id_col: str = "vec_id",
                     centroids: tuple | None = None) -> float:
-    """Recall@k of :func:`ivf_topk` against the exact
+    """Recall@k of :func:`ann_ivf_int8_topk` against the exact
     :func:`brute_force_topk` ground truth: |approx ∩ truth| / |truth|
     over (query_id, neighbor_id) pairs. Both sides break sim ties by
     ascending neighbor id, so the set comparison is well-defined.
 
     This measures retrieval QUALITY, which index-consistency oracles
-    cannot: ann_ivf_topk's driver check proves the index returns
+    cannot: ann_ivf_int8_topk's DuckDB oracle proves the index returns
     exactly what its own spec says, recall proves what it returns is
     CLOSE TO THE TRUE neighbors. Counts are metadata-sized (|queries|
     x k); the heavy work stays distributed."""
     truth = brute_force_topk(corpus, queries, k, vec_col, id_col)
-    approx = ivf_topk(corpus, queries, k, nprobe, vec_col, id_col,
-                      centroids=centroids)
+    approx = ann_ivf_int8_topk(corpus, queries, k, nprobe=nprobe,
+                               centroids=centroids, vec_col=vec_col,
+                               id_col=id_col)
     n_truth = truth.count()
     if n_truth == 0:
         return 1.0
@@ -1711,8 +1657,8 @@ def _resolve_filter_ids(filter_ids, id_col: str,
 #: average-slice-size gate between the per-cell gathered GEMM and the
 #: full GEMM + probe mask in the IVF-pruned int8 scan: gather when the
 #: batch averages at least this many rows per distinct cell. Measured
-#: (tools/ann_mixed_bench.py, SCALE_ANN_MIXED.json: 2M rows x 4096
-#: cells x 256 queries, nprobe 96): at-rest file-packed batches
+#: (SCALE_ANN_MIXED.json: 2M rows x 4096 cells x 256 queries, nprobe
+#: 96): at-rest file-packed batches
 #: average ~488 rows/cell and the gather scans in 14.0-15.1 s vs the
 #: forced full-GEMM's 19.5 s (x1.3-1.4 — the flops cut survives file
 #: packing, VERDICT r12 Wrong #1); random-mixed in-memory batches
@@ -1740,23 +1686,21 @@ def _int8_quantize_np(Cf: "np.ndarray") -> tuple["np.ndarray", "np.ndarray"]:
 
 
 def _int8_scan_kernel(bc, r_cut: int):
-    """Shared Arrow scan kernel of the quantized ANN family
-    (:func:`ann_int8_topk`, :func:`ann_ivf_int8_topk`): exact-int64
-    GEMM over the (pre)quantized corpus rows against the broadcast
+    """Arrow scan kernel of :func:`ann_ivf_int8_topk`: exact-int64
+    GEMM over the quantized corpus rows against the broadcast
     quantized query matrix, per-partition top-``r_cut`` per query under
     the TOTAL order (approx DESC, neighbor_id ASC) — distributive
     top-k, so the global cut over the skinny candidate rows is exact.
 
-    ``bc`` broadcasts ``(q_ids, Qq, q_scale)`` for the flat scan or
-    ``(q_ids, Qq, q_scale, allowed)`` for the IVF-pruned scan, where
-    ``allowed`` is the (cells x |queries|) probe mask. In the pruned
-    form rows are GATHERED by cell and each cell's GEMM runs against
-    only the queries probing it — flops drop to
-    sum_cells |cell| x |probing queries| instead of N x Q; the
-    mask-after-full-GEMM round-11 form did 100 % of the unpruned flops.
+    ``bc`` broadcasts ``(q_ids, Qq, q_scale, allowed, sel)``, where
+    ``allowed`` is the (cells x |queries|) probe mask. Rows are
+    GATHERED by cell and each cell's GEMM runs against only the
+    queries probing it — flops drop to sum_cells |cell| x |probing
+    queries| instead of N x Q; the mask-after-full-GEMM round-11 form
+    did 100 % of the unpruned flops.
 
-    Optional payload[5] is the ATTRIBUTE-FILTER allow-set (sorted
-    int64 ids, :func:`_resolve_filter_ids`): ineligible rows are
+    ``sel`` is None or the ATTRIBUTE-FILTER allow-set (sorted int64
+    ids, :func:`_resolve_filter_ids`): ineligible rows are
     dropped BEFORE scoring and before the per-partition top-R cut, so
     the emitted candidates are the top R among ELIGIBLE rows —
     post-filtering a k-cut would collapse recall whenever the true
@@ -1768,15 +1712,7 @@ def _int8_scan_kernel(bc, r_cut: int):
     (the repo's hash60 60-bit id convention; ADVICE r11)."""
 
     def scan(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        payload = bc.value
-        ids_b, Qq_b, qs_b = payload[0], payload[1], payload[2]
-        allow_b = payload[3] if len(payload) > 3 else None
-        # optional gather-gate override rides the broadcast (the bench
-        # tool forces each branch to measure the crossover; a module
-        # global would not survive the worker-process re-import)
-        gmin = (payload[4] if len(payload) > 4
-                else ANN_GATHER_MIN_ROWS_PER_CELL)
-        sel_b = payload[5] if len(payload) > 5 else None
+        ids_b, Qq_b, qs_b, allow_b, sel_b = bc.value
         bq: list[np.ndarray] = []   # int64 query ids
         bn: list[np.ndarray] = []   # int64 neighbor ids (parallel)
         bs: list[np.ndarray] = []   # float64 approx scores (parallel)
@@ -1827,73 +1763,61 @@ def _int8_scan_kernel(bc, r_cut: int):
                     continue
                 Cq = np.frombuffer(buf, dtype=np.int8) \
                     .reshape(len(pdf), -1).astype(np.int64)
-            elif "c_q" in pdf.columns:
-                # prequantized array<int> store (quantize_int8's
-                # column form at rest)
-                cs = pdf["c_scale"].to_numpy(dtype=np.float64)
-                Cq = np.stack(pdf["c_q"].values).astype(np.int64)
             else:
                 Cq, cs = _int8_quantize_np(
                     np.stack(pdf["c_vec"].values).astype(np.float64))
-            if allow_b is None:
-                dots = Cq @ Qq_b.T                  # exact int64
+            cell = pdf["cell"].to_numpy(dtype=np.int64)
+            # ONE stable sort groups the batch by cell (at-rest
+            # write_ivf_int8_index batches are already
+            # cell-contiguous, so this is a near-no-op pass); slice
+            # boundaries replace the old per-cell boolean masks,
+            # whose cost was O(rows x distinct cells)
+            order = np.argsort(cell, kind="stable")
+            cell_s = cell[order]
+            bnd = np.flatnonzero(cell_s[1:] != cell_s[:-1]) + 1
+            n_cells = bnd.shape[0] + 1
+            if cell_s.shape[0] >= ANN_GATHER_MIN_ROWS_PER_CELL * n_cells:
+                # cell-grouped batch (the partitionBy(cell) layout,
+                # even when file packing stacks MANY small cells
+                # into one task): gather rows AND query columns per
+                # cell before the matmul — flops are
+                # sum_cells |cell| x |probing queries|, the
+                # composed operator's claimed cut. Engaged by
+                # average slice size, not distinct-cell count
+                # (the old <=16-distinct-cells gate forfeited the
+                # cut under file packing): measured x1.3-1.4 over
+                # the full GEMM at 488 rows/cell across 4096 cells
+                # (SCALE_ANN_MIXED.json)
+                starts = np.concatenate(([0], bnd))
+                ends = np.concatenate((bnd, [cell_s.shape[0]]))
+                Cq_s, nid_s, cs_s = Cq[order], nid[order], cs[order]
+                for s, e in zip(starts, ends):
+                    qsel = np.flatnonzero(allow_b[cell_s[s]])
+                    if qsel.size == 0:
+                        continue
+                    nid_sub = nid_s[s:e]
+                    dots = Cq_s[s:e] @ Qq_b[qsel].T
+                    approx = (dots.astype(np.float64)
+                              * cs_s[s:e, None]) * qs_b[None, qsel]
+                    approx[nid_sub[:, None]
+                           == ids_b[qsel][None, :]] = -np.inf
+                    emit(nid_sub, approx, qsel)
+            else:
+                # cell-MIXED batch (self-contained in-memory form:
+                # a few rows per distinct cell): one BLAS GEMM +
+                # row mask. The mask-loop form measured 27.6 s vs
+                # 2.8 s at 2M x 1.4k cells; the argsort-slice form
+                # closed that to within noise (83.6 vs 84.8 s at
+                # 2.4 rows/cell, SCALE_ANN_MIXED.json — the
+                # in-memory scan is assignment/quantize-bound), so
+                # the gate errs toward the single GEMM — same
+                # admitted candidates either way
+                dots = Cq @ Qq_b.T
                 approx = (dots.astype(np.float64)
                           * cs[:, None]) * qs_b[None, :]
+                approx[~allow_b[cell]] = -np.inf
                 approx[nid[:, None] == ids_b[None, :]] = -np.inf
                 emit(nid, approx, np.arange(ids_b.shape[0]))
-            else:
-                cell = pdf["cell"].to_numpy(dtype=np.int64)
-                # ONE stable sort groups the batch by cell (at-rest
-                # write_ivf_int8_index batches are already
-                # cell-contiguous, so this is a near-no-op pass); slice
-                # boundaries replace the old per-cell boolean masks,
-                # whose cost was O(rows x distinct cells)
-                order = np.argsort(cell, kind="stable")
-                cell_s = cell[order]
-                bnd = np.flatnonzero(cell_s[1:] != cell_s[:-1]) + 1
-                n_cells = bnd.shape[0] + 1
-                if cell_s.shape[0] >= gmin * n_cells:
-                    # cell-grouped batch (the partitionBy(cell) layout,
-                    # even when file packing stacks MANY small cells
-                    # into one task): gather rows AND query columns per
-                    # cell before the matmul — flops are
-                    # sum_cells |cell| x |probing queries|, the
-                    # composed operator's claimed cut. Engaged by
-                    # average slice size, not distinct-cell count
-                    # (the old <=16-distinct-cells gate forfeited the
-                    # cut under file packing): measured x1.3-1.4 over
-                    # the full GEMM at 488 rows/cell across 4096 cells
-                    # (SCALE_ANN_MIXED.json)
-                    starts = np.concatenate(([0], bnd))
-                    ends = np.concatenate((bnd, [cell_s.shape[0]]))
-                    Cq_s, nid_s, cs_s = Cq[order], nid[order], cs[order]
-                    for s, e in zip(starts, ends):
-                        qsel = np.flatnonzero(allow_b[cell_s[s]])
-                        if qsel.size == 0:
-                            continue
-                        nid_sub = nid_s[s:e]
-                        dots = Cq_s[s:e] @ Qq_b[qsel].T
-                        approx = (dots.astype(np.float64)
-                                  * cs_s[s:e, None]) * qs_b[None, qsel]
-                        approx[nid_sub[:, None]
-                               == ids_b[qsel][None, :]] = -np.inf
-                        emit(nid_sub, approx, qsel)
-                else:
-                    # cell-MIXED batch (self-contained in-memory form:
-                    # a few rows per distinct cell): one BLAS GEMM +
-                    # row mask. The mask-loop form measured 27.6 s vs
-                    # 2.8 s at 2M x 1.4k cells; the argsort-slice form
-                    # closed that to within noise (83.6 vs 84.8 s at
-                    # 2.4 rows/cell, SCALE_ANN_MIXED.json — the
-                    # in-memory scan is assignment/quantize-bound), so
-                    # the gate errs toward the single GEMM — same
-                    # admitted candidates either way
-                    dots = Cq @ Qq_b.T
-                    approx = (dots.astype(np.float64)
-                              * cs[:, None]) * qs_b[None, :]
-                    approx[~allow_b[cell]] = -np.inf
-                    approx[nid[:, None] == ids_b[None, :]] = -np.inf
-                    emit(nid, approx, np.arange(ids_b.shape[0]))
         if bq:
             qcat = np.concatenate(bq)
             ncat = np.concatenate(bn)
@@ -1915,92 +1839,10 @@ def _int8_scan_kernel(bc, r_cut: int):
     return scan
 
 
-def ann_int8_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
-                  rescore: int = 3,
-                  vec_col: str = "embedding", id_col: str = "vec_id",
-                  max_queries: int = ANN_INT8_MAX_QUERIES,
-                  prequantized: DataFrame | None = None) -> DataFrame:
-    """Quantized-scan ANN top-k: first-pass candidate search over the
-    INT8 store (:func:`quantize_int8`), exact float cosine rescore of
-    only ``k * rescore`` candidates per query. Same output contract as
-    :func:`brute_force_topk`: (query_id, neighbor_id, sim_q6),
-    self-matches excluded, ties broken by neighbor_id.
-
-    Why this exists at 100 TB: the scan — the term that touches every
-    byte — reads the int8 table (4x smaller than float32), and the
-    float vectors are fetched only for the candidate set (|queries| x
-    k x rescore rows). The first pass runs as ONE Arrow map pass over
-    the quantized corpus: the quantized query matrix broadcasts
-    (contract-capped like the decontamination eval side), each task
-    computes exact-integer dot products via a numpy int64 matmul, and
-    emits only its PER-PARTITION top ``k * rescore`` ids per query —
-    the distributive-top-k property means the global cut over
-    (partitions x queries x R) skinny rows is exact. Corpus vectors
-    never shuffle; int8 codes never leave their task.
-
-    Cross-engine determinism: integer dots are exact (|dot| <=
-    dims x 127² << 2^53); the ranking score is (double)qdot * c_scale
-    * q_scale evaluated left-to-right on both engines; the rescore is
-    the family's sequential-fold cos_q6. A query id listed in
-    ``queries`` must exist with the same vector in DuckDB's view of the
-    data for the oracle to agree (the registry uses vec_id < N).
-
-    Composes with IVF: at cluster scale, store the int8 codes bucketed
-    by :func:`ivf_cell` and run this scan per probed cell — the scan
-    term then drops by nprobe/cells on top of the 4x byte win.
-
-    ``prequantized``: the stored-index form — a frame of (id, scale, q)
-    materialized once by :func:`quantize_int8` at write time; when
-    given, the scan reads it directly (the int8-at-rest shape; corpus
-    floats are then touched only by the rescore join). When ``None``
-    the scan reads ``corpus``'s float vectors and quantizes INSIDE the
-    Arrow kernel with the identical floor((x*127)/safe + 0.5) double
-    math — never via quantize_int8's column expression, whose HOF tree
-    is interpreted (CodegenFallback) and measured 74 s over 200k
-    vectors where the numpy pass is milliseconds (SCALE_ANN.json).
-    """
-    qrows = (queries.select(F.col(id_col), F.col(vec_col))
-             .limit(max_queries + 1).collect())
-    if len(qrows) > max_queries:
-        raise ValueError(
-            f"query set exceeds max_queries={max_queries}: the "
-            f"broadcast quantized-scan path is for bounded query "
-            f"batches; for corpus-sized query sides use "
-            f"semantic_dedup / embedding_near_dups.")
-    if not qrows:
-        return corpus.sparkSession.createDataFrame(
-            [], "query_id long, neighbor_id long, sim_q6 long")
-    q_ids = np.array([r[0] for r in qrows], dtype=np.int64)
-    Qf = np.array([r[1] for r in qrows], dtype=np.float64)
-    # the same quantization quantize_int8 computes, in numpy (shared
-    # with the scan-side kernel quantization — one formula, one place)
-    Qq, q_scale = _int8_quantize_np(Qf)
-    bc = corpus.sparkSession.sparkContext.broadcast(
-        (q_ids, Qq, q_scale))
-    r_cut = k * rescore
-    scan = _int8_scan_kernel(bc, r_cut)
-
-    if prequantized is not None:
-        # the stored-index form: (id, scale, q) materialized once by
-        # quantize_int8 at write time — the true int8-at-rest scan
-        qc = prequantized.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col("scale").alias("c_scale"), F.col("q").alias("c_q"))
-    else:
-        # self-contained form: read floats, quantize inside the Arrow
-        # kernel (never via the interpreted column-HOF tree)
-        qc = corpus.select(F.col(id_col).alias("neighbor_id"),
-                           F.col(vec_col).alias("c_vec"))
-    part_top = qc.mapInPandas(
-        scan, schema="query_id long, neighbor_id long, approx double")
-    return _int8_cut_and_rescore(part_top, corpus, queries, k, r_cut,
-                                 vec_col, id_col)
-
-
 def _int8_cut_and_rescore(part_top: DataFrame, corpus: DataFrame,
                           queries: DataFrame, k: int, r_cut: int,
                           vec_col: str, id_col: str) -> DataFrame:
-    """Shared tail of the quantized-scan ANN family: global top-R cut
+    """Tail of :func:`ann_ivf_int8_topk`: global top-R cut
     over the skinny per-partition candidates, then exact float cos_q6
     rescore of only those candidates, per-query top-k."""
     w1 = Window.partitionBy("query_id").orderBy(
@@ -2032,16 +1874,24 @@ def ann_ivf_int8_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
                       vec_col: str = "embedding", id_col: str = "vec_id",
                       max_queries: int = ANN_INT8_MAX_QUERIES,
                       index_path: str | None = None,
-                      gather_min_rows_per_cell: int | None = None,
                       filter_ids=None,
                       filter_pred: Column | None = None) -> DataFrame:
-    """The composed 100 TB ANN path: IVF cell PRUNING on top of the
-    INT8 quantized scan — each corpus vector is scored for a query only
-    if its (single-assign) cell is among the query's ``nprobe`` probed
-    cells, scoring runs as the exact-integer numpy GEMM of
-    :func:`ann_int8_topk`, and float vectors are touched only to
-    rescore k x rescore candidates per query. Same output contract as
-    :func:`ivf_topk` / :func:`brute_force_topk`.
+    """The in-memory and at-rest ANN entry: IVF cell PRUNING on top
+    of the INT8 quantized scan — each corpus vector is scored for a
+    query only if its (single-assign) cell is among the query's
+    ``nprobe`` probed cells, scoring is an exact-integer numpy GEMM
+    against the broadcast quantized query matrix, and float vectors
+    are touched only to rescore k x rescore candidates per query. Same
+    output contract as :func:`brute_force_topk`: (query_id,
+    neighbor_id, sim_q6), self-matches excluded, ties broken by
+    neighbor_id. ``nprobe=len(centroids)`` is the unpruned int8 scan;
+    with ``rescore`` >= ceil(N/k) as well, the result equals
+    :func:`brute_force_topk` row for row.
+
+    Cross-engine determinism: integer dots are exact (|dot| <=
+    dims x 127² << 2^53); the ranking score is (double)qdot * c_scale
+    * q_scale evaluated left-to-right on both engines; the rescore is
+    the family's sequential-fold cos_q6.
 
     Cost at scale multiplies the two wins, and with ``index_path`` BOTH
     are realized in the plan, not just documented: the scan reads ONLY
@@ -2062,13 +1912,15 @@ def ann_ivf_int8_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
     kernel (same per-cell gather, so the flops cut still applies; the
     byte/partition cut needs the at-rest index).
 
-    The probe sets are computed by the SAME :func:`ivf_probe_cells`
-    pandas_udf the exact IVF path uses (collected with the query
-    vectors — the contract-capped driver-side set), so tie-breaking and
-    assignment degeneracies mirror :func:`ivf_topk` and the DuckDB
-    oracle exactly. ``centroids=None`` loads the matrix the index was
+    The probe sets are computed by the SAME kernel as the
+    :func:`ivf_probe_cells` pandas_udf (driver-side, on the collected
+    contract-capped query set), so tie-breaking and assignment
+    degeneracies mirror :func:`ivf_cell` and the DuckDB oracle
+    exactly. ``centroids=None`` loads the matrix the index was
     WRITTEN with when ``index_path`` is given, else trains on the
-    corpus (:func:`ivf_train_centroids`); explicitly-passed centroids
+    corpus (:func:`ivf_train_centroids` — per-corpus training is where
+    IVF recall lives; a snapshot trained on another corpus scores at
+    md5-centroid recall, SCALE.md); explicitly-passed centroids
     against a stored index are VALIDATED against its ``_meta`` stamp
     (one 1-row read — foreign geometry would silently probe the wrong
     cells), and the probe-mask size always derives from the resolved
@@ -2148,20 +2000,9 @@ def ann_ivf_int8_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
     for j in range(len(qrows)):
         for c in probe_rows[j]:
             allowed[c, j] = True
-    payload = (q_ids, Qq, q_scale, allowed)
-    sel = _resolve_filter_ids(filter_ids, id_col)
-    if sel is not None:
-        # positional payload: the allow-set sits past the gather-gate
-        # slot, so the gate must be materialized when filtering
-        payload = payload + (
-            gather_min_rows_per_cell
-            if gather_min_rows_per_cell is not None
-            else ANN_GATHER_MIN_ROWS_PER_CELL, sel)
-    elif gather_min_rows_per_cell is not None:
-        # measurement override for the gather/full-GEMM gate
-        # (tools/ann_mixed_bench.py); same candidates either branch
-        payload = payload + (gather_min_rows_per_cell,)
-    bc = spark.sparkContext.broadcast(payload)
+    bc = spark.sparkContext.broadcast(
+        (q_ids, Qq, q_scale, allowed,
+         _resolve_filter_ids(filter_ids, id_col)))
     r_cut = k * rescore
     scan = _int8_scan_kernel(bc, r_cut)
 

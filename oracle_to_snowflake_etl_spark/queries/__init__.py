@@ -66,171 +66,22 @@ from . import sampling_q  # noqa: E402,F401
 # is covered by tools/full_correctness.py (CORRECTNESS_FULL_LOCAL.json) and
 # pytest.
 PRIORITY = [
-    # Reference parity (S/P/J/A/O/F core). Round-8 rotation (verdict r7
-    # #4): daily_trend, creative_perf_topk, project_rename_format moved
-    # to full-local (long-stable floor-class scan-agg/projection, all
-    # pytest-covered); their slots carry pit_join_purchases,
-    # text_repeated_spans, dedup_ngram_jaccard_auto below.
-    # (round-13 rotation, VERDICT r12 ask #7: count_recon, zorder_orders,
-    # json_props, sketch_hll_custkey, sample_stratified_lang move to
-    # full-local — all floor-class and long-stable (count_recon/json_props
-    # since r2, zorder/sketch since r3-4), each family keeps another
-    # driver slot or a pytest plan-assert. Their slots carry the two
-    # round-13 registrations (ann_ivf_int8_append, purge_ann_index —
-    # VERDICT r12 Missing #1/#2 under the hard signal) and the three
-    # rotate-backs the verdict named: text_repeated_spans,
-    # funnel_view_click_purchase, ev_gapfill_hourly.)
-    "kpi_derive", "top_spenders_14d",
-    "incremental_anti",
-    "revenue_by_nation", "recon_fingerprint_lineitem",
-    # Mutation / temporal / layout / skew / graph / entity operators
-    # (round-12: purge_propagation joins the mutation family — the
-    # compliance purge's partition-scoped rewrite + emptied-dir
-    # removal under the driver's hard signal, VERDICT r11 ask #2;
-    # round-13: purge_ann_index — the forget request applied to the
-    # DERIVED binary-packed ANN index store)
-    # (round-14 rotation, VERDICT r13 ask #7: purge_ann_index_streamed
-    # — the in-place purge on the LIVE streamed batch=/cell= store,
-    # Missing #1 — and cdc_snapshot_diff (rotate-back) join; the
-    # round-13 mutation/index trio and purge_propagation stay per the
-    # verdict. Rotated to full-local: range_join_promo +
-    # pit_join_purchases (temporal family keeps asof + scd2; both
-    # long-stable since r3/r6) and salted_join_nation (skew family
-    # keeps skew_report_custkey; salting is pytest plan-asserted).)
-    "merge_upsert_orders", "purge_propagation", "purge_ann_index",
-    "purge_ann_index_streamed", "cdc_snapshot_diff",
-    "asof_click_attribution",
-    "scd2_user_status",
-    "pagerank_supplier_orders", "fuzzy_name_pairs",
-    # Dedup family (dedup_simhash rotated to full-local in round 5;
-    # dedup_exact rotated to full-local in round 6 — its slot carries
-    # dedup_containment_scale, the round-6 top-item scale-safe path,
-    # so the hot-key-window fix sits under the driver's hard signal
-    # alongside the window-path originals the verdict pinned)
-    # (round-15 rotation, VERDICT r14 ask #7: the round-15
-    # registrations — ann_ivf_int8_filtered (attribute-filtered ANN,
-    # Missing #1) and mv_hll_refresh (HLL distinct-count MV, Missing
-    # #3) — plus three long-dormant rotate-backs the verdict named
-    # (recursive_key_depth, pivot_priority_status, hist_order_totals).
-    # Rotated to full-local: dedup_containment_scale +
-    # dedup_ngram_jaccard (both stable since r6/r2; containment keeps
-    # its incr slot, ngram keeps the auto decision path),
-    # mm_audio_features (stable since r10; audio keeps
-    # mm_audio_neardup_incr), emb_cell_sample (stable since r12,
-    # pytest-covered), and the two r13 rotate-backs cycling out again
-    # (text_repeated_spans, ev_gapfill_hourly).)
-    "dedup_minhash_lsh",
-    "dedup_containment_incr",
-    "dedup_clusters",
-    # round-8: the auto decision path under the hard driver signal,
-    # alongside the pinned window/scale originals; dedup_containment_drop
-    # rotated to full-local (containment keeps its scale + incr driver
-    # slots; drop is pytest-covered) — its slot carries the round-8
-    # SemDeDup embedding-space dedup family's representative
-    "dedup_ngram_jaccard_auto", "dedup_semantic",
-    # round-12 rotation (VERDICT r11 ask #3): dedup_semantic_keep_best
-    # joins the dedup family's driver slots
-    "dedup_semantic_keep_best",
-    # Similarity / embeddings (ann_brute_topk rotated to full-local in
-    # round 11 — it is the pinned brute-force BASELINE, unchanged since
-    # round 3; its slot carries mm_audio_features, the round-10/11
-    # audio feature extractor whose oracle now exercises the
-    # zero-crossing branch via the high-byte PCM family — VERDICT r10
-    # asks #5 and #7)
-    # (round-12 rotation, VERDICT r11 ask #3: ann_ivf_topk and
-    # emb_label_centroids move to full-local — the exact IVF path is
-    # recall-pytested and its probe machinery is exercised harder by
-    # the composed indexed form; emb_label_centroids is a long-stable
-    # grouped agg. Their slots carry ann_int8_topk, ann_ivf_int8_topk
-    # (the at-rest indexed form since r12), and emb_cell_sample.)
-    # (round-13: ann_ivf_int8_append — the grown base+appended store
-    # must be indistinguishable from indexed-at-once, VERDICT r12
-    # Missing #1)
-    # (round-14: mv_join_dim_refresh takes ann_srp_neardup's slot —
-    # stable since r8, recall-pytested; SRP keeps ann_srp_incremental
-    # full-local.) ann_int8_topk and ann_ivf_topk hold the two
-    # in-memory ANN operators' slots beside the at-rest int8 store.
-    "ann_int8_topk", "ann_ivf_topk", "ann_ivf_int8_topk",
-    "ann_ivf_int8_append", "ann_ivf_int8_filtered",
-    "mv_join_dim_refresh",
-    # Text analysis (text_quality_filter stays full-local-checked; its
-    # slot carries the round-4 MV-maintenance family instead)
-    # (text_lang_id rotated to full-local in round 11 — floor-class
-    # column expressions, stable since round 3, text family keeps five
-    # driver slots; its slot carries mm_audio_neardup_incr, the newest
-    # stored-index incremental through the shared Jaccard core —
-    # VERDICT r10 ask #7)
-    # (round-14: mv_join_refresh — join-view incremental maintenance,
-    # VERDICT r13 Missing #4 — joins the MV family; text_lang_id
-    # rotates BACK in per ask #7 (out since r11, cycling); their
-    # slots come from text_winnow_fp (winnowing guarantee is
-    # property-pinned; text keeps four driver slots) and
-    # stat_trend_daily_revenue (long-stable exact-sum OLS, full-local
-    # + pytest since r5).)
-    "text_quality_features", "mm_audio_neardup_incr",
+    "kpi_derive", "top_spenders_14d", "incremental_anti", "revenue_by_nation",
+    "recon_fingerprint_lineitem", "merge_upsert_orders", "purge_propagation",
+    "purge_ann_index", "purge_ann_index_streamed", "cdc_snapshot_diff",
+    "asof_click_attribution", "scd2_user_status", "pagerank_supplier_orders",
+    "fuzzy_name_pairs", "dedup_minhash_lsh", "dedup_containment_incr",
+    "dedup_clusters", "dedup_ngram_jaccard_auto", "dedup_semantic",
+    "dedup_semantic_keep_best", "ann_int8_topk", "ann_brute_topk",
+    "ann_ivf_int8_topk", "ann_ivf_int8_append", "ann_ivf_int8_filtered",
+    "mv_join_dim_refresh", "text_quality_features", "mm_audio_neardup_incr",
     "mv_incremental_refresh", "mv_join_refresh", "mv_hll_refresh",
-    "text_lang_id",
-    # (text_corpus_quantiles + pii_redact_contacts rotated to full-local
-    # in round 5; their slots carry the r4 skew-diagnosis + exact-sum
-    # stats family)
-    # (stat_gini rotated to full-local in round 6; its slot carries the
-    # REAL-image-decode round trip so the PNG capability is
-    # driver-verified, per the r5 verdict's item 5)
-    # (text_repeated_spans rotated to full-local in round 12 — rotated
-    # in at r8, stable since, pytest-covered; the text family keeps
-    # five driver slots)
-    # (round-13: text_repeated_spans rotates BACK in per VERDICT r12
-    # ask #7 — long-unexercised entries keep cycling through the gate)
-    "skew_report_custkey", "text_decontaminate",
+    "text_lang_id", "skew_report_custkey", "text_decontaminate",
     "mm_image_png_roundtrip", "text_bm25_topk", "corpus_prep_pipeline",
-    # Multimodal (mm_byte_stats stays full-local-checked; its slot
-    # carries the round-4 incremental ingest composition instead)
-    # (mm_frame_sample rotated to full-local in round 5; slot carries
-    # the exact-sum OLS trend)
-    # (mm_image_features rotated to full-local in round 9 — floor-class
-    # mapInPandas, pytest-covered; its slot carries the composed
-    # multimodal pipeline so the catalog->gate->image-keep-best->video
-    # composition sits under the driver's hard signal, VERDICT r8 #4)
-    # (mm_catalog rotated to full-local in round 10 — floor-class
-    # projection, pytest-covered, and its byte-length convention is
-    # exercised inside mm_ingest_pipeline's gate; its slot carries the
-    # composed INCREMENTAL multimodal ingest, VERDICT r9 ask #3)
-    "mm_ingest_incremental", "ingest_batch_pipeline",
-    "mm_ingest_pipeline",
-    # Windows / event-time (w_range_1h_value stays full-local-checked;
-    # its slot carries the mergeable-sketch family instead)
-    # (ev_tumbling_5m rotated to full-local in round 5 — the event-time
-    # family keeps ev_sessions + ev_gapfill_hourly driver slots)
-    # (ev_gapfill_hourly + funnel_view_click_purchase rotated to
-    # full-local in round 12 — the event-time/window family keeps
-    # ev_sessions, w_running_spend, and stream_session_windows driver
-    # slots; both rotated-out queries are long-stable and
-    # pytest-covered)
-    # (round-13: ev_gapfill_hourly + funnel_view_click_purchase rotate
-    # BACK in per VERDICT r12 ask #7 — rotated out in r12, cycling;
-    # w_running_spend to full-local — long-stable running-sum window,
-    # its slot carries stream_ann_index_maintain, the round-13
-    # streaming serving-index fold)
-    # (round-14: ev_ohlc_hourly rotates BACK in per ask #7;
-    # funnel_view_click_purchase holds the funnel operator's slot)
+    "mm_ingest_incremental", "ingest_batch_pipeline", "mm_ingest_pipeline",
     "ev_sessions", "ev_ohlc_hourly", "funnel_view_click_purchase",
-    "stream_ann_index_maintain",
-    # round-16 rotation (VERDICT r15 ask #8): the r15 registrations
-    # (filtered ANN, HLL MV) keep their slots one more round; the r15
-    # rotate-backs (recursive_key_depth, pivot_priority_status,
-    # hist_order_totals) cycle back to full-local after their round
-    # under the gate (the r13->r15 precedent), and three of the
-    # LONGEST-dormant full-local entries rotate in: pii_redact_contacts
-    # + text_corpus_quantiles (both out since round 5) and dedup_exact
-    # (out since round 6).
-    "pii_redact_contacts", "text_corpus_quantiles", "dedup_exact",
-    # TPC-H representative (full 22-query suite keeps full-local oracle
-    # coverage in registration order below)
-    "tpch_q1_pricing",
-    # Streaming / semi-structured / sampling. stream_attrib_outer is the
-    # left-outer stream-stream join — the hardest streaming semantics
-    # (NULL rows are watermark-eviction proofs), promoted to a
-    # driver-verified slot in round 4 in place of the second TPC-H rep.
+    "stream_ann_index_maintain", "pii_redact_contacts",
+    "text_corpus_quantiles", "dedup_exact", "tpch_q1_pricing",
     "stream_session_windows", "stream_attrib_outer",
 ]
 

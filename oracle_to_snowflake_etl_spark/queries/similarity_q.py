@@ -21,7 +21,6 @@ from ..operators.similarity import (
     SRP_PLANES,
     brute_force_topk,
     embedding_near_dups,
-    ivf_topk,
     plane_weights,
     semantic_cell_report,
     semantic_dedup,
@@ -110,20 +109,21 @@ def _duck_srp_sql() -> str:
     """
 
 
-def _duck_ivf_sql() -> str:
-    """DuckDB oracle for IVF top-k. DuckDB cannot train k-means, so the
-    oracle embeds the committed training snapshot
-    (similarity_snapshot.IVF_SNAPSHOT, regenerated bit-for-bit by
-    tools/train_ivf_snapshot.py) as a literal — and the registered Spark
-    query passes the SAME snapshot explicitly (q_ann_ivf_topk below), so
-    both sides hold the identical matrix at EVERY sf_dir and the mirror
-    is corpus-independent. The operator's shipped default
-    (centroids=None) still trains per corpus — that is where IVF recall
-    lives — but the differential contract pins the geometry. Cell
-    assignment is argmax-cosine with first-index tie-break
-    (list_position of the max), probes ranked (sim DESC, cell ASC) —
-    the exact mirror of operators/similarity ivf_cell /
-    ivf_probe_cells."""
+def _duck_centroid_sims() -> tuple[str, str]:
+    """The pinned-centroid fragment shared by the IVF and semantic
+    oracles: ``(c_lit, sims)``, where ``c_lit`` is the committed
+    training snapshot (similarity_snapshot.IVF_SNAPSHOT, regenerated
+    bit-for-bit by tools/train_ivf_snapshot.py) as a literal for a
+    ``cents AS (SELECT {c_lit} AS C)`` CTE, and ``sims`` is the per-row
+    list of cosines of ``embedding`` against every centroid. DuckDB
+    cannot train k-means, so the registered Spark queries pass the SAME
+    snapshot explicitly and both sides hold the identical matrix at
+    EVERY sf_dir — the mirror is corpus-independent. The operators'
+    shipped default (centroids=None) still trains per corpus; the
+    differential contract pins the geometry. Cell assignment is
+    argmax-cosine with first-index tie-break (list_position of the
+    max), probes ranked (sim DESC, cell ASC) — the exact mirror of
+    operators/similarity ivf_cell / ivf_probe_cells."""
     cs = IVF_SNAPSHOT
     c_lit = "[" + ", ".join(
         "[" + ", ".join(repr(w) for w in row) + "]" for row in cs) + "]"
@@ -138,57 +138,20 @@ def _duck_ivf_sql() -> str:
              "(p, q) -> p + q)")
     sims = (f"list_transform(range(0, {IVF_CELLS}), c -> "
             f"{dot_vc} / sqrt({nsq_v} * {nsq_c}))")
-    return f"""
-    WITH cents AS (SELECT {c_lit} AS C),
-    corpus AS (
-      SELECT vec_id AS neighbor_id, embedding AS c_vec,
-             list_position(sims, list_max(sims)) - 1 AS cell
-      FROM (SELECT vec_id, embedding, {sims} AS sims
-            FROM embeddings, cents)
-    ),
-    qsims AS (
-      SELECT vec_id AS query_id, embedding AS q_vec, {sims} AS sims
-      FROM embeddings, cents
-      WHERE vec_id < {N_QUERIES}
-    ),
-    qprobe AS (
-      SELECT query_id, q_vec, c AS cell
-      FROM qsims, (SELECT UNNEST(range(0, {IVF_CELLS})) AS c)
-      QUALIFY row_number() OVER (
-          PARTITION BY query_id
-          ORDER BY sims[c + 1] DESC, c ASC) <= {IVF_NPROBE}
-    )
-    SELECT query_id, neighbor_id, {_duck_cos_q6('q_vec', 'c_vec')} AS sim_q6
-    FROM corpus JOIN qprobe USING (cell)
-    WHERE query_id != neighbor_id
-    QUALIFY row_number() OVER (
-        PARTITION BY query_id
-        ORDER BY {_duck_cos_q6('q_vec', 'c_vec')} DESC, neighbor_id ASC) <= {TOP_K}
-    """
+    return c_lit, sims
 
 
 def _duck_ivf_int8_sql(corpus_where: str = "") -> str:
     """DuckDB oracle for the composed IVF + int8 path: the pinned
-    snapshot's single-assign corpus cells and nprobe query probes (the
-    _duck_ivf_sql fragments), the emb_quantize_int8 quantization, an
+    snapshot's single-assign corpus cells and nprobe query probes
+    (:func:`_duck_centroid_sims`), the emb_quantize_int8 quantization, an
     approx (double)qdot * c_scale * q_scale first-pass rank within the
     probed cells, then the family's exact cos_q6 rescore of the top
     3k candidates. ``corpus_where`` (a ``WHERE t.vec_id ...`` clause)
     restricts the CANDIDATE side only — the purge-variant oracle
     excludes forgotten ids from the index exactly where the engine's
     purge removed their packed rows."""
-    cs = IVF_SNAPSHOT
-    c_lit = "[" + ", ".join(
-        "[" + ", ".join(repr(w) for w in row) + "]" for row in cs) + "]"
-    dot_vc = ("list_reduce(list_prepend(CAST(0 AS DOUBLE), "
-              "list_transform(embedding, (x, i) -> "
-              "CAST(x AS DOUBLE) * C[c + 1][i])), (p, q) -> p + q)")
-    nsq_v = _duck_dot("embedding", "embedding")
-    nsq_c = ("list_reduce(list_prepend(CAST(0 AS DOUBLE), "
-             "list_transform(C[c + 1], (x, i) -> x * C[c + 1][i])), "
-             "(p, q) -> p + q)")
-    sims = (f"list_transform(range(0, {IVF_CELLS}), c -> "
-            f"{dot_vc} / sqrt({nsq_v} * {nsq_c}))")
+    c_lit, sims = _duck_centroid_sims()
     return f"""
     WITH cents AS (SELECT {c_lit} AS C),
     z AS (
@@ -479,44 +442,17 @@ def q_purge_ann_index(spark: SparkSession, sf_dir: str) -> DataFrame:
                              index_path=path)
 
 
-@register("ann_ivf_topk", _duck_ivf_sql())
-def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF approximate top-10 for the first 8 vectors: 64 trained cells
-    (recall@10 0.80 at the shipped per-corpus-training default,
-    SCALE.md), 24 probed per query, exact rescore of the probed ~37.5%
-    only (operators/similarity.py ivf_topk) — the partition-prunable ANN
-    scale path. Passes the committed k-means snapshot EXPLICITLY so this
-    query and its DuckDB oracle (which embeds the same matrix as a
-    literal) stay bitwise mirrors at any corpus — the operator default
-    (centroids=None, train-on-indexed-corpus) is exercised by
-    tests/test_recall.py and tools/ann_recall.py instead."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    from pyspark.sql import functions as F
-    return ivf_topk(emb, emb.where(F.col("vec_id") < N_QUERIES), k=TOP_K,
-                    centroids=IVF_SNAPSHOT)
-
-
 def _duck_semantic_sql(probes: int = 1) -> str:
     """DuckDB oracle for SemDeDup semantic dedup: identical pinned
     centroid literal (similarity_snapshot.IVF_SNAPSHOT) and cell
-    assignment as _duck_ivf_sql, within-cell pairwise quantized cosine,
-    drop rows with a lower-id near-dup in their cell, emit survivors.
+    assignment (:func:`_duck_centroid_sims`), within-cell pairwise
+    quantized cosine, drop rows with a lower-id near-dup in their
+    cell, emit survivors.
     ``probes > 1`` mirrors the multi-probe operator: each row joins its
     top-``probes`` cells (the qprobe QUALIFY pattern, ties sim DESC /
     cell ASC — exact mirror of ivf_probe_cells' stable argsort) and a
     pair drops when ANY probe cell is shared."""
-    cs = IVF_SNAPSHOT
-    c_lit = "[" + ", ".join(
-        "[" + ", ".join(repr(w) for w in row) + "]" for row in cs) + "]"
-    dot_vc = ("list_reduce(list_prepend(CAST(0 AS DOUBLE), "
-              "list_transform(embedding, (x, i) -> "
-              "CAST(x AS DOUBLE) * C[c + 1][i])), (p, q) -> p + q)")
-    nsq_v = _duck_dot("embedding", "embedding")
-    nsq_c = ("list_reduce(list_prepend(CAST(0 AS DOUBLE), "
-             "list_transform(C[c + 1], (x, i) -> x * C[c + 1][i])), "
-             "(p, q) -> p + q)")
-    sims = (f"list_transform(range(0, {IVF_CELLS}), c -> "
-            f"{dot_vc} / sqrt({nsq_v} * {nsq_c}))")
+    c_lit, sims = _duck_centroid_sims()
     if probes == 1:
         assigned = f"""
       SELECT vec_id, label, embedding,
@@ -558,7 +494,7 @@ def q_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     r9 #2: single-assign was the measured-worst recall corner), so the
     oracle mirrors two-probe visibility (the qprobe QUALIFY pattern).
     Passes the committed k-means snapshot explicitly — same
-    corpus-independent mirror contract as ann_ivf_topk; the
+    corpus-independent mirror contract as ann_ivf_int8_topk; the
     train-on-corpus default is exercised by tests/test_semantic_dedup.py
     instead; classic single-assign stays pinned as
     dedup_semantic_probe1."""
@@ -623,18 +559,7 @@ def _duck_semantic_keep_best_sql(probes: int = 2) -> str:
     _duck_semantic_sql, then recursive reachability into connected
     components and a per-component arg-max winner on the quantized L2
     norm (the text family's keep-best oracle shape, dedup_keep_best)."""
-    cs = IVF_SNAPSHOT
-    c_lit = "[" + ", ".join(
-        "[" + ", ".join(repr(w) for w in row) + "]" for row in cs) + "]"
-    dot_vc = ("list_reduce(list_prepend(CAST(0 AS DOUBLE), "
-              "list_transform(embedding, (x, i) -> "
-              "CAST(x AS DOUBLE) * C[c + 1][i])), (p, q) -> p + q)")
-    nsq_v = _duck_dot("embedding", "embedding")
-    nsq_c = ("list_reduce(list_prepend(CAST(0 AS DOUBLE), "
-             "list_transform(C[c + 1], (x, i) -> x * C[c + 1][i])), "
-             "(p, q) -> p + q)")
-    sims = (f"list_transform(range(0, {IVF_CELLS}), c -> "
-            f"{dot_vc} / sqrt({nsq_v} * {nsq_c}))")
+    c_lit, sims = _duck_centroid_sims()
     score_q6 = (f"CAST(floor({_duck_dot('embedding', 'embedding')} "
                 f"* 1000000 + 0.5) AS BIGINT)")
     return f"""
@@ -715,18 +640,7 @@ def _duck_cells_sql(probes: int = 2) -> str:
     round-10 flip): each row contributes one membership per probe cell
     (the qprobe QUALIFY pattern), so n counts memberships — exactly the
     rows the multi-probe within-cell join will see."""
-    cs = IVF_SNAPSHOT
-    c_lit = "[" + ", ".join(
-        "[" + ", ".join(repr(w) for w in row) + "]" for row in cs) + "]"
-    dot_vc = ("list_reduce(list_prepend(CAST(0 AS DOUBLE), "
-              "list_transform(embedding, (x, i) -> "
-              "CAST(x AS DOUBLE) * C[c + 1][i])), (p, q) -> p + q)")
-    nsq_v = _duck_dot("embedding", "embedding")
-    nsq_c = ("list_reduce(list_prepend(CAST(0 AS DOUBLE), "
-             "list_transform(C[c + 1], (x, i) -> x * C[c + 1][i])), "
-             "(p, q) -> p + q)")
-    sims = (f"list_transform(range(0, {IVF_CELLS}), c -> "
-            f"{dot_vc} / sqrt({nsq_v} * {nsq_c}))")
+    c_lit, sims = _duck_centroid_sims()
     if probes == 1:
         assigned = f"""
       SELECT list_position(sims, list_max(sims)) - 1 AS cell
@@ -773,18 +687,7 @@ def _duck_cell_sample_sql(fraction: float = CELL_SAMPLE_FRAC) -> str:
     md5-derived 60-bit rank, and the proportional ceil budget."""
     from ..functions.hashing import duck_hash60_sql
 
-    cs = IVF_SNAPSHOT
-    c_lit = "[" + ", ".join(
-        "[" + ", ".join(repr(w) for w in row) + "]" for row in cs) + "]"
-    dot_vc = ("list_reduce(list_prepend(CAST(0 AS DOUBLE), "
-              "list_transform(embedding, (x, i) -> "
-              "CAST(x AS DOUBLE) * C[c + 1][i])), (p, q) -> p + q)")
-    nsq_v = _duck_dot("embedding", "embedding")
-    nsq_c = ("list_reduce(list_prepend(CAST(0 AS DOUBLE), "
-             "list_transform(C[c + 1], (x, i) -> x * C[c + 1][i])), "
-             "(p, q) -> p + q)")
-    sims = (f"list_transform(range(0, {IVF_CELLS}), c -> "
-            f"{dot_vc} / sqrt({nsq_v} * {nsq_c}))")
+    c_lit, sims = _duck_centroid_sims()
     h = duck_hash60_sql(
         "'cellsample' || '|' || CAST(vec_id AS VARCHAR)")
     return f"""
@@ -933,20 +836,22 @@ def q_emb_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
         <= {TOP_K}
     """)
 def q_ann_int8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Quantized-scan ANN (operators/similarity.ann_int8_topk): the
-    candidate pass reads only the int8 store — one Arrow map pass
-    computing exact-integer dot products against the broadcast
-    quantized query matrix, emitting per-partition top-3k ids — and
-    float vectors are touched only to rescore the 3k candidates per
-    query with the family's sequential-fold cos_q6. Deterministic
-    cross-engine: integer dots are exact, the ranking score
-    (double)qdot * c_scale * q_scale multiplies left-to-right on both
-    sides, ties break on neighbor_id."""
-    from ..operators.similarity import ann_int8_topk
+    """Unpruned quantized-scan ANN: the in-memory
+    operators/similarity.ann_ivf_int8_topk with every cell probed, so
+    its oracle needs no cell assignment — one Arrow map pass computing
+    exact-integer dot products against the broadcast quantized query
+    matrix, emitting per-partition top-3k ids — and float vectors are
+    touched only to rescore the 3k candidates per query with the
+    family's sequential-fold cos_q6. Deterministic cross-engine:
+    integer dots are exact, the ranking score (double)qdot * c_scale *
+    q_scale multiplies left-to-right on both sides, ties break on
+    neighbor_id."""
+    from ..operators.similarity import ann_ivf_int8_topk
 
     emb = load_table(spark, sf_dir, "embeddings")
-    return ann_int8_topk(emb, emb.where(F.col("vec_id") < N_QUERIES),
-                         k=TOP_K, rescore=3)
+    return ann_ivf_int8_topk(emb, emb.where(F.col("vec_id") < N_QUERIES),
+                             k=TOP_K, rescore=3, nprobe=IVF_CELLS,
+                             centroids=IVF_SNAPSHOT)
 
 
 #: ingest split for the incremental SRP query — same split as the text

@@ -65,13 +65,14 @@ def test_asof_is_single_shuffle(spark, sf_dir):
 def test_lsh_candidate_paths_stay_narrow(spark, sf_dir):
     """Perf-regression locks for the round-2 rewrites: SRP-LSH re-attaches
     embeddings via broadcast-able hash joins (2 exchanges: banding +
-    pair dedup), IVF broadcasts the probe set (1 exchange: top-k
-    window), MinHash stays at its banding/pair shuffles, and the
-    DF-capped ngram plan stays bounded."""
+    pair dedup), the int8 ANN scan broadcasts its query matrix (2
+    exchanges on the unexecuted plan: candidate cut + rescore; AQE
+    re-plans after collect), MinHash stays at its banding/pair
+    shuffles, and the DF-capped ngram plan stays bounded."""
     # earlier tests may have populated the cache (CacheManager matches
     # by plan) — clear it so the asserted shapes are the cold plans
     spark.catalog.clearCache()
-    bounds = {"ann_srp_neardup": 2, "ann_ivf_topk": 1,
+    bounds = {"ann_srp_neardup": 2, "ann_int8_topk": 2,
               "dedup_minhash_lsh": 3}
     for name, bound in bounds.items():
         df = queries()[name](spark, sf_dir)

@@ -33,7 +33,7 @@ def emb(spark):
 def test_ivf_recall_at_default_nprobe(spark, emb):
     """IVF recall@10 at the SHIPPED default (nprobe=24 of 64 trained
     cells — centroids=None trains on the indexed corpus,
-    similarity.py ivf_topk) on the gate corpus: measured 0.804
+    similarity.py ann_ivf_int8_topk) on the gate corpus: measured 0.804
     (tools/ann_recall.py, 64-cell curve in SCALE.md; near-orthogonal
     random vectors are the hardest recall regime). Guard at >= 0.75
     — a tight floor under a deterministic measurement, per the
@@ -50,7 +50,7 @@ def test_ivf_trained_centroids_beat_random(spark, emb):
     default nprobe: the training pass exists to buy recall (measured
     0.804 vs 0.674 at sf0.01/nprobe=24, SCALE.md). The random arm
     passes centroid_weights(IVF_CELLS) EXPLICITLY — centroids=None
-    would train (similarity.py ivf_topk), making both arms identical
+    would train (similarity.py ann_ivf_int8_topk), making both arms identical
     and the comparison vacuous (round-7 verdict #2)."""
     from pyspark.sql import functions as F
 
@@ -115,21 +115,23 @@ def test_semantic_pair_recall_floor(spark, emb):
 
 
 def test_int8_rescored_recall_vs_exact(spark, emb):
-    """ann_int8_topk (quantized scan + float rescore of 3k candidates)
-    against the exact brute-force top-10: int8 quantization costs
-    <0.5% cosine error on unit-ish vectors, so with a 3x rescore
-    margin the result should be essentially exact. Guard overlap at
+    """ann_ivf_int8_topk with every cell probed (quantized scan +
+    float rescore of 3k candidates) against the exact brute-force
+    top-10: int8 quantization costs <0.5% cosine error on unit-ish
+    vectors, so with a 3x rescore margin the result should be
+    essentially exact. Guard overlap at
     >= 0.95 over 50 query vectors; also pin the output contract
     (k rows per query, no self matches)."""
     from pyspark.sql import functions as F
 
     from oracle_to_snowflake_etl_spark.operators.similarity import (
-        ann_int8_topk,
+        ann_ivf_int8_topk,
         brute_force_topk,
     )
 
     q = emb.where(F.col("vec_id") < 50)
-    got = ann_int8_topk(emb, q, k=10, rescore=3).collect()
+    got = ann_ivf_int8_topk(emb, q, k=10, rescore=3,
+                            nprobe=IVF_CELLS).collect()
     exact = brute_force_topk(emb, q, k=10).collect()
     by_q: dict[int, set[int]] = {}
     for r in got:
@@ -148,61 +150,46 @@ def test_int8_topk_contract_caps(spark, emb):
     from pyspark.sql import functions as F
 
     from oracle_to_snowflake_etl_spark.operators.similarity import (
-        ann_int8_topk,
+        ann_ivf_int8_topk,
     )
 
+    cents = centroid_weights(IVF_CELLS)
     with _pytest.raises(ValueError, match="max_queries"):
-        ann_int8_topk(emb, emb.limit(3), k=2, max_queries=2)
-    out = ann_int8_topk(emb, emb.where(F.lit(False)), k=2)
+        ann_ivf_int8_topk(emb, emb.limit(3), k=2, centroids=cents,
+                          max_queries=2)
+    out = ann_ivf_int8_topk(emb, emb.where(F.lit(False)), k=2,
+                            centroids=cents)
     assert out.count() == 0
     assert [f.name for f in out.schema.fields] == [
         "query_id", "neighbor_id", "sim_q6"]
 
 
-def test_int8_prequantized_store_path_equals_float_path(spark, emb):
-    """The stored-index form (prequantized (id, scale, q) from
-    quantize_int8 at write time) must return exactly the float-input
-    kernel-quantization path's result — same formula, two entrances."""
-    from pyspark.sql import functions as F
-
-    from oracle_to_snowflake_etl_spark.operators.similarity import (
-        ann_int8_topk,
-        quantize_int8,
-    )
-
-    q = emb.where(F.col("vec_id") < 20)
-    store = emb.select("vec_id", *quantize_int8(F.col("embedding")))
-    a = {tuple(r) for r in ann_int8_topk(emb, q, k=5).collect()}
-    b = {tuple(r) for r in
-         ann_int8_topk(emb, q, k=5, prequantized=store).collect()}
-    assert a == b and len(a) == 20 * 5
-
-
 def test_ivf_int8_composed_recall(spark, emb):
     """ann_ivf_int8_topk: the composed IVF-pruned quantized scan must
-    hold recall near the exact-rescore IVF path's (same probed-cell
-    candidate relation; the int8 first pass only risks the approx cut
-    boundary at 3x margin). Exact IVF floor is 0.75; guard the
-    composition at >= 0.72 over 50 queries, and pin that it never
-    BEATS exact IVF (its candidates are a subset of the probed set)."""
+    hold recall at the default nprobe (measured 0.804 over 50 queries;
+    guard >= 0.72 — the int8 first pass only risks the approx cut
+    boundary at 3x margin). With every cell probed and a rescore
+    margin covering the whole corpus, no candidate is cut, so the
+    result must equal exact brute force ROW FOR ROW (sims included)."""
+    import math
+
     from pyspark.sql import functions as F
 
     from oracle_to_snowflake_etl_spark.operators.similarity import (
         ann_ivf_int8_topk,
         brute_force_topk,
-        ivf_topk,
     )
 
     q = emb.where(F.col("vec_id") < 50)
-    exact = {(r.query_id, r.neighbor_id)
-             for r in brute_force_topk(emb, q, k=10).collect()}
+    exact_rows = {tuple(r) for r in brute_force_topk(emb, q, k=10).collect()}
+    exact = {(qid, nid) for qid, nid, _ in exact_rows}
     got = {(r.query_id, r.neighbor_id)
            for r in ann_ivf_int8_topk(emb, q, k=10,
                                       nprobe=IVF_NPROBE).collect()}
-    ivf = {(r.query_id, r.neighbor_id)
-           for r in ivf_topk(emb, q, k=10, nprobe=IVF_NPROBE).collect()}
     assert len(got & exact) / len(exact) >= 0.72
-    assert len(got & exact) <= len(ivf & exact)
+    full = ann_ivf_int8_topk(emb, q, k=10, nprobe=IVF_CELLS,
+                             rescore=math.ceil(emb.count() / 10))
+    assert {tuple(r) for r in full.collect()} == exact_rows
 
 
 def test_ivf_int8_indexed_equals_inmemory_and_prunes(spark, emb, tmp_path):
@@ -264,11 +251,10 @@ def test_int8_ann_ids_above_2_53_exact(spark, emb):
     """Ids ride the quantized kernels in parallel int64 arrays (round
     12): ids in the hash60 range that a float64 round-trip would
     corrupt (>= 2^53, where doubles lose integer exactness) must come
-    back bit-exact from both the flat and the composed scan."""
+    back bit-exact from the composed scan."""
     from pyspark.sql import functions as F
 
     from oracle_to_snowflake_etl_spark.operators.similarity import (
-        ann_int8_topk,
         ann_ivf_int8_topk,
         ivf_train_centroids,
     )
@@ -278,16 +264,14 @@ def test_int8_ann_ids_above_2_53_exact(spark, emb):
     q = big.where(F.col("vec_id") < off + 5)
     cents = ivf_train_centroids(big)
     n_vecs = emb.count()
-    for got in (ann_int8_topk(big, q, k=5).collect(),
-                ann_ivf_int8_topk(big, q, k=5,
-                                  centroids=cents).collect()):
-        assert len(got) == 25
-        for r in got:
-            # exact int64 ids: the odd +1 in the offset survives (a
-            # float64 round-trip would collapse off+i to 2^60 + even)
-            assert (r.query_id - off) in range(5)
-            assert 0 <= (r.neighbor_id - off) < n_vecs
-            assert r.neighbor_id != r.query_id
+    got = ann_ivf_int8_topk(big, q, k=5, centroids=cents).collect()
+    assert len(got) == 25
+    for r in got:
+        # exact int64 ids: the odd +1 in the offset survives (a
+        # float64 round-trip would collapse off+i to 2^60 + even)
+        assert (r.query_id - off) in range(5)
+        assert 0 <= (r.neighbor_id - off) < n_vecs
+        assert r.neighbor_id != r.query_id
 
 
 def test_ivf_int8_append_equals_index_at_once(spark, emb, tmp_path):

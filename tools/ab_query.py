@@ -12,7 +12,7 @@ GC'd between runs (bench.py's leak discipline). Reports best + median
 rewards a lucky quiet window, the driver's single shot IS one sample).
 
 Usage:
-  python tools/ab_query.py ann_ivf_topk salted_join_nation \
+  python tools/ab_query.py ann_ivf_int8_topk salted_join_nation \
       [--sf-dir DIR] [--rounds N]
 Writes nothing; prints a table to paste into PLANS.md.
 """

@@ -5,9 +5,10 @@ comparable across decades of one run, not across hosts). All query
 timings are BEST-OF-2 within the sweep (VERDICT r11 Wrong #3: runs=1
 decade ratios sit inside host noise).
 
-- ann_int8_topk: the quantized scan is O(N x |queries|) integer GEMM in
-  one map pass + a skinny candidate shuffle, so its decade ratio should
-  track the scan (~x5, x2 per step / parallelism slack).
+- ann_ivf_int8_topk in memory with every cell probed: the unpruned
+  quantized scan is O(N x |queries|) integer GEMM in one map pass + a
+  skinny candidate shuffle, so its decade ratio should track the scan
+  (~x5, x2 per step / parallelism slack).
 - ann_ivf_int8_topk over a write_ivf_int8_index store (round 12): the
   probed-cell partition pruning means the scan opens ~|probed|/cells of
   the directories AND reads int8 codes instead of floats — at the same
@@ -63,7 +64,6 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from oracle_to_snowflake_etl_spark.operators.similarity import (
-        ann_int8_topk,
         ann_ivf_int8_topk,
         emb_cell_sample,
         ivf_train_centroids,
@@ -86,7 +86,9 @@ def main() -> None:
 
         q = emb.where(F.col("vec_id") < args.n_queries)
         t_ann, n_ann = best_of(
-            args.runs, lambda: ann_int8_topk(emb, q, k=args.k).count())
+            args.runs,
+            lambda: ann_ivf_int8_topk(emb, q, k=args.k, nprobe=cells,
+                                      centroids=cents).count())
         spark.catalog.clearCache()
 
         idx = tempfile.mkdtemp(prefix="ann_scale_idx_") + "/index"

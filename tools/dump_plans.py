@@ -52,12 +52,12 @@ HEADLINERS = [
      "row_number over the doc partition marks each doc's lossless "
      "prefix, max-over-h marks shingles occurring in >=1 prefix (the "
      "lossless containing-side bound); one hash-join + exact rescore."),
-    ("ann_ivf_topk",
-     "Corpus never shuffles: cell assignment (64 trained cells, nprobe "
-     "24 — recall@10 0.81, SCALE.md curve) is one Arrow pass, probe set "
-     "broadcasts, one top-k window on query id; the registered query "
-     "pins the committed centroid snapshot so the DuckDB mirror is "
-     "corpus-independent."),
+    ("ann_ivf_int8_topk",
+     "Corpus never shuffles: the scan reads only the probed cells' "
+     "partitions of the int8 store (PartitionFilters), the quantized "
+     "query matrix and probe mask ride one broadcast, each task emits "
+     "its top k x rescore ids per query, and only those skinny "
+     "candidate rows shuffle for the cut and the float rescore."),
     ("asof_click_attribution",
      "Union + single window sort (<=1 exchange) — the inequality-join "
      "formulation would plan BroadcastNestedLoopJoin."),

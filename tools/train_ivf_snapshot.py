@@ -2,11 +2,11 @@
 """Regenerate the committed IVF centroid snapshot
 (oracle_to_snowflake_etl_spark/operators/similarity_snapshot.py).
 
-The shipped ANN default (ivf_topk centroids=None) TRAINS on the corpus
-it indexes — deterministic spherical k-means
+The shipped ANN default (ann_ivf_int8_topk centroids=None) TRAINS on
+the corpus it indexes — deterministic spherical k-means
 (operators/similarity.ivf_train_centroids: lowest-hash sample,
 md5-matrix init, fixed Lloyd's iterations). DuckDB cannot train, so the
-ann_ivf_topk oracle embeds this snapshot: the training output ON THE
+IVF and semantic oracles embed this snapshot: the training output ON THE
 sf0.01 GATE CORPUS, byte-identical to what the Spark query derives at
 runtime there (training is deterministic). Regenerate whenever the gate
 testdata changes. Do NOT ship this snapshot as a cross-corpus default —
@@ -52,7 +52,7 @@ def main() -> None:
 Deterministic spherical k-means over the {os.path.basename(sf_dir)}
 embeddings corpus (ivf_train_centroids: lowest-hash sample of 4096,
 md5-matrix init, 10 Lloyd's iterations, cosine assignment). This is
-the ORACLE's mirror of ivf_topk's train-on-the-corpus default at the
+the ORACLE's mirror of ann_ivf_int8_topk's train-on-the-corpus default at the
 correctness-gate corpus — DuckDB cannot run k-means, so it embeds the
 training output as a literal; determinism makes the two identical at
 the gate SF. Not used by the Spark operators themselves (they train
