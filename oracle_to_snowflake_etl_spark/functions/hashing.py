@@ -54,8 +54,3 @@ def quantize_sql(expr: str, scale: int = 1_000_000) -> str:
     hash-comparable across engines (operators/similarity.py).
     """
     return f"cast(floor(cast({expr} as double) * {scale} + 0.5) as bigint)"
-
-
-def duck_quantize_sql(expr: str, scale: int = 1_000_000) -> str:
-    """DuckDB mirror of :func:`quantize_sql`."""
-    return f"CAST(floor(CAST({expr} AS DOUBLE) * {scale} + 0.5) AS BIGINT)"

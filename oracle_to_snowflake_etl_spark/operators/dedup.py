@@ -82,9 +82,8 @@ def shingled_docs(df: DataFrame, text_col: str = "text",
     over one corpus computes the (dominant) tokenize→shingle pass ONCE:
 
         docs = shingled_docs(df).persist(StorageLevel.MEMORY_AND_DISK)
-        docs.count()                       # materialize before branching
-        jac  = ngram_jaccard_pairs(df, docs=docs)
-        cont = containment_pairs(df, docs=docs)
+        jac  = ngram_jaccard_pairs(df, docs=docs)  # its DF-path decision
+        cont = containment_pairs(df, docs=docs)    # fills the cache
         docs.unpersist()
 
     Construction notes (each measured, see the operators' docstrings):
@@ -125,18 +124,20 @@ def exact_dedup(df: DataFrame, text_col: str = "text",
 # 2. Exact n-gram Jaccard via inverted-index self-join
 # ---------------------------------------------------------------------------
 
-#: optional extra document-frequency cap (see ngram_jaccard_pairs df_cap)
-NGRAM_DF_CAP = 100
-
-#: scale_safe="auto" decision thresholds (see choose_dedup_scale_path).
+#: DF-path decision thresholds (see _auto_scale_safe).
 #: Row threshold: the measured window↔partial-agg crossover sits between
 #: sf0.1 (~240k exploded (doc,h) rows — window 3x faster) and sf1
 #: (~2.4M rows — partial-agg 2.9x faster; SCALE_SWEEP2.json), so 1M
 #: splits the decades. Hot fraction: the WindowExec straggler hazard the
 #: scale path exists for — one shingle in >=10% of documents puts >=10%
 #: of all rows in ONE un-splittable task regardless of corpus size.
+#: Hot floor: a hottest shingle seen in fewer sampled docs than this is
+#: sampling noise, not a hot key — a 150-doc corpus samples ~16 docs,
+#: where 2 co-occurrences already read as 12.5% while the full frame
+#: holds the shingle in ~3% of docs.
 DEDUP_AUTO_ROW_THRESHOLD = 1_000_000
 DEDUP_AUTO_HOT_FRAC = 0.10
+DEDUP_AUTO_HOT_MIN_DOCS = 10
 DEDUP_AUTO_SAMPLE_FRACTION = 0.1
 
 
@@ -147,13 +148,16 @@ def _auto_scale_safe(docs: DataFrame,
     """Decide window (False) vs partial-agg (True) DF computation from a
     deterministic document sample of a (doc, sh) shingle frame — the
     measurement→decision wire of skew.choose_salt_buckets applied to the
-    dedup prefix filters.
+    dedup prefix filters. Every prefix-filter operator runs it on the
+    frame whose DF it computes; both paths give identical results, so
+    the decision moves the plan, never the answer.
 
     Sample: hash60('dedupauto:' + doc) % 1000 < fraction*1000 — per-doc
     deterministic Bernoulli (same docs every run, partitioning-
     independent), pushed below the shingle projection so only sampled
-    docs are ever tokenized. Two sample-bounded jobs, metadata-sized
-    collects:
+    docs are ever tokenized (on a persisted frame the same action
+    materializes the cache instead). One sample-bounded action, a
+    one-row collect:
 
       est_rows  = sampled exploded (doc, h) rows / fraction — the total
                   window-shuffle volume proxy; past ``row_threshold``
@@ -164,7 +168,8 @@ def _auto_scale_safe(docs: DataFrame,
                   sampling; past ``hot_frac`` one WindowExec task holds
                   that fraction of ALL rows (AQE cannot split a window
                   exchange), so take the partial-agg path even on a
-                  small corpus.
+                  small corpus — provided the hottest shingle was seen
+                  in at least DEDUP_AUTO_HOT_MIN_DOCS sampled docs.
 
     At 100 TB run with fraction 0.001: hot shingles at straggler scale
     are present in any uniform sample, and a shingle too rare to sample
@@ -174,64 +179,53 @@ def _auto_scale_safe(docs: DataFrame,
         # the %1000 Bernoulli has 1/1000 granularity: int(f*1000) == 0
         # below 0.001, which would make the sample DETERMINISTICALLY
         # empty on an arbitrarily large corpus — exactly the silent
-        # wrong-path hazard auto exists to avoid. Fail loudly instead.
+        # wrong-path hazard the decision exists to avoid. Fail loudly.
         raise ValueError(
             f"sample_fraction must be in [0.001, 1.0] (1/1000 hash "
             f"granularity), got {sample_fraction!r}")
+
     def measure(frame):
-        # ONE action for the whole decision (r15 — previously a
-        # doc-count job plus a stats job): the doc count and the
-        # per-shingle DF stats are independent aggregates of the same
-        # sampled frame, cross-joined into a single 1-row collect.
-        sh = frame.select(F.explode("sh").alias("s")) \
-                  .select(F.xxhash64("s").alias("h"))
-        return (sh.groupBy("h").agg(F.count(F.lit(1)).alias("c"))
-                .agg(F.sum("c").alias("rows"), F.max("c").alias("maxdf"))
-                .crossJoin(frame.agg(F.count(F.lit(1)).alias("nd")))
+        # ONE action, one exchange: the shingle hashes plus one NULL
+        # marker row per doc, grouped on h — the NULL group's count is
+        # the doc count, every other group's count a shingle DF
+        h = (frame.select(F.explode(F.concat(
+                 "sh", F.array(F.lit(None).cast("string")))).alias("s"))
+             .select(F.when(F.col("s").isNotNull(), F.xxhash64("s"))
+                     .alias("h")))
+        dfc = F.when(F.col("h").isNotNull(), F.col("c"))
+        return (h.groupBy("h").agg(F.count(F.lit(1)).alias("c"))
+                .agg(F.sum(dfc).alias("rows"), F.max(dfc).alias("maxdf"),
+                     F.max(F.when(F.col("h").isNull(), F.col("c")))
+                     .alias("nd"))
                 .collect()[0])
 
     sample = docs.where(
         (hash60(F.col("doc").cast("string"), prefix="dedupauto:")
          % 1000) < int(sample_fraction * 1000))
     stats = measure(sample)
-    n_docs, used_fraction = stats["nd"], sample_fraction
-    if n_docs == 0:
+    used_fraction = sample_fraction
+    if not stats["nd"]:
         # Empty sample ≠ small corpus: a tiny-but-skewed frame can draw
         # zero docs at low fractions. Mirror skew.choose_salt_buckets:
         # fall back to measuring the FULL frame (cheap precisely when
         # the sample came up empty) so the decision is always measured,
         # never a no-data default.
         stats = measure(docs)
-        n_docs, used_fraction = stats["nd"], 1.0
-        if n_docs == 0:
+        used_fraction = 1.0
+        if not stats["nd"]:
             return False  # genuinely empty corpus: nothing to straggle
     if stats["rows"] is None:
         return False
     est_rows = stats["rows"] / used_fraction
-    max_frac = stats["maxdf"] / n_docs
-    return est_rows >= row_threshold or max_frac >= hot_frac
-
-
-def choose_dedup_scale_path(df: DataFrame, text_col: str = "text",
-                            id_col: str = "doc_id", k: int = 3,
-                            sample_fraction: float =
-                            DEDUP_AUTO_SAMPLE_FRACTION,
-                            row_threshold: int = DEDUP_AUTO_ROW_THRESHOLD,
-                            hot_frac: float = DEDUP_AUTO_HOT_FRAC) -> bool:
-    """Public form of the ``scale_safe="auto"`` decision: True = take
-    the partial-agg (scale) path, False = the window path. Exposed so a
-    pipeline can measure once and pass the explicit bool to several
-    operators sharing one corpus."""
-    return _auto_scale_safe(shingled_docs(df, text_col, id_col, k),
-                            sample_fraction, row_threshold, hot_frac)
+    hot = (stats["maxdf"] >= DEDUP_AUTO_HOT_MIN_DOCS
+           and stats["maxdf"] / stats["nd"] >= hot_frac)
+    return est_rows >= row_threshold or hot
 
 
 def ngram_jaccard_pairs(df: DataFrame, threshold: float = 0.5,
                         text_col: str = "text", id_col: str = "doc_id",
-                        k: int = 3, df_cap: int | None = None,
-                        materialize: bool = True,
-                        docs: DataFrame | None = None,
-                        scale_safe: bool | str = False) -> DataFrame:
+                        k: int = 3, materialize: bool = True,
+                        docs: DataFrame | None = None) -> DataFrame:
     """ALL pairs with exact Jaccard(shingle sets) >= threshold — exact
     recall AND exact scores.
 
@@ -252,10 +246,7 @@ def ngram_jaccard_pairs(df: DataFrame, threshold: float = 0.5,
     shingles are even MORE frequent, so the frequent-shingle fan-out
     that kills a naive inverted-index self-join mostly prunes itself
     (measured at sf0.1: candidate volume 1.13M -> 77k pairs, operator
-    4.4s -> ~1.5s vs the v2 lossy DF-capped index). ``df_cap`` remains
-    as an optional extra guard for adversarial corpora — when set,
-    shingles with DF > df_cap are excluded from prefixes entirely (the
-    v2 recall caveat applies); default None = exact.
+    4.4s -> ~1.5s vs the v2 lossy DF-capped index).
 
     Phases:
       1. DF — one hash-agg over exploded shingles (map-side combine;
@@ -283,28 +274,26 @@ def ngram_jaccard_pairs(df: DataFrame, threshold: float = 0.5,
     belongs to the caller (this function neither persists nor
     unpersists a caller-provided frame).
 
-    ``scale_safe``: how the per-shingle document frequency is computed.
-    False (default, small-corpus fast path): a COUNT window partitioned
-    on the shingle hash ``h`` — one shuffle annotates every (doc, h)
-    row in place, measured 3x faster end-to-end at bench scale than the
-    agg+join-back form. The hazard at web scale: a WindowExec partition
-    holds EVERY occurrence of its key in ONE task, so a boilerplate
-    shingle present in 10% of documents makes one task hold 10% of all
-    (doc, h) rows — a straggler/OOM that AQE cannot split (skew
-    handling does not apply to window exchanges). True (scale path):
-    DF(h) via ``groupBy("h").count()`` — partial map-side aggregation
-    absorbs hot keys (each map task emits ONE row per distinct h
-    regardless of occurrence count) — joined back onto the (doc, h)
-    rows; the join-back shuffle on h IS AQE-skew-splittable (the
-    count side is one row per key, replicated to the split partitions).
-    Same results bit-for-bit (oracle-checked as dedup_ngram_jaccard_scale);
+    Document-frequency path, picked per call by :func:`_auto_scale_safe`
+    from a deterministic doc sample of ``docs`` (its one action also
+    materializes the persisted shingle cache). Window path (small
+    corpora): a COUNT window partitioned on the shingle hash ``h`` —
+    one shuffle annotates every (doc, h) row in place, measured 3x
+    faster end-to-end at bench scale than the agg+join-back form. The
+    hazard at web scale: a WindowExec partition holds EVERY occurrence
+    of its key in ONE task, so a boilerplate shingle present in 10% of
+    documents makes one task hold 10% of all (doc, h) rows — a
+    straggler/OOM that AQE cannot split (skew handling does not apply
+    to window exchanges). Partial-agg path (past the measured volume
+    crossover, or a hot shingle): DF(h) via ``groupBy("h").count()`` —
+    partial map-side aggregation absorbs hot keys (each map task emits
+    ONE row per distinct h regardless of occurrence count) — joined
+    back onto the (doc, h) rows; the join-back shuffle on h IS
+    AQE-skew-splittable (the count side is one row per key, replicated
+    to the split partitions). Same results bit-for-bit
+    (tests/test_properties.py test_scale_safe_paths_equal_default);
     plan-asserted to contain no Window keyed on h
     (tests/test_plans.py test_scale_safe_dedup_no_hot_key_window).
-    ``"auto"``: decide from a deterministic doc sample
-    (:func:`choose_dedup_scale_path`) — partial-agg when the estimated
-    exploded-row volume or hot-shingle fraction crosses the measured
-    crossover, window otherwise; both branches give identical results,
-    so auto only moves the plan, never the answer.
     """
     from pyspark import StorageLevel
 
@@ -316,28 +305,13 @@ def ngram_jaccard_pairs(df: DataFrame, threshold: float = 0.5,
         # bounded by corpus size, the same move MLlib's MinHashLSH
         # makes. Released in the finally below (materialize path).
         docs = shingled_docs(df, text_col, id_col, k)
-    docs_warm = False
-    if isinstance(scale_safe, str):
-        if scale_safe != "auto":
-            raise ValueError(
-                f'scale_safe must be a bool or "auto", got {scale_safe!r}')
-        if owned and materialize:
-            # r16: the materialize path pays a full cache-populating
-            # docs.count() anyway, so run the decision ON the persisted
-            # frame — the decision's one action materializes the cache
-            # as a side effect (the media_ingest_incremental lane
-            # pattern) and the separate count + the 10% sample shingle
-            # pass both disappear. Decision inputs/outputs identical:
-            # same frame, same deterministic sample, just read through
-            # the cache instead of pushed below the projection.
+        if materialize:
             docs = docs.persist(StorageLevel.MEMORY_AND_DISK)
-            docs_warm = True
-        # (non-materialize / caller-docs paths keep deciding on the
-        # un-persisted frame: the sample filter pushes below the
-        # shingle projection so only sampled docs are ever shingled)
-        scale_safe = _auto_scale_safe(docs)
-    if owned and materialize and not docs.is_cached:
-        docs = docs.persist(StorageLevel.MEMORY_AND_DISK)
+    # on a persisted frame the decision's one action is also the cache
+    # materialization (before the plan's branches race on it cold); on
+    # a lazy frame the sample filter pushes below the shingle
+    # projection, so only sampled docs are shingled
+    partial_agg = _auto_scale_safe(docs)
     # The candidate machinery runs on 64-bit shingle HASHES, not the
     # strings: the DF shuffle, the order-join, the per-doc sort, and the
     # bucket keys all move/compare fixed-width longs (~5-10x less data
@@ -350,11 +324,11 @@ def ngram_jaccard_pairs(df: DataFrame, threshold: float = 0.5,
           .select("doc", F.xxhash64("s").alias("h")))
     # DF per hash (shingles are distinct per doc, so COUNT per h ==
     # document frequency): window form vs partial-agg join-back per the
-    # scale_safe docstring tradeoff above
+    # DF-path tradeoff in the docstring above
     from pyspark.sql import Window as _W
 
     sh_cached = False
-    if scale_safe:
+    if partial_agg:
         # the scale path consumes sh TWICE (DF aggregate + join-back);
         # persisting the two-long frame runs the explode+hash pass once
         # (interleaved A/B at sf0.1: ~5-8% end-to-end — the join-back
@@ -368,8 +342,6 @@ def ngram_jaccard_pairs(df: DataFrame, threshold: float = 0.5,
     else:
         wdf = sh.withColumn("_dfs",
                             F.count(F.lit(1)).over(_W.partitionBy("h")))
-    if df_cap is not None:
-        wdf = wdf.where(F.col("_dfs") <= df_cap)
     # global total order (df asc, hash asc) via struct sort; slice each
     # doc's prefix and explode it into the (much smaller) index
     ordered = (wdf.groupBy("doc")
@@ -403,7 +375,7 @@ def ngram_jaccard_pairs(df: DataFrame, threshold: float = 0.5,
          >= F.lit(float(threshold)) * F.greatest("n_a", "n_b"))
         & (ubound >= alpha))
         .select("doc_a", "doc_b").dropDuplicates())
-    if scale_safe:
+    if partial_agg:
         # Spread the rescore (r15, guide §2.5): the candidate list is
         # a few MB of (doc_a, doc_b) longs, so AQE's byte-target
         # coalescing collapses the post-dedup shuffle to ~ONE
@@ -415,9 +387,9 @@ def ngram_jaccard_pairs(df: DataFrame, threshold: float = 0.5,
         # is the documented small-corpus fast path whose rescore stage
         # inherits adequate partitioning at its sizes, and the same
         # old-vs-new A/B showed the extra exchange costing it ~10 %
-        # with nothing to win back; auto switches to the scale branch
-        # (and this fan-out) exactly when volume crosses the measured
-        # threshold. At scale the pair list is output-bounded and
+        # with nothing to win back; the decision switches to the scale
+        # branch (and this fan-out) exactly when volume crosses the
+        # measured threshold. At scale the pair list is output-bounded and
         # defaultParallelism cluster-sized, so per-task volume stays
         # |cand|/cores.
         cand = cand.repartition(
@@ -436,20 +408,16 @@ def ngram_jaccard_pairs(df: DataFrame, threshold: float = 0.5,
     if not materialize:
         return out
     try:
-        # Populate the shared cache FIRST: inside a single job, the
-        # plan's multiple docs branches (prefix chain, rescore a-side,
-        # rescore b-side) race on a cold cache and each recomputes the
-        # shingle pass; one count() materializes it once, then every
-        # branch reads the cache. Then eagerly compute the (tiny,
-        # output-bounded) pair set so lineage is truncated and the
-        # corpus cache can be released before the caller ever executes
-        # the returned frame. (Skipped when the auto decision already
-        # materialized the cache — r16.)
-        if owned and not docs_warm:
-            docs.count()
+        # The decision above already populated the shared docs cache
+        # (inside a single job the plan's docs branches — prefix chain,
+        # rescore a-side, rescore b-side — would race on a cold cache
+        # and each recompute the shingle pass). Eagerly compute the
+        # (tiny, output-bounded) pair set so lineage is truncated and
+        # the corpus cache can be released before the caller ever
+        # executes the returned frame.
         if sh_cached:
             # stage the (doc, h) cache before the branching consumers
-            # race on it cold (same rationale as the docs.count above)
+            # race on it cold (same rationale as the docs cache above)
             sh.count()
         return out.localCheckpoint(eager=True)
     finally:
@@ -867,8 +835,7 @@ def ngram_jaccard_dedup(df: DataFrame, threshold: float = 0.5,
     """Survivors of ``df`` under exact n-gram-Jaccard near-dup clusters
     (:func:`ngram_jaccard_pairs` -> :func:`dedup_survivors`). ``keep``/
     ``score`` select the min-id or quality-arg-max policy; remaining
-    kwargs (``scale_safe``, ``df_cap``, ``k``, ...) forward to the pair
-    generator unchanged.
+    kwargs (``k``) forward to the pair generator unchanged.
 
     Cache shape (r16, guide §1.2): the pair set's ONLY consumer here is
     dedup_survivors' cluster resolution (one bounded action), so the
@@ -904,11 +871,11 @@ def _staged_pair_dedup(pair_fn, df: DataFrame, threshold: float,
                        keep: str, score: Column | None, text_col: str,
                        id_col: str, pair_kwargs: dict) -> DataFrame:
     """Shared staged-docs + lazy-pairs core of the one-call dedup
-    compositions: persist the shingle frame, materialize it via the
-    auto decision (when requested) or one count, run the pair plan
-    lazily into dedup_survivors' single cluster-resolution action, and
-    release the cache before returning (the survivors frame's lineage
-    holds only ``df`` and the local cluster ids)."""
+    compositions: persist the shingle frame (the pair generator's
+    DF-path decision is the action that materializes it), run the pair
+    plan lazily into dedup_survivors' single cluster-resolution action,
+    and release the cache before returning (the survivors frame's
+    lineage holds only ``df`` and the local cluster ids)."""
     from pyspark import StorageLevel
 
     kwargs = dict(pair_kwargs)
@@ -916,11 +883,6 @@ def _staged_pair_dedup(pair_fn, df: DataFrame, threshold: float,
     docs = shingled_docs(df, text_col, id_col, k) \
         .persist(StorageLevel.MEMORY_AND_DISK)
     try:
-        if kwargs.get("scale_safe") not in ("auto",):
-            # no decision action will touch the cache — populate it
-            # before the pair plan's branches race on it cold (the
-            # ngram_jaccard_pairs docs.count() discipline)
-            docs.count()
         pairs = pair_fn(df, threshold=threshold, text_col=text_col,
                         id_col=id_col, k=k, materialize=False,
                         docs=docs, **kwargs)
@@ -993,10 +955,8 @@ def simhash_pairs(df: DataFrame, max_hamming: int = SIMHASH_MAX_HAMMING,
 
 def containment_pairs(df: DataFrame, threshold: float = 0.8,
                       text_col: str = "text", id_col: str = "doc_id",
-                      k: int = 3, df_cap: int | None = None,
-                      materialize: bool = True,
-                      docs: DataFrame | None = None,
-                      scale_safe: bool | str = False) -> DataFrame:
+                      k: int = 3, materialize: bool = True,
+                      docs: DataFrame | None = None) -> DataFrame:
     """ALL ordered pairs (a, b), a != b, with containment
     |A∩B| / |A| >= threshold — the ASYMMETRIC near-dup relation that
     catches doc-in-doc duplication (a page embedded in a larger page,
@@ -1028,10 +988,7 @@ def containment_pairs(df: DataFrame, threshold: float = 0.8,
     Since prefixes hold each document's RAREST shingles, a frequent
     (boilerplate) shingle survives into the full index only when some
     document consists almost entirely of frequent shingles; the index
-    collapses from Σ|doc shingles| to Σ_{h in some prefix} DF(h). The
-    residual adversarial case (frequent shingles that DO land in
-    prefixes) is exactly what ``df_cap`` guards — lossy in the
-    ngram_jaccard_pairs sense, documented there.
+    collapses from Σ|doc shingles| to Σ_{h in some prefix} DF(h).
 
     Cache lifecycle: same materialize-then-release contract as
     ngram_jaccard_pairs (eager result + unpersist before returning;
@@ -1039,23 +996,23 @@ def containment_pairs(df: DataFrame, threshold: float = 0.8,
     ``docs`` = caller-owned pre-built :func:`shingled_docs` frame,
     shared across operators, never persisted/released here).
 
-    ``scale_safe``: replaces BOTH h-partitioned windows (the hot-key
-    straggler hazard documented at :func:`ngram_jaccard_pairs`) with
-    skew-tolerant forms that compute the same values —
+    Document-frequency path: the :func:`ngram_jaccard_pairs` per-call
+    decision. Its partial-agg path replaces BOTH h-partitioned windows
+    (the hot-key straggler hazard documented there) with skew-tolerant
+    forms that compute the same values —
       ``_dfs``  groupBy("h") partial-agg + join-back (map-side combine
                 absorbs hot keys; the join-back is AQE-skew-splittable);
       ``_any``  the prefix-shingle set distinct'd (partial-agg, one row
                 per h) and LEFT SEMI-joined against the annotated rows
-                — the join formulation the default path deliberately
+                — the join formulation the window path deliberately
                 avoids at small scale (measured 4x slower end-to-end at
                 sf0.1) but the one whose per-task input stays bounded
                 when one shingle covers a third of the corpus.
     The doc-partitioned windows (``_n``, ``_r``) are kept in BOTH
     paths: their partition size is bounded by a single document's
     shingle count, which does not grow with corpus size. Same results
-    (oracle-checked as dedup_containment_scale); plan-asserted h-window-free.
-    ``"auto"``: sampled-decision form, see :func:`ngram_jaccard_pairs`
-    and :func:`choose_dedup_scale_path`.
+    (tests/test_properties.py test_scale_safe_paths_equal_default);
+    plan-asserted h-window-free.
     """
     from pyspark import StorageLevel
     from pyspark.sql import Window as _W
@@ -1063,26 +1020,15 @@ def containment_pairs(df: DataFrame, threshold: float = 0.8,
     owned = docs is None
     if owned:
         docs = shingled_docs(df, text_col, id_col, k)
-    docs_warm = False
-    if isinstance(scale_safe, str):
-        if scale_safe != "auto":
-            raise ValueError(
-                f'scale_safe must be a bool or "auto", got {scale_safe!r}')
-        if owned and materialize:
-            # r16: decide ON the persisted frame so the decision's one
-            # action doubles as the cache materialization, replacing
-            # the separate docs.count() and the 10% sample shingle pass
-            # (see ngram_jaccard_pairs); non-materialize paths keep the
-            # pushed-down sample decision
+        if materialize:
             docs = docs.persist(StorageLevel.MEMORY_AND_DISK)
-            docs_warm = True
-        scale_safe = _auto_scale_safe(docs)
-    if owned and materialize and not docs.is_cached:
-        docs = docs.persist(StorageLevel.MEMORY_AND_DISK)
+    # the decision's one action doubles as the cache materialization
+    # (see ngram_jaccard_pairs)
+    partial_agg = _auto_scale_safe(docs)
     sh = (docs.select("doc", F.explode("sh").alias("s"))
           .select("doc", F.xxhash64("s").alias("h")))
     sh_cached = False
-    if scale_safe:
+    if partial_agg:
         # two consumers of sh (DF agg + join-back) — persist the
         # two-long frame so the explode+hash pass runs once (see
         # ngram_jaccard_pairs), released in the finally
@@ -1109,12 +1055,11 @@ def containment_pairs(df: DataFrame, threshold: float = 0.8,
                               - F.ceil(F.col("_n") * F.lit(float(threshold)))
                               + 1)))
     # spill-width discipline: everything downstream needs only
-    # (doc, h, _pf) — plus _dfs when df_cap filters on it — so the
-    # persisted/window-carried frame drops the rank/count scaffolding
-    # (_n, _r: 2 of 6 columns) before it is cached or re-shuffled
-    ranked = ranked.select(
-        "doc", "h", "_pf", *(["_dfs"] if df_cap is not None else []))
-    if not scale_safe:
+    # (doc, h, _pf), so the persisted/window-carried frame drops the
+    # rank/count scaffolding (_dfs, _n, _r: 3 of 6 columns) before it
+    # is cached or re-shuffled
+    ranked = ranked.select("doc", "h", "_pf")
+    if not partial_agg:
         ranked = ranked.withColumn(
             "_any",
             F.max(F.col("_pf").cast("int")).over(_W.partitionBy("h")) == 1)
@@ -1124,18 +1069,16 @@ def containment_pairs(df: DataFrame, threshold: float = 0.8,
     if materialize:
         ranked = ranked.persist(StorageLevel.MEMORY_AND_DISK)
     prefix = ranked.where("_pf").select(F.col("doc").alias("doc_a"), "h")
-    capped = (ranked if df_cap is None
-              else ranked.where(F.col("_dfs") <= df_cap))
-    if scale_safe:
+    if partial_agg:
         # "h occurs in some prefix" as a semi-join against the distinct'd
-        # prefix-shingle set instead of the max-over-h window (scale_safe
+        # prefix-shingle set instead of the max-over-h window (DF-path
         # docstring): distinct is a partial agg, the semi-join is
         # AQE-splittable
         pre_h = prefix.select("h").distinct()
-        full_idx = (capped.join(pre_h, "h", "left_semi")
+        full_idx = (ranked.join(pre_h, "h", "left_semi")
                     .select(F.col("doc").alias("doc_b"), "h"))
     else:
-        full_idx = (capped.where("_any")
+        full_idx = (ranked.where("_any")
                     .select(F.col("doc").alias("doc_b"), "h"))
     cand = (prefix.join(full_idx, "h")
             .where(F.col("doc_a") != F.col("doc_b"))
@@ -1163,10 +1106,7 @@ def containment_pairs(df: DataFrame, threshold: float = 0.8,
         # shared stage): one shingle pass, one three-window chain, one
         # candidate join; the final job is then the rescore alone.
         # Measured at sf0.1: 12.5s (racing) -> 4.9s -> ~3.6s (staged).
-        # (docs.count skipped when the auto decision already
-        # materialized the cache — r16.)
-        if owned and not docs_warm:
-            docs.count()
+        # (The decision already materialized the docs cache.)
         if sh_cached:
             sh.count()
         ranked.count()
@@ -1199,8 +1139,7 @@ def containment_pairs_incremental(new_df: DataFrame,
                                   threshold: float = 0.8,
                                   text_col: str = "text",
                                   id_col: str = "doc_id",
-                                  k: int = 3,
-                                  scale_safe: bool | str = False) -> DataFrame:
+                                  k: int = 3) -> DataFrame:
     """Incremental doc-in-doc containment: which NEW documents are
     mostly contained in something already ingested (or in a batch
     sibling) — boilerplate detection at ingest time. Contained side =
@@ -1243,24 +1182,13 @@ def containment_pairs_incremental(new_df: DataFrame,
     # shingles and fan out against the whole containing index
     # (measured 6.0s -> ~2s at sf0.1 where the batch is corpus-sized);
     # batch-local DF approximates global DF without touching the corpus.
-    # scale_safe: same hot-shingle window hazard and partial-agg
+    # DF path: same hot-shingle window hazard and partial-agg
     # alternative as containment_pairs — the window partition here holds
     # only BATCH occurrences of a shingle, so the hazard needs a large
-    # batch, but "large drop" is a normal backfill shape. "auto"
+    # batch, but "large drop" is a normal backfill shape. The decision
     # therefore samples the BATCH (the only window-keyed frame here),
-    # not the corpus. Round-10 family audit (VERDICT r9 #3): this
-    # default stays False to MATCH containment_pairs — the text family
-    # pins the window path under its registered oracles and text
-    # shingles lack the video modality's structurally-guaranteed hot
-    # key (blank frames), so the sampling jobs aren't paid by default;
-    # backfill-scale drops opt into "auto" (consistency guard:
-    # tests/test_image_ahash.py test_pairs_family_scale_safe_defaults).
-    if isinstance(scale_safe, str):
-        if scale_safe != "auto":
-            raise ValueError(
-                f'scale_safe must be a bool or "auto", got {scale_safe!r}')
-        scale_safe = _auto_scale_safe(batch)
-    if scale_safe:
+    # not the corpus.
+    if _auto_scale_safe(batch):
         bdf = bsh.groupBy("h").agg(F.count(F.lit(1)).alias("_dfs"))
         bsh = bsh.join(bdf, "h")
     else:
@@ -1299,8 +1227,7 @@ def containment_pairs_incremental(new_df: DataFrame,
 
 def jaccard_pairs_incremental_from_index(batch: DataFrame,
                                          corpus_index: DataFrame,
-                                         threshold: float = 0.5,
-                                         scale_safe: bool | str = False
+                                         threshold: float = 0.5
                                          ) -> DataFrame:
     """Shared incremental engine for SYMMETRIC shingle-set Jaccard —
     which docs of a new ``batch`` have Jaccard >= ``threshold`` against
@@ -1329,19 +1256,14 @@ def jaccard_pairs_incremental_from_index(batch: DataFrame,
 
     Emits (doc_a, doc_b, jaccard), doc_a < doc_b — exactly the
     full-corpus run's pairs with at least one new side (no-drift, the
-    oracle contract). ``scale_safe`` guards the batch-local DF window
-    as in containment_pairs_incremental ("auto" samples the BATCH)."""
+    oracle contract). The batch-local DF path is decided as in
+    containment_pairs_incremental (the decision samples the BATCH)."""
     from pyspark.sql import Window as _W
 
     all_docs = corpus_index.unionByName(batch)
     bsh = (batch.select("doc", F.explode("sh").alias("s"))
            .select("doc", F.xxhash64("s").alias("h")))
-    if isinstance(scale_safe, str):
-        if scale_safe != "auto":
-            raise ValueError(
-                f'scale_safe must be a bool or "auto", got {scale_safe!r}')
-        scale_safe = _auto_scale_safe(batch)
-    if scale_safe:
+    if _auto_scale_safe(batch):
         bdf = bsh.groupBy("h").agg(F.count(F.lit(1)).alias("_dfs"))
         bsh = bsh.join(bdf, "h")
     else:
@@ -1388,9 +1310,7 @@ def ngram_jaccard_pairs_incremental(new_df: DataFrame,
                                     threshold: float = 0.5,
                                     text_col: str = "text",
                                     id_col: str = "doc_id",
-                                    k: int = 3,
-                                    scale_safe: bool | str = False
-                                    ) -> DataFrame:
+                                    k: int = 3) -> DataFrame:
     """Incremental :func:`ngram_jaccard_pairs`: which NEW documents
     have k-gram shingle Jaccard >= ``threshold`` against an
     already-ingested corpus (``corpus_docs``: the stored
@@ -1399,10 +1319,9 @@ def ngram_jaccard_pairs_incremental(new_df: DataFrame,
     (exact: ingest.ingest_batch's hash anti-join; MinHash:
     minhash_lsh_pairs_incremental; containment:
     containment_pairs_incremental) with the exact-Jaccard form.
-    ``scale_safe`` defaults False to match :func:`ngram_jaccard_pairs`
-    (the round-10 family-consistency audit). Oracle:
+    Oracle:
     dedup_ngram_jaccard_incr — brute-force all-pairs Jaccard
     restricted to pairs with at least one new side."""
     batch = shingled_docs(new_df, text_col, id_col, k)
     return jaccard_pairs_incremental_from_index(
-        batch, corpus_docs, threshold=threshold, scale_safe=scale_safe)
+        batch, corpus_docs, threshold=threshold)

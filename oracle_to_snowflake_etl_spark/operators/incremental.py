@@ -12,9 +12,7 @@ sort-merge anti-join to a broadcast hash join when the key side fits under
 ``spark.sql.autoBroadcastJoinThreshold`` — no extra job, no scan of the
 target before the real work starts. (v1 ran a ``count()`` probe here: at
 100 TB that is a full scan of the key column per load, strictly worse than
-letting AQE decide from sizes it already measured.) Callers that KNOW the
-key side is tiny (e.g. a bounded dimension feed) can pass
-``broadcast_keys=True`` to pin the hint at plan time.
+letting AQE decide from sizes it already measured.)
 
 On a Delta/Iceberg table the same semantics are `MERGE WHEN NOT MATCHED
 THEN INSERT`; this module is the pure-Spark strategy that needs no extra
@@ -25,31 +23,24 @@ from __future__ import annotations
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from ..schemas import ADS_KEY_COLS
 
 
 def incremental_delta(source: DataFrame, existing_keys: DataFrame,
-                      key_cols: list[str] | None = None,
-                      broadcast_keys: bool = False) -> DataFrame:
+                      key_cols: list[str] | None = None) -> DataFrame:
     """Rows of ``source`` whose composite key is absent from
     ``existing_keys`` (reference J1).
 
     ``existing_keys`` may be a full target table; it is pruned to the key
     columns before the join (the reference's manual column pruning at
     oracle_to_snowflake.py:78 — Catalyst would prune anyway, but pruning
-    before a broadcast also shrinks the broadcast payload).
-
-    broadcast_keys: pin a broadcast hint at plan time. Default off —
-    AQE picks broadcast-vs-SMJ from measured shuffle sizes, which is the
-    right call at every scale without any extra probe job.
+    before a broadcast also shrinks the broadcast payload). AQE picks
+    broadcast-vs-SMJ from measured shuffle sizes, which is the right
+    call at every scale without any extra probe job.
     """
     keys = key_cols or ADS_KEY_COLS
-    pruned = existing_keys.select(*keys)
-    if broadcast_keys:
-        pruned = F.broadcast(pruned)
-    return source.join(pruned, on=keys, how="left_anti")
+    return source.join(existing_keys.select(*keys), on=keys, how="left_anti")
 
 
 def _read_target_keys(spark, target_path: str, keys: list[str]) -> DataFrame | None:

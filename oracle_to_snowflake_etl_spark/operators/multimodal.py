@@ -789,8 +789,6 @@ def frame_docs(media: DataFrame) -> DataFrame:
 
 
 def video_neardup_pairs(media: DataFrame, threshold: float = 0.3,
-                        scale_safe: bool | str = "auto",
-                        df_cap: int | None = None,
                         materialize: bool = True) -> DataFrame:
     """Video near-duplicate pairs: 3-frame-run shingle Jaccard >=
     ``threshold`` over the sampled frame-digest sequence — literally
@@ -801,18 +799,15 @@ def video_neardup_pairs(media: DataFrame, threshold: float = 0.3,
     two videos match on shared SEGMENTS (re-encodes, trims, recuts
     with common footage), not on a bag of frames.
 
-    ``scale_safe``/``df_cap`` forward the engine room's hot-shingle
-    machinery (VERDICT r8 #1): frame digests have a REALISTIC hot-
-    shingle case — black/blank/intro frame runs shared by millions of
-    videos land one shingle hash on one window partition in the default
-    DF-count path. Default "auto" lets choose_dedup_scale_path sample
-    the digest corpus and pick the partial-agg form when hot, exactly
-    as the text callers do; the decision moves the plan, never the
-    pairs (the prefix filter is lossless either way)."""
+    Frame digests have a REALISTIC hot-shingle case — black/blank/
+    intro frame runs shared by millions of videos land one shingle hash
+    on one window partition in the window DF path. The engine's sampled
+    DF-path decision picks the partial-agg form when hot, exactly as
+    for text; the decision moves the plan, never the pairs (the prefix
+    filter is lossless either way)."""
     from .dedup import ngram_jaccard_pairs
 
     return ngram_jaccard_pairs(frame_docs(media), threshold=threshold,
-                               scale_safe=scale_safe, df_cap=df_cap,
                                materialize=materialize)
 
 
@@ -831,7 +826,6 @@ def video_frame_index(media: DataFrame) -> DataFrame:
 def video_neardup_pairs_incremental(new_media: DataFrame,
                                     corpus_index: DataFrame,
                                     threshold: float = 0.3,
-                                    scale_safe: bool | str = "auto",
                                     batch_shingles: DataFrame | None = None
                                     ) -> DataFrame:
     """Incremental video near-dup: which NEW videos share segments
@@ -849,25 +843,23 @@ def video_neardup_pairs_incremental(new_media: DataFrame,
 
     Emits (doc_a, doc_b, jaccard), doc_a < doc_b, exactly the
     full-corpus run's pairs with at least one new side (no-drift, the
-    oracle contract). ``scale_safe`` guards the batch-local DF window
-    as in containment_pairs_incremental ("auto" samples the BATCH).
-    Default "auto" since round 10 (VERDICT r9 #3): the blank-frame
-    hot-shingle case that motivated auto on the batch form exists for
-    batches too — a drop of intro-card videos lands one digest shingle
-    on one window partition; the decision moves the plan, never the
-    pairs.
+    oracle contract). The batch-local DF path is decided from a sample
+    of the BATCH: the blank-frame hot-shingle case exists for batches
+    too — a drop of intro-card videos lands one digest shingle on one
+    window partition; the decision moves the plan, never the pairs.
 
     ``batch_shingles``: caller-staged batch shingle frame (a
     ``shingled_docs(frame_docs(new_media))`` output the caller has
     persisted — composed pipelines stage it once so the payload-decode
-    pass is shared across the auto decision and every pair-plan branch;
-    ADVICE r10). Caller owns its lifecycle. ``None`` computes it."""
+    pass is shared across the DF-path decision and every pair-plan
+    branch; ADVICE r10). Caller owns its lifecycle. ``None`` computes
+    it."""
     from .dedup import jaccard_pairs_incremental_from_index, shingled_docs
 
     batch = (batch_shingles if batch_shingles is not None
              else shingled_docs(frame_docs(new_media)))
     return jaccard_pairs_incremental_from_index(
-        batch, corpus_index, threshold=threshold, scale_safe=scale_safe)
+        batch, corpus_index, threshold=threshold)
 
 
 # ---------------------------------------------------------------------------
@@ -948,8 +940,6 @@ def audio_docs(media: DataFrame) -> DataFrame:
 
 
 def audio_neardup_pairs(media: DataFrame, threshold: float = 0.3,
-                        scale_safe: bool | str = "auto",
-                        df_cap: int | None = None,
                         materialize: bool = True) -> DataFrame:
     """Audio near-duplicate pairs: 3-window-run shingle Jaccard >=
     ``threshold`` over the overlapping window-digest sequence —
@@ -960,15 +950,13 @@ def audio_neardup_pairs(media: DataFrame, threshold: float = 0.3,
     audio windows all band-and-verify). Segment-order sensitive BY
     DESIGN: a shingle is a run of 3 consecutive windows, so two tracks
     match on shared SEGMENTS (re-encodes, trims, splices with common
-    material), not a bag of windows.
-
-    ``scale_safe`` defaults "auto" like the video family: silence runs
-    and shared intro jingles are the audio modality's structurally
-    realistic hot shingle (the blank-frame argument, byte-for-byte)."""
+    material), not a bag of windows. Silence runs and shared intro
+    jingles are the audio modality's structurally realistic hot shingle
+    (the blank-frame argument, byte-for-byte); the sampled DF-path
+    decision handles them as for video."""
     from .dedup import ngram_jaccard_pairs
 
     return ngram_jaccard_pairs(audio_docs(media), threshold=threshold,
-                               scale_safe=scale_safe, df_cap=df_cap,
                                materialize=materialize)
 
 
@@ -986,7 +974,6 @@ def audio_window_index(media: DataFrame) -> DataFrame:
 def audio_neardup_pairs_incremental(new_media: DataFrame,
                                     corpus_index: DataFrame,
                                     threshold: float = 0.3,
-                                    scale_safe: bool | str = "auto",
                                     batch_shingles: DataFrame | None = None
                                     ) -> DataFrame:
     """Incremental audio near-dup: which NEW tracks share segments
@@ -1004,7 +991,7 @@ def audio_neardup_pairs_incremental(new_media: DataFrame,
     batch = (batch_shingles if batch_shingles is not None
              else shingled_docs(audio_docs(new_media)))
     return jaccard_pairs_incremental_from_index(
-        batch, corpus_index, threshold=threshold, scale_safe=scale_safe)
+        batch, corpus_index, threshold=threshold)
 
 
 # ---------------------------------------------------------------------------
@@ -1023,8 +1010,7 @@ def media_ingest_incremental(new_media: DataFrame,
                              image_fps: DataFrame,
                              video_index: DataFrame,
                              audio_index: DataFrame,
-                             min_bytes: int = MEDIA_MIN_BYTES,
-                             scale_safe: bool | str = "auto") -> DataFrame:
+                             min_bytes: int = MEDIA_MIN_BYTES) -> DataFrame:
     """Accept-filter a new media drop against the standing per-modality
     fingerprint indexes; returns the accepted catalog rows
     (media_id, kind, n_bytes). This composes the three modality
@@ -1062,26 +1048,20 @@ def media_ingest_incremental(new_media: DataFrame,
     written at first ingest; corpus payload bytes are hashed exactly
     once per media lifetime (at index build), and within one call the
     BATCH's payloads are decoded once per modality: the batch
-    fingerprint/shingle frames are staged persisted here, so the auto
+    fingerprint/shingle frames are staged persisted here, so the DF-path
     decision, the corpus-match join, and the within-batch pair branch
     all read one decode pass (ADVICE r10 — previously the image decode
     ran twice and the video/audio decode ~4x per call). Replay safety
     is the ingest_embeddings_stream convention: exclude the replayed
     drop's own index partition before calling, and the accept decision
-    is bit-identical (pytest-pinned).
-
-    ``scale_safe`` (VERDICT r10 #3 — amortize the auto decision):
-    forwarded to the video and audio incrementals. The default
-    ``"auto"`` decides per call from the STAGED batch shingle frames
-    (cache reads, not fresh decode jobs); a production loop ingesting
-    many drops against one stored index should decide ONCE per corpus
-    (dedup.choose_dedup_scale_path) and pass the explicit bool —
-    zero decision jobs per drop.
+    is bit-identical (pytest-pinned). The video and audio incrementals
+    each take their DF-path decision once, on the STAGED batch shingle
+    frame (its one action is also that frame's cache materialization).
     """
     from pyspark import StorageLevel
 
-    from .dedup import (_auto_scale_safe, cluster_representatives,
-                        dedup_clusters, shingled_docs)
+    from .dedup import (cluster_representatives, dedup_clusters,
+                        shingled_docs)
 
     # Cache lifecycle (the ngram_jaccard_pairs materialize discipline):
     # the gate catalog feeds every modality branch (cat_k, bids, the
@@ -1114,7 +1094,7 @@ def media_ingest_incremental(new_media: DataFrame,
         gated = new_media.join(catalog.select("media_id"), "media_id")
 
         # Stage each modality's batch-side decode output ONCE (ADVICE
-        # r10): every downstream consumer — the scale decision, the
+        # r10): every downstream consumer — the DF-path decision, the
         # corpus-match join, the within-batch pair branch — reads the
         # cache instead of re-running the payload-decode map pass.
         img_fps = stage(ahash_fps(gated.where(F.col("kind") == "image")))
@@ -1262,16 +1242,16 @@ def media_ingest_incremental(new_media: DataFrame,
 
         # The three modality pipelines share no state (catalog is
         # staged above) — run each as ONE independent lane
-        # (materialize the staged decode cache / take the scale
-        # decision, then build and collect the pairs) in a 3-worker
-        # pool (guide §2.6; r16 removed the r15 barrier between a
-        # staging pool and a modality pool — audio's pair collect now
-        # starts while video is still staging). Each lane's FIRST
-        # action on its staged frame is single-threaded within the
-        # lane, so the ADVICE-r10 one-decode-per-modality contract
-        # holds without a separate staging pass; explicit bools mean
-        # the inner calls never re-decide. Results are deterministic
-        # regardless of completion order.
+        # (materialize the staged decode cache — for the shingle lanes
+        # that is the inner incremental's DF-path decision — then build
+        # and collect the pairs) in a 3-worker pool (guide §2.6; r16
+        # removed the r15 barrier between a staging pool and a
+        # modality pool — audio's pair collect now starts while video
+        # is still staging). Each lane's FIRST action on its staged
+        # frame is single-threaded within the lane, so the ADVICE-r10
+        # one-decode-per-modality contract holds without a separate
+        # staging pass. Results are deterministic regardless of
+        # completion order.
         from concurrent.futures import ThreadPoolExecutor
 
         def lane_img() -> DataFrame:
@@ -1285,17 +1265,10 @@ def media_ingest_incremental(new_media: DataFrame,
 
         def lane_shingle(kind: str, staged_sh: DataFrame, index: DataFrame,
                          pair_fn) -> DataFrame:
-            if scale_safe == "auto":
-                # the decision reads the cold cache, doubling as its
-                # materialization (r15)
-                safe: bool | str = _auto_scale_safe(staged_sh)
-            else:
-                safe = scale_safe
-                staged_sh.count()
             return modality(
                 kind,
                 pair_fn(gated.where(F.col("kind") == kind), index,
-                        scale_safe=safe, batch_shingles=staged_sh),
+                        batch_shingles=staged_sh),
                 "doc_a", "doc_b", "first")
 
         with ThreadPoolExecutor(max_workers=3) as ex:

@@ -891,12 +891,11 @@ def auto_cells(df: DataFrame) -> int:
 def _resolve_cells(df: DataFrame, cells, centroids) -> int:
     """Shared ``cells="auto"`` validation for the semantic family:
     "auto" = :func:`auto_cells` on the corpus; any other string is an
-    error (same totality discipline as dedup.scale_safe); a pinned
-    ``centroids`` matrix already fixes the geometry, so combining it
-    with "auto" is a contradiction worth failing loudly on, and with
-    an int the MATRIX wins (the geometry-over-argument rule of the
-    indexed ANN entrances — a count that disagrees with the matrix
-    would size probe masks and partition plans wrong)."""
+    error; a pinned ``centroids`` matrix already fixes the geometry, so
+    combining it with "auto" is a contradiction worth failing loudly
+    on, and with an int the MATRIX wins (the geometry-over-argument
+    rule of the indexed ANN entrances — a count that disagrees with
+    the matrix would size probe masks and partition plans wrong)."""
     if isinstance(cells, str):
         if cells != "auto":
             raise ValueError(

@@ -73,24 +73,6 @@ def lang_scores(col: Column) -> list[tuple[str, Column]]:
     return out
 
 
-def lang_id(col: Column) -> Column:
-    """argmax language by marker ratio; ties break alphabetically
-    ('und' = undetermined when no marker hits at all).
-
-    greatest + first-match-wins CASE, not an iterated when-fold — the
-    fold duplicates every earlier score subtree into each step
-    (exponential expression growth). Prefer :func:`lang_id_df`, which
-    stages the scores as materialized columns.
-    """
-    scores = lang_scores(col)
-    g = F.greatest(*[s for _, s in scores])
-    pick = None
-    for lang, s in scores:  # alphabetical: first equal-to-max wins
-        pick = (F.when(s == g, F.lit(lang)) if pick is None
-                else pick.when(s == g, F.lit(lang)))
-    return F.when(g <= 0, F.lit("und")).otherwise(pick)
-
-
 def lang_id_df(df: DataFrame, text_col: str = "text",
                id_col: str = "doc_id", keep: tuple[str, ...] = ()) -> DataFrame:
     """(id, *keep, lang_pred): staged language-ID — marker-hit ratios are

@@ -46,9 +46,3 @@ def normalize_ads_df(df: DataFrame) -> DataFrame:
             col = col.cast(field.dataType)
         projections.append(col.alias(field.name))
     return df.select(*projections)
-
-
-def date_to_string(df: DataFrame, col: str, fmt: str = "yyyy-MM-dd") -> DataFrame:
-    """Reference F8/P7 boundary format (generate_ads_data.py:31): dates stay
-    DateType internally; stringify only at declared output boundaries."""
-    return df.withColumn(col, F.date_format(F.col(col), fmt))

@@ -151,11 +151,3 @@ def window_partition_cols(df: DataFrame) -> list[list[str]]:
             cols.extend(re.findall(r"(\w+)#\d+", tok))
         out.append(cols)
     return out
-
-
-def codegen_stage_count(df: DataFrame) -> int:
-    """Whole-stage-codegen span count — fewer, wider spans mean more of
-    the query runs as generated JVM loops."""
-    plan = plan_string(df)
-    ids = set(re.findall(r"WholeStageCodegen \((\d+)\)", plan))
-    return len(ids)

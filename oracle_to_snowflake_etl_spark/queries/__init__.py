@@ -71,7 +71,7 @@ PRIORITY = [
     "purge_ann_index", "purge_ann_index_streamed", "cdc_snapshot_diff",
     "asof_click_attribution", "scd2_user_status", "pagerank_supplier_orders",
     "fuzzy_name_pairs", "dedup_minhash_lsh", "dedup_containment_incr",
-    "dedup_clusters", "dedup_ngram_jaccard_auto", "dedup_semantic",
+    "dedup_clusters", "dedup_ngram_jaccard", "dedup_semantic",
     "dedup_semantic_keep_best", "ann_int8_topk", "ann_brute_topk",
     "ann_ivf_int8_topk", "ann_ivf_int8_append", "ann_ivf_int8_filtered",
     "mv_join_dim_refresh", "text_quality_features", "mm_audio_neardup_incr",

@@ -75,37 +75,13 @@ def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     All-Pairs/PPJoin prefix filter + exact array_intersect rescore
     (operators/dedup.ngram_jaccard_pairs). Because the prefix filter is
     exact-recall, the oracle is BRUTE-FORCE all-pairs Jaccard — the
-    semantic ground truth, not a mirror of the algorithm."""
+    semantic ground truth, not a mirror of the algorithm. The operator
+    picks its document-frequency path from a corpus sample (the window
+    form here; the partial-agg form is pinned on hot fixtures by
+    tests/test_plans.py and proven pair-identical by
+    tests/test_properties.py) — the decision moves the plan, never the
+    answer."""
     return ngram_jaccard_pairs(load_table(spark, sf_dir, "documents"))
-
-
-@register("dedup_ngram_jaccard_scale", _NGRAM_JACCARD_SQL)
-def q_dedup_ngram_jaccard_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same exact-Jaccard prefix-filter operator on the SCALE-SAFE path
-    (scale_safe=True): document frequency via groupBy partial-agg +
-    join-back instead of a COUNT window partitioned on the shingle hash
-    — the formulation whose per-task input stays bounded when one
-    boilerplate shingle covers a large corpus fraction (hot-key window
-    hazard, operators/dedup.py ngram_jaccard_pairs docstring). Same
-    brute-force all-pairs oracle: both paths must produce identical
-    pairs and scores."""
-    return ngram_jaccard_pairs(load_table(spark, sf_dir, "documents"),
-                               scale_safe=True)
-
-
-@register("dedup_ngram_jaccard_auto", _NGRAM_JACCARD_SQL)
-def q_dedup_ngram_jaccard_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """scale_safe="auto": the engine DECIDES window vs partial-agg from
-    a deterministic corpus sample (operators/dedup.choose_dedup_scale_path
-    — est. exploded-row volume + hot-shingle fraction vs the measured
-    sf0.1↔sf1 crossover, VERDICT r6 #1) instead of making the caller
-    know their regime. On the bench corpus the sample says "small,
-    uniform" so this exercises decision + window branch end-to-end;
-    the partial-agg branch is driven by the 30%-hot fixture
-    (tests/test_plans.py test_auto_scale_safe_decision). Same
-    brute-force oracle — the decision moves the plan, never the answer."""
-    return ngram_jaccard_pairs(load_table(spark, sf_dir, "documents"),
-                               scale_safe="auto")
 
 
 _MH_A, _MH_B = _affine_constants()
@@ -280,20 +256,6 @@ def q_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import containment_pairs
 
     return containment_pairs(load_table(spark, sf_dir, "documents"))
-
-
-@register("dedup_containment_scale", _containment_oracle_sql())
-def q_dedup_containment_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Containment dedup on the SCALE-SAFE path (scale_safe=True): both
-    shingle-hash-partitioned windows replaced — DF via groupBy
-    partial-agg + join-back, the containing-side membership bound via
-    distinct + left-semi join (operators/dedup.py containment_pairs
-    docstring). Same brute-force ordered-pairs oracle as
-    dedup_containment: the two paths must agree exactly."""
-    from ..operators.dedup import containment_pairs
-
-    return containment_pairs(load_table(spark, sf_dir, "documents"),
-                             scale_safe=True)
 
 
 @register("dedup_containment_incr",

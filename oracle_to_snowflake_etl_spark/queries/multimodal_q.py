@@ -723,9 +723,9 @@ def q_mm_ingest_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
             # Caller-staged shingle frame + LAZY pair plan (r16, guide
             # §1.2): the pairs' only consumer here is dedup_survivors'
             # single bounded collect, so the operator's materialize
-            # path (docs.count + eager pair checkpoint = two more
-            # actions per branch) buys nothing — the auto decision's
-            # sample action doubles as the cache materialization, and
+            # path (eager pair checkpoint = one more action per
+            # branch) buys nothing — the DF-path decision's sample
+            # action doubles as the cache materialization, and
             # the collect executes the pair plan once against the warm
             # cache. Same operators, same pairs, fewer actions; the
             # standalone mm_video/audio_neardup registry entries keep
@@ -735,8 +735,7 @@ def q_mm_ingest_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .persist(StorageLevel.MEMORY_AND_DISK)
             try:
                 pairs = ngram_jaccard_pairs(
-                    None, threshold=0.3, scale_safe="auto",
-                    materialize=False, docs=docs)
+                    None, threshold=0.3, materialize=False, docs=docs)
                 return dedup_survivors(
                     catalog.where(F.col("kind") == kind), pairs,
                     id_col="media_id", a_col="doc_a", b_col="doc_b")
@@ -939,7 +938,7 @@ def q_mm_ingest_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     for f in idx.values():
         f.persist(StorageLevel.MEMORY_AND_DISK)
     # stage each cache BEFORE the pair job's branches race on it cold
-    # (the ngram_jaccard_pairs docs.count() discipline); the three
+    # (the ngram_jaccard_pairs cache-staging discipline); the three
     # modality decodes share no state, so materialize them CONCURRENTLY
     # — guide §2.6 back-fill: one modality's straggler tail overlaps
     # the next decode instead of serializing three stage chains (r15)

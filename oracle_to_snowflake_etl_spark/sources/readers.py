@@ -116,13 +116,6 @@ def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, Data
     return {n: load_table(spark, sf_dir, n) for n in names}
 
 
-def register_views(spark: SparkSession, sf_dir: str, *names: str) -> None:
-    """Register testdata tables as temp views so ``spark.sql`` can reference
-    them by name (parallels the DuckDB oracle's pre-registered views)."""
-    for n in names:
-        load_table(spark, sf_dir, n).createOrReplaceTempView(n)
-
-
 def read_csv_latest(spark: SparkSession, directory: str, schema: T.StructType,
                     prefix: str = "ads_data_", suffix: str = ".csv") -> DataFrame:
     """Reference S3: pick the lexicographically-last matching CSV and read it
@@ -354,13 +347,3 @@ def write_orc(df: DataFrame, path: str, mode: str = "overwrite",
     if partition_by:
         w = w.partitionBy(*partition_by)
     w.orc(path)
-
-
-def write_parquet(df: DataFrame, path: str, mode: str = "overwrite",
-                  partition_by: list[str] | None = None) -> None:
-    """Engine-native sink. ``partition_by`` (e.g. ["dt"]) gives partition
-    pruning for date-range queries at scale (SURVEY.md §4.3)."""
-    w = df.write.mode(mode)
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(path)

@@ -108,30 +108,30 @@ def test_audio_incremental_no_drift(spark):
     assert any(a == 3 and b == 12 for a, b, _ in incr)
 
 
-def test_silence_runs_scale_paths_agree(spark):
+def test_silence_runs_scale_paths_agree(spark, force_df_path):
     """The audio hot-shingle case: long silence runs (constant bytes)
     shared by many tracks make one window-digest shingle hot — the
-    blank-frame argument, audio geometry. All three DF paths must emit
-    identical pairs, batch and incremental forms alike."""
+    blank-frame argument, audio geometry. Both DF paths and the sampled
+    decision must emit identical pairs, batch and incremental forms
+    alike."""
     silence = "\x00" * (AUDIO_HOP * 12)
     tails = [_seg(s, 6) for s in (1, 3, 5, 7, 11)]
     rows = [(i + 1, silence + t) for i, t in enumerate(tails)]
     rows.append((9, silence + tails[0][:AUDIO_HOP * 4] + _seg(17, 2)))
     media = _media(spark, rows)
-    got = {
-        ss: {(r.doc_a, r.doc_b, round(r.jaccard, 9))
-             for r in audio_neardup_pairs(media, scale_safe=ss).collect()}
-        for ss in (False, True, "auto")}
-    assert got[False] == got[True] == got["auto"]
     corpus_m = media.where(F.col("media_id") <= 3)
     batch_m = media.where(F.col("media_id") >= 4)
     idx = audio_window_index(corpus_m)
-    got_i = {
-        ss: {(r.doc_a, r.doc_b, round(r.jaccard, 9))
-             for r in audio_neardup_pairs_incremental(
-                 batch_m, idx, scale_safe=ss).collect()}
-        for ss in (False, True, "auto")}
-    assert got_i[False] == got_i[True] == got_i["auto"]
+    got, got_i = {}, {}
+    for path in (False, True, None):
+        force_df_path(path)
+        got[path] = {(r.doc_a, r.doc_b, round(r.jaccard, 9))
+                     for r in audio_neardup_pairs(media).collect()}
+        got_i[path] = {(r.doc_a, r.doc_b, round(r.jaccard, 9))
+                       for r in audio_neardup_pairs_incremental(
+                           batch_m, idx).collect()}
+    assert got[False] == got[True] == got[None]
+    assert got_i[False] == got_i[True] == got_i[None]
 
 
 def test_text_ngram_jaccard_incremental_no_drift(spark):

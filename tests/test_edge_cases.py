@@ -247,7 +247,8 @@ def test_sample_fraction_granularity_validation(spark):
     import pytest as _pytest
 
     from oracle_to_snowflake_etl_spark.operators.dedup import (
-        choose_dedup_scale_path,
+        _auto_scale_safe,
+        shingled_docs,
     )
     from oracle_to_snowflake_etl_spark.operators.skew import (
         choose_salt_buckets,
@@ -262,7 +263,7 @@ def test_sample_fraction_granularity_validation(spark):
         with _pytest.raises(ValueError, match="sample_fraction"):
             choose_salt_buckets(df, ["k"], "rid", sample_fraction=bad)
         with _pytest.raises(ValueError, match="sample_fraction"):
-            choose_dedup_scale_path(docs, sample_fraction=bad)
+            _auto_scale_safe(shingled_docs(docs), sample_fraction=bad)
 
 
 def test_dedup_auto_empty_sample_full_frame_fallback(spark):
@@ -274,7 +275,8 @@ def test_dedup_auto_empty_sample_full_frame_fallback(spark):
     genuinely empty corpus returns the window default without
     crashing."""
     from oracle_to_snowflake_etl_spark.operators.dedup import (
-        choose_dedup_scale_path,
+        _auto_scale_safe,
+        shingled_docs,
     )
 
     n, hot = 400, 120
@@ -290,32 +292,7 @@ def test_dedup_auto_empty_sample_full_frame_fallback(spark):
         (hash60(F.col("doc_id").cast("string"), prefix="dedupauto:")
          % 1000) < 1).count()
     assert sampled == 0, "fixture premise: the 0.1% sample is empty"
-    assert choose_dedup_scale_path(hot_df, sample_fraction=0.001) is True
-    assert choose_dedup_scale_path(
-        hot_df.where("doc_id < 0"), sample_fraction=0.001) is False
-
-
-def test_scale_safe_rejects_unknown_strings(spark):
-    """scale_safe is bool | "auto"; any OTHER string used to fall
-    through `if scale_safe:` and silently take the partial-agg path —
-    a plan the caller didn't ask for (round-8 ADVICE). All three
-    prefix-filter dedups now raise."""
-    import pytest as _pytest
-
-    from oracle_to_snowflake_etl_spark.operators.dedup import (
-        containment_pairs,
-        containment_pairs_incremental,
-        ngram_jaccard_pairs,
-        shingled_docs,
-    )
-
-    docs = spark.createDataFrame(
-        [(1, "a b c d e"), (2, "a b c d f")], "doc_id long, text string")
-    for bad in ("Auto", "window", "no"):
-        with _pytest.raises(ValueError, match="scale_safe"):
-            ngram_jaccard_pairs(docs, scale_safe=bad)
-        with _pytest.raises(ValueError, match="scale_safe"):
-            containment_pairs(docs, scale_safe=bad)
-        with _pytest.raises(ValueError, match="scale_safe"):
-            containment_pairs_incremental(docs, shingled_docs(docs),
-                                          scale_safe=bad)
+    assert _auto_scale_safe(shingled_docs(hot_df),
+                            sample_fraction=0.001) is True
+    assert _auto_scale_safe(shingled_docs(hot_df.where("doc_id < 0")),
+                            sample_fraction=0.001) is False

@@ -148,12 +148,12 @@ def test_video_neardup_shared_segment(spark):
     assert all(3 not in p for p in pairs)
 
 
-def test_video_blank_frames_scale_paths_agree(spark):
+def test_video_blank_frames_scale_paths_agree(spark, force_df_path):
     """The realistic video hot-shingle case: long blank-frame runs
     shared by many videos make one frame-digest shingle hot. Both DF
-    paths (window default and the partial-agg scale_safe form the
-    "auto" default can now reach, VERDICT r8 #1) must emit identical
-    pairs — the hot shingle moves the plan, never the answer."""
+    paths (window and partial-agg) and the sampled decision must emit
+    identical pairs — the hot shingle moves the plan, never the
+    answer."""
     from oracle_to_snowflake_etl_spark.operators.multimodal import (
         video_neardup_pairs,
     )
@@ -166,11 +166,12 @@ def test_video_blank_frames_scale_paths_agree(spark):
     rows = [(i + 1, blank + t) for i, t in enumerate(tails)]
     rows.append((9, blank + tails[0][:32 * 6] + "z" * 64))
     media = _media(spark, rows)
-    got = {
-        ss: {(r.doc_a, r.doc_b, round(r.jaccard, 9))
-             for r in video_neardup_pairs(media, scale_safe=ss).collect()}
-        for ss in (False, True, "auto")}
-    assert got[False] == got[True] == got["auto"]
+    got = {}
+    for path in (False, True, None):
+        force_df_path(path)
+        got[path] = {(r.doc_a, r.doc_b, round(r.jaccard, 9))
+                     for r in video_neardup_pairs(media).collect()}
+    assert got[False] == got[True] == got[None]
     assert any(a == 1 and b == 9 for a, b, _ in got[False])
 
 
@@ -274,13 +275,12 @@ def test_video_incremental_no_drift(spark):
     assert any(a == 3 and b == 12 for a, b, _ in incr)
 
 
-def test_video_incremental_blank_frames_scale_paths_agree(spark):
-    """The incremental form's round-10 default flip to scale_safe="auto"
-    (VERDICT r9 #3, family consistency with the batch form): a drop of
-    blank-intro videos — the realistic hot-shingle batch — must emit
-    identical pairs on every DF path (window default, partial-agg
-    scale-safe, and the auto decision), against a stored corpus index
-    that shares the blank run."""
+def test_video_incremental_blank_frames_scale_paths_agree(
+        spark, force_df_path):
+    """The incremental form: a drop of blank-intro videos — the
+    realistic hot-shingle batch — must emit identical pairs on every DF
+    path (window, partial-agg, and the sampled decision), against a
+    stored corpus index that shares the blank run."""
     from oracle_to_snowflake_etl_spark.operators.multimodal import (
         video_frame_index,
         video_neardup_pairs_incremental,
@@ -296,52 +296,14 @@ def test_video_incremental_blank_frames_scale_paths_agree(spark):
         (11, blank + tails[0][:32 * 6] + "z" * 64),
         (12, blank + tails[3]), (13, blank + tails[4])])
     idx = video_frame_index(corpus_m)
-    got = {
-        ss: {(r.doc_a, r.doc_b, round(r.jaccard, 9))
-             for r in video_neardup_pairs_incremental(
-                 batch_m, idx, scale_safe=ss).collect()}
-        for ss in (False, True, "auto")}
-    assert got[False] == got[True] == got["auto"]
-    assert any(a == 1 and b == 11 for a, b, _ in got["auto"])
-
-
-def test_pairs_family_scale_safe_defaults_agree():
-    """Family-consistency guard (VERDICT r9 #3 audit): within every
-    shingle-pair family the batch and incremental forms ship the SAME
-    scale_safe default — video "auto" (realistic blank-frame hot
-    shingle), text containment False (window path pinned by its
-    registered oracles; large backfills opt into "auto")."""
-    import inspect
-
-    from oracle_to_snowflake_etl_spark.operators.dedup import (
-        containment_pairs,
-        containment_pairs_incremental,
-    )
-    from oracle_to_snowflake_etl_spark.operators.multimodal import (
-        video_neardup_pairs,
-        video_neardup_pairs_incremental,
-    )
-
-    from oracle_to_snowflake_etl_spark.operators.dedup import (
-        ngram_jaccard_pairs,
-        ngram_jaccard_pairs_incremental,
-    )
-    from oracle_to_snowflake_etl_spark.operators.multimodal import (
-        audio_neardup_pairs,
-        audio_neardup_pairs_incremental,
-    )
-
-    def default(fn):
-        return inspect.signature(fn).parameters["scale_safe"].default
-
-    assert default(video_neardup_pairs) == "auto"
-    assert default(video_neardup_pairs_incremental) == "auto"
-    assert default(audio_neardup_pairs) == "auto"
-    assert default(audio_neardup_pairs_incremental) == "auto"
-    assert default(containment_pairs) == default(
-        containment_pairs_incremental) is False
-    assert default(ngram_jaccard_pairs) == default(
-        ngram_jaccard_pairs_incremental) is False
+    got = {}
+    for path in (False, True, None):
+        force_df_path(path)
+        got[path] = {(r.doc_a, r.doc_b, round(r.jaccard, 9))
+                     for r in video_neardup_pairs_incremental(
+                         batch_m, idx).collect()}
+    assert got[False] == got[True] == got[None]
+    assert any(a == 1 and b == 11 for a, b, _ in got[None])
 
 
 def test_frame_docs_order_is_frame_order(spark):

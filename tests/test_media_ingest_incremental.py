@@ -196,14 +196,10 @@ def test_replay_idempotence_exclude_own_partition(spark, scenario):
 
 
 def test_scale_decision_amortized(spark, scenario, monkeypatch):
-    """VERDICT r10 #3: the auto scale decision is hoisted to the
-    composition — exactly ONE _auto_scale_safe call per shingle
-    modality (video, audio) on the STAGED batch frames with "auto"
-    (the inner incrementals receive explicit bools and never
-    re-decide), and ZERO calls when the caller passes the explicit
-    bool (the decide-once-per-corpus production shape). The accept
-    set is identical on every path (the decision moves the plan,
-    never the pairs)."""
+    """Exactly ONE DF-path decision (_auto_scale_safe) per shingle
+    modality (video, audio) per drop: the lanes do not decide, the
+    inner incrementals each decide once on the STAGED batch frame (its
+    one action doubling as that cache's materialization)."""
     from oracle_to_snowflake_etl_spark.operators import dedup as D
 
     corpus, batch, idx = scenario
@@ -221,21 +217,7 @@ def test_scale_decision_amortized(spark, scenario, monkeypatch):
     got = {(r.media_id, r.kind, r.n_bytes)
            for r in media_ingest_incremental(batch, **idx).collect()}
     assert got == expect
-    assert len(calls) == 2  # one per shingle modality, none inner
-
-    calls.clear()
-    got = {(r.media_id, r.kind, r.n_bytes)
-           for r in media_ingest_incremental(
-               batch, **idx, scale_safe=False).collect()}
-    assert got == expect
-    assert len(calls) == 0
-
-    calls.clear()
-    got = {(r.media_id, r.kind, r.n_bytes)
-           for r in media_ingest_incremental(
-               batch, **idx, scale_safe=True).collect()}
-    assert got == expect
-    assert len(calls) == 0
+    assert len(calls) == 2  # one per shingle modality
 
 
 def test_fused_driver_decision_equals_distributed_fallback(

@@ -94,17 +94,17 @@ def test_lsh_candidate_paths_stay_narrow(spark, sf_dir):
         containment_pairs(docs, materialize=False)) <= 10
 
 
-def test_scale_safe_dedup_no_hot_key_window(spark, sf_dir):
-    """The prefix-filter dedups' scale path (scale_safe=True) must plan
+def test_scale_safe_dedup_no_hot_key_window(spark, sf_dir, force_df_path):
+    """The prefix-filter dedups' partial-agg DF path must plan
     NO window partitioned on the shingle hash ``h`` — a WindowExec
     funnels every occurrence of one key into one task with no AQE skew
     split, so a boilerplate shingle in 10% of a web corpus is a
     straggler/OOM; the scale path computes document frequency by
     groupBy partial-agg + join-back instead. Windows partitioned on
     ``doc`` remain allowed (bounded by one document's shingle count).
-    Sanity: the default path DOES carry the h-window (it is the
+    Sanity: the window path DOES carry the h-window (it is the
     measured-faster small-corpus form — if it disappears, the two
-    paths have converged and the flag should be retired)."""
+    paths have converged and the decision should be retired)."""
     from oracle_to_snowflake_etl_spark.operators.dedup import (
         containment_pairs, ngram_jaccard_pairs)
     from oracle_to_snowflake_etl_spark.plans.inspect import (
@@ -113,17 +113,19 @@ def test_scale_safe_dedup_no_hot_key_window(spark, sf_dir):
 
     docs = load_table(spark, sf_dir, "documents")
     for op in (ngram_jaccard_pairs, containment_pairs):
-        safe = op(docs, materialize=False, scale_safe=True)
+        force_df_path(True)
+        safe = op(docs, materialize=False)
         assert all("h" not in cols for cols in window_partition_cols(safe)), \
             (op.__name__, window_partition_cols(safe))
         # doc-partitioned ranking windows are still expected in
         # containment (per-doc size, corpus-growth-independent)
-        fast = op(docs, materialize=False, scale_safe=False)
+        force_df_path(False)
+        fast = op(docs, materialize=False)
         assert any("h" in cols for cols in window_partition_cols(fast)), \
             op.__name__
 
 
-def test_hot_shingle_scale_path_bounded(spark):
+def test_hot_shingle_scale_path_bounded(spark, force_df_path):
     """Hot-shingle fixture (one boilerplate shingle in 30% of docs):
     the scale path must (a) stay exactly correct vs python brute force,
     and (b) keep its max-task input bounded. Boundedness is asserted
@@ -134,8 +136,9 @@ def test_hot_shingle_scale_path_bounded(spark):
     and the join-back is a join, not a window, so OptimizeSkewedJoin
     can split it (the engagement itself is proven by
     test_aqe_skew_join_split_engages on the same join machinery). The
-    default window path on this corpus puts all 30% of rows in one
-    window partition — the hazard the flag exists to avoid."""
+    window path on this corpus would put all 30% of rows in one
+    window partition — the hazard the partial-agg path exists to
+    avoid."""
     from pyspark.sql import functions as F
 
     from oracle_to_snowflake_etl_spark.operators.dedup import (
@@ -156,10 +159,11 @@ def test_hot_shingle_scale_path_bounded(spark):
                 / len(shs[a] | shs[b]) >= 0.5}
     want_con = {(a, b) for a in shs for b in shs if a != b and shs[a]
                 and len(shs[a] & shs[b]) / len(shs[a]) >= 0.8}
+    force_df_path(True)
     got_jac = {(r.doc_a, r.doc_b) for r in
-               ngram_jaccard_pairs(df, scale_safe=True).collect()}
+               ngram_jaccard_pairs(df).collect()}
     got_con = {(r.doc_a, r.doc_b) for r in
-               containment_pairs(df, scale_safe=True).collect()}
+               containment_pairs(df).collect()}
     assert got_jac == want_jac
     assert got_con == want_con
     # the mechanism: after the partial agg, the hot shingle is ONE row
@@ -175,19 +179,23 @@ def test_hot_shingle_scale_path_bounded(spark):
 
 
 def test_auto_scale_safe_decision(spark, sf_dir):
-    """scale_safe="auto" (VERDICT r6 #1): the engine picks the DF
-    regime itself — partial-agg on the 30%-hot-shingle fixture (the
+    """The engine picks the DF regime itself on every call —
+    partial-agg on the 30%-hot-shingle fixture (the
     hot_frac branch) and on anything past the volume crossover (the
     row_threshold branch), the window form on the small uniform bench
     corpus. Both decision branches + the operator-level wiring are
     covered; equality of the two forms is proven elsewhere
-    (test_scale_safe_paths_equal_default), so auto can only move the
-    plan, never the answer."""
+    (test_scale_safe_paths_equal_default), so the decision can only
+    move the plan, never the answer."""
     from oracle_to_snowflake_etl_spark.operators.dedup import (
-        choose_dedup_scale_path, containment_pairs, ngram_jaccard_pairs)
+        _auto_scale_safe, containment_pairs, ngram_jaccard_pairs,
+        shingled_docs)
     from oracle_to_snowflake_etl_spark.plans.inspect import (
         window_partition_cols)
     from oracle_to_snowflake_etl_spark.sources.readers import load_table
+
+    def decide(df, **kw):
+        return _auto_scale_safe(shingled_docs(df), **kw)
 
     n, hot = 1000, 300
     hot_df = spark.createDataFrame(
@@ -199,26 +207,24 @@ def test_auto_scale_safe_decision(spark, sf_dir):
     # decision function, deterministic full-sample form: hot fixture
     # trips the hot_frac branch; the bench corpus (max shingle DF
     # ~1.4% of 500 docs, ~24k exploded rows) trips neither
-    assert choose_dedup_scale_path(hot_df, sample_fraction=1.0) is True
-    assert choose_dedup_scale_path(docs, sample_fraction=1.0) is False
+    assert decide(hot_df, sample_fraction=1.0) is True
+    assert decide(docs, sample_fraction=1.0) is False
     # volume branch alone: uniform corpus (no hot shingle) past an
     # artificially low row threshold
-    assert choose_dedup_scale_path(
-        hot_df.where("doc_id >= 300"), sample_fraction=1.0,
-        row_threshold=100) is True
+    assert decide(hot_df.where("doc_id >= 300"), sample_fraction=1.0,
+                  row_threshold=100) is True
     # empty corpus -> window form trivially
-    assert choose_dedup_scale_path(
-        hot_df.where("doc_id < 0"), sample_fraction=1.0) is False
+    assert decide(hot_df.where("doc_id < 0"), sample_fraction=1.0) is False
 
     # operator wiring at the DEFAULT sample fraction (hash-sampled docs
-    # are an unbiased DF estimate, deterministic for fixed ids): auto
-    # plans the partial-agg (h-window-free) form on the hot fixture and
-    # the window form on the bench corpus
+    # are an unbiased DF estimate, deterministic for fixed ids): the
+    # decision plans the partial-agg (h-window-free) form on the hot
+    # fixture and the window form on the bench corpus
     for op in (ngram_jaccard_pairs, containment_pairs):
-        auto_hot = op(hot_df, materialize=False, scale_safe="auto")
+        auto_hot = op(hot_df, materialize=False)
         assert all("h" not in cols
                    for cols in window_partition_cols(auto_hot)), op.__name__
-        auto_small = op(docs, materialize=False, scale_safe="auto")
+        auto_small = op(docs, materialize=False)
         assert any("h" in cols
                    for cols in window_partition_cols(auto_small)), op.__name__
 
@@ -226,15 +232,60 @@ def test_auto_scale_safe_decision(spark, sf_dir):
     # batch-keyed) — hot batch -> partial-agg, small uniform batch ->
     # window
     from oracle_to_snowflake_etl_spark.operators.dedup import (
-        containment_pairs_incremental, shingled_docs)
+        containment_pairs_incremental)
 
     corpus = shingled_docs(docs)
-    inc_hot = containment_pairs_incremental(hot_df, corpus,
-                                            scale_safe="auto")
+    inc_hot = containment_pairs_incremental(hot_df, corpus)
     assert all("h" not in cols for cols in window_partition_cols(inc_hot))
-    inc_small = containment_pairs_incremental(docs, corpus,
-                                              scale_safe="auto")
+    inc_small = containment_pairs_incremental(docs, corpus)
     assert any("h" in cols for cols in window_partition_cols(inc_small))
+
+
+def test_auto_decision_small_sample_noise_is_not_hot(spark):
+    """A 150-doc corpus over a 31-word vocabulary (the benchmark's
+    corpus shape) samples ~16 docs at the default fraction, where a
+    shingle shared by 2 of them already reads as >=10% "hot" although
+    the full frame holds its hottest shingle in ~3% of docs: the
+    decision must keep the window path there. Both hot fixtures still
+    take the partial-agg path: 1000 docs with a 30%-hot shingle, and
+    the 400-doc corpus whose 0.1% sample is empty (full-frame
+    fallback). No Spark action beyond the decisions themselves."""
+    import random
+
+    from oracle_to_snowflake_etl_spark.operators.dedup import (
+        _auto_scale_safe, shingled_docs)
+
+    vocab = ("a agg batch big column customer data dup fast filter group "
+             "hash join key line merge order part query row scan slow "
+             "small sort spark stream table the value vector window"
+             ).split()
+    rng = random.Random(5)
+    texts: list[str] = []
+    for i in range(150):
+        r = rng.random()
+        if i > 10 and r < 0.02:            # exact copy
+            texts.append(texts[rng.randrange(i)])
+        elif i > 10 and r < 0.08:          # near copy
+            toks = texts[rng.randrange(i)].split()
+            for _ in range(max(1, len(toks) // 12)):
+                toks[rng.randrange(len(toks))] = rng.choice(vocab)
+            texts.append(" ".join(toks))
+        else:
+            texts.append(" ".join(rng.choice(vocab)
+                                  for _ in range(rng.randint(10, 40))))
+    small = spark.createDataFrame(list(enumerate(texts)),
+                                  "doc_id long, text string")
+    assert _auto_scale_safe(shingled_docs(small)) is False
+
+    def hot_fixture(n, hot):
+        return spark.createDataFrame(
+            [(i, ("hot hot hot " if i < hot else "")
+              + f"a{i} b{i} c{i} d{i} e{i}") for i in range(n)],
+            "doc_id long, text string")
+
+    assert _auto_scale_safe(shingled_docs(hot_fixture(1000, 300))) is True
+    assert _auto_scale_safe(shingled_docs(hot_fixture(400, 120)),
+                            sample_fraction=0.001) is True
 
 
 def test_no_cartesian_or_nested_loop_joins(spark, sf_dir):
@@ -624,13 +675,14 @@ def test_ahash_pairs_shuffles_longs_not_payloads(spark, sf_dir):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
-def test_video_neardup_scale_path_no_hot_key_window(spark, sf_dir):
-    """video_neardup_pairs forwards the text family's scale contract
-    (VERDICT r8 #1): on the scale path the frame-digest document
-    frequency must come from a partial-agg join-back, never a COUNT
-    window partitioned on the shingle hash (the blank/intro-frame
-    hot-shingle hazard); the default small-corpus path keeps the
-    measured-faster window form."""
+def test_video_neardup_scale_path_no_hot_key_window(spark, sf_dir,
+                                                    force_df_path):
+    """video_neardup_pairs inherits the text family's scale contract:
+    on the partial-agg path the frame-digest document frequency must
+    come from a partial-agg join-back, never a COUNT window
+    partitioned on the shingle hash (the blank/intro-frame hot-shingle
+    hazard); the small-corpus window path keeps the measured-faster
+    window form."""
     from oracle_to_snowflake_etl_spark.operators.multimodal import (
         media_from_documents, video_neardup_pairs)
     from oracle_to_snowflake_etl_spark.plans.inspect import (
@@ -638,10 +690,12 @@ def test_video_neardup_scale_path_no_hot_key_window(spark, sf_dir):
     from oracle_to_snowflake_etl_spark.sources.readers import load_table
 
     media = media_from_documents(load_table(spark, sf_dir, "documents"))
-    safe = video_neardup_pairs(media, scale_safe=True, materialize=False)
+    force_df_path(True)
+    safe = video_neardup_pairs(media, materialize=False)
     assert all("h" not in cols for cols in window_partition_cols(safe)), \
         window_partition_cols(safe)
-    fast = video_neardup_pairs(media, scale_safe=False, materialize=False)
+    force_df_path(False)
+    fast = video_neardup_pairs(media, materialize=False)
     assert any("h" in cols for cols in window_partition_cols(fast))
 
 
@@ -665,7 +719,8 @@ def test_modality_incrementals_no_payload_shuffle_no_cartesian(spark,
         assert "BroadcastNestedLoopJoin" not in plan, name
 
 
-def test_audio_neardup_shuffles_digests_not_payloads(spark, sf_dir):
+def test_audio_neardup_shuffles_digests_not_payloads(spark, sf_dir,
+                                                     force_df_path):
     """audio_neardup_pairs keeps the modality-family plan contract:
     payload bytes die in the window-digest map pass (never reach an
     Exchange) and candidate generation is the equi-join prefix filter
@@ -686,6 +741,7 @@ def test_audio_neardup_shuffles_digests_not_payloads(spark, sf_dir):
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     media = media_from_documents(load_table(spark, sf_dir, "documents"))
-    safe = audio_neardup_pairs(media, scale_safe=True, materialize=False)
+    force_df_path(True)
+    safe = audio_neardup_pairs(media, materialize=False)
     assert all("h" not in cols for cols in window_partition_cols(safe)), \
         window_partition_cols(safe)

@@ -273,12 +273,12 @@ def test_shared_shingle_docs_equivalent(spark):
     assert con_shared == {tuple(r) for r in containment_pairs(df).collect()}
 
 
-def test_scale_safe_paths_equal_default(spark):
-    """scale_safe=True (groupBy partial-agg DF + semi-join membership)
-    must produce EXACTLY the default window-path results for all three
-    prefix-filter operators on real data — same pairs, same scores.
-    The flag changes the physical shuffle strategy (hot-key-safe at web
-    scale), never the semantics."""
+def test_scale_safe_paths_equal_default(spark, force_df_path):
+    """The partial-agg DF path (groupBy partial-agg DF + semi-join
+    membership) must produce EXACTLY the window-path results for all
+    three prefix-filter operators on real data — same pairs, same
+    scores. The decision changes the physical shuffle strategy
+    (hot-key-safe at web scale), never the semantics."""
     from pyspark.sql import functions as F
 
     from oracle_to_snowflake_etl_spark.operators.dedup import (
@@ -290,18 +290,17 @@ def test_scale_safe_paths_equal_default(spark):
     from oracle_to_snowflake_etl_spark.sources.readers import load_table
 
     df = load_table(spark, "/root/testdata/sf0.001", "documents")
-    for op in (ngram_jaccard_pairs, containment_pairs):
-        fast = {tuple(r) for r in op(df).collect()}
-        safe = {tuple(r) for r in op(df, scale_safe=True).collect()}
-        assert fast == safe, op.__name__
     corpus = shingled_docs(df.where(F.col("doc_id") % 4 != 0))
     batch = df.where(F.col("doc_id") % 4 == 0)
-    fast = {tuple(r) for r in
-            containment_pairs_incremental(batch, corpus).collect()}
-    safe = {tuple(r) for r in
-            containment_pairs_incremental(batch, corpus,
-                                          scale_safe=True).collect()}
-    assert fast == safe
+    got = {}
+    for path in (False, True):
+        force_df_path(path)
+        got[path] = (
+            [{tuple(r) for r in op(df).collect()}
+             for op in (ngram_jaccard_pairs, containment_pairs)],
+            {tuple(r) for r in
+             containment_pairs_incremental(batch, corpus).collect()})
+    assert got[False] == got[True]
 
 
 def test_incremental_minhash_equals_full_restricted(spark):

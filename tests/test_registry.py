@@ -41,3 +41,20 @@ def test_bench_json_line_fits_driver_tail_buffer():
     })
     # Driver keeps only the last 2000 chars of stdout; leave headroom.
     assert len(line) < 1900
+
+
+def test_dump_plans_headliners_registered():
+    """tools/dump_plans.py renders one PLANS.md section per HEADLINERS
+    name through ``queries()[name]``: a retired query left in that list
+    fails only when the (Spark-heavy) tool runs, with a KeyError."""
+    import importlib.util
+    import os
+
+    path = os.path.join(os.path.dirname(os.path.dirname(
+        os.path.abspath(__file__))), "tools", "dump_plans.py")
+    spec = importlib.util.spec_from_file_location("dump_plans", path)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    missing = [name for name, _ in mod.HEADLINERS
+               if name not in R._REGISTRY]
+    assert not missing, missing

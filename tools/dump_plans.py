@@ -38,15 +38,13 @@ HEADLINERS = [
      "n-ceil(t*n)+1 shingles are indexed (as xxhash64 longs), DF is a "
      "window annotation (no join-back), exact rescore on the candidate "
      "set only."),
-    ("dedup_ngram_jaccard_auto",
-     "scale_safe='auto': two sample-bounded decision jobs pick the DF "
-     "regime — window annotate under the measured crossover, partial-agg "
-     "+ join-back past ~1M exploded rows or a >=10% hot shingle (the "
-     "un-splittable WindowExec straggler). At toy scale the decision is "
-     "~50% overhead; at 100 TB it is noise — and a pipeline running "
-     "several set-similarity ops on one corpus should DECIDE ONCE via "
-     "choose_dedup_scale_path(df) and pass the explicit bool to each "
-     "operator, paying the sample jobs once per corpus, not per call."),
+    ("dedup_ngram_jaccard_incr",
+     "Incremental exact Jaccard: one sample-bounded decision job on the "
+     "BATCH picks its DF path (window annotate under the measured "
+     "crossover, partial-agg + join-back past ~1M exploded rows or a "
+     "hot shingle seen in >=10% and >=10 of the sampled docs); the "
+     "stored corpus index is bounded by a semi-join against the batch's "
+     "prefix shingles, so corpus text is never re-read."),
     ("dedup_containment",
      "Asymmetric prefix filter on one rank-annotated (doc, h) frame: "
      "row_number over the doc partition marks each doc's lossless "
@@ -157,8 +155,8 @@ HEADLINERS = [
      "are computed in the Arrow map pass (payload bytes never reach "
      "an Exchange — only 32-char digests move), then the track-as-"
      "digest-document rides ngram_jaccard_pairs' lossless prefix "
-     "filter verbatim, scale_safe='auto' guarding the silence-run hot "
-     "shingle."),
+     "filter verbatim, its sampled DF-path decision guarding the "
+     "silence-run hot shingle."),
     ("mm_ingest_incremental",
      "Composed incremental multimodal ingest (round 10): the drop is "
      "gated by one Arrow byte-stats pass, each modality joins its "
