@@ -831,11 +831,11 @@ def dedup_survivors(docs: DataFrame, pairs: DataFrame,
 def ngram_jaccard_dedup(df: DataFrame, threshold: float = 0.5,
                         keep: str = "first", score: Column | None = None,
                         text_col: str = "text", id_col: str = "doc_id",
-                        **pair_kwargs) -> DataFrame:
+                        k: int = 3) -> DataFrame:
     """Survivors of ``df`` under exact n-gram-Jaccard near-dup clusters
     (:func:`ngram_jaccard_pairs` -> :func:`dedup_survivors`). ``keep``/
-    ``score`` select the min-id or quality-arg-max policy; remaining
-    kwargs (``k``) forward to the pair generator unchanged.
+    ``score`` select the min-id or quality-arg-max policy; ``k`` is the
+    shingle width the pair generator uses.
 
     Cache shape (r16, guide §1.2): the pair set's ONLY consumer here is
     dedup_survivors' cluster resolution (one bounded action), so the
@@ -846,13 +846,13 @@ def ngram_jaccard_dedup(df: DataFrame, threshold: float = 0.5,
     Same operators, same pairs, pytest/oracle-identical results."""
     return _staged_pair_dedup(
         ngram_jaccard_pairs, df, threshold, keep, score, text_col,
-        id_col, pair_kwargs)
+        id_col, k)
 
 
 def containment_dedup(df: DataFrame, threshold: float = 0.8,
                       keep: str = "first", score: Column | None = None,
                       text_col: str = "text", id_col: str = "doc_id",
-                      **pair_kwargs) -> DataFrame:
+                      k: int = 3) -> DataFrame:
     """Survivors of ``df`` under doc-in-doc containment clusters
     (:func:`containment_pairs` -> :func:`dedup_survivors`). The ordered
     (contained, containing) edges are treated as undirected for cluster
@@ -864,12 +864,12 @@ def containment_dedup(df: DataFrame, threshold: float = 0.8,
     (r16)."""
     return _staged_pair_dedup(
         containment_pairs, df, threshold, keep, score, text_col,
-        id_col, pair_kwargs)
+        id_col, k)
 
 
 def _staged_pair_dedup(pair_fn, df: DataFrame, threshold: float,
                        keep: str, score: Column | None, text_col: str,
-                       id_col: str, pair_kwargs: dict) -> DataFrame:
+                       id_col: str, k: int) -> DataFrame:
     """Shared staged-docs + lazy-pairs core of the one-call dedup
     compositions: persist the shingle frame (the pair generator's
     DF-path decision is the action that materializes it), run the pair
@@ -878,14 +878,12 @@ def _staged_pair_dedup(pair_fn, df: DataFrame, threshold: float,
     lineage holds only ``df`` and the local cluster ids)."""
     from pyspark import StorageLevel
 
-    kwargs = dict(pair_kwargs)
-    k = kwargs.pop("k", 3)
     docs = shingled_docs(df, text_col, id_col, k) \
         .persist(StorageLevel.MEMORY_AND_DISK)
     try:
         pairs = pair_fn(df, threshold=threshold, text_col=text_col,
                         id_col=id_col, k=k, materialize=False,
-                        docs=docs, **kwargs)
+                        docs=docs)
         return dedup_survivors(df, pairs, keep=keep, score=score,
                                id_col=id_col)
     finally:

@@ -160,7 +160,9 @@ def corpus_prep(df: DataFrame, quality_min_q6: int = 400_000,
 
         exact dedup -> quality gate -> train-split selection -> packing
 
-    Returns (id, n_tok, bin): the packed training shards.
+    Returns (id, n_tok, bin): the packed training shards. The split
+    step keeps the train interval of :func:`sampling.split_assign`'s
+    hash-interval labels, inlined as one column predicate.
 
     Shuffle inventory (the whole pipeline, at any scale):
       1. content-hash aggregate for dedup keepers (bounded by distinct
@@ -176,7 +178,6 @@ def corpus_prep(df: DataFrame, quality_min_q6: int = 400_000,
     stable: the min-id keeper only changes if a SMALLER id arrives).
     """
     from .dedup import exact_dedup
-    from .sampling import split_assign as _split  # noqa: F401  (doc link)
     from ..functions.hashing import hash60
 
     keep = exact_dedup(df, text_col, id_col) \

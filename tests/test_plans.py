@@ -65,15 +65,14 @@ def test_asof_is_single_shuffle(spark, sf_dir):
 def test_lsh_candidate_paths_stay_narrow(spark, sf_dir):
     """Perf-regression locks for the round-2 rewrites: SRP-LSH re-attaches
     embeddings via broadcast-able hash joins (2 exchanges: banding +
-    pair dedup), the int8 ANN scan broadcasts its query matrix (2
-    exchanges on the unexecuted plan: candidate cut + rescore; AQE
-    re-plans after collect), MinHash stays at its banding/pair
-    shuffles, and the DF-capped ngram plan stays bounded."""
+    pair dedup), MinHash stays at its banding/pair shuffles, and the
+    DF-capped ngram plan stays bounded. (The int8 ANN request returns
+    a local result, so its bound is a job count:
+    test_ann_request_runs_three_jobs.)"""
     # earlier tests may have populated the cache (CacheManager matches
     # by plan) — clear it so the asserted shapes are the cold plans
     spark.catalog.clearCache()
-    bounds = {"ann_srp_neardup": 2, "ann_int8_topk": 2,
-              "dedup_minhash_lsh": 3}
+    bounds = {"ann_srp_neardup": 2, "dedup_minhash_lsh": 3}
     for name, bound in bounds.items():
         df = queries()[name](spark, sf_dir)
         assert exchange_count(df) <= bound, name
@@ -92,6 +91,44 @@ def test_lsh_candidate_paths_stay_narrow(spark, sf_dir):
     # join on h)
     assert exchange_count(
         containment_pairs(docs, materialize=False)) <= 10
+
+
+def test_ann_request_runs_three_jobs(spark, sf_dir, tmp_path):
+    """One at-rest ANN request is at most three Spark jobs — query
+    collect, probed-cell scan, candidate fetch — with the global cut
+    and rescore on the driver, and its local result collects with no
+    job. Counted from the status tracker under a job group, on a tiny
+    4-cell index whose handle the first request opens."""
+    from pyspark.sql import functions as F
+
+    from oracle_to_snowflake_etl_spark.operators.similarity import (
+        ann_topk, write_ivf_int8_index)
+    from oracle_to_snowflake_etl_spark.sources.readers import load_table
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    cents = tuple(tuple(r.embedding) for r in
+                  emb.orderBy("vec_id").limit(4).collect())
+    idx = str(tmp_path / "idx")
+    write_ivf_int8_index(emb, idx, centroids=cents)
+    q = emb.where(F.col("vec_id") < 3)
+    warm = ann_topk(emb, q, idx, k=5, nprobe=2).collect()
+    sc = spark.sparkContext
+    try:
+        sc.setJobGroup("ann-request", "ann_topk")
+        out = ann_topk(emb, q, idx, k=5, nprobe=2)
+        sc.setJobGroup("ann-result", "collect")
+        rows = out.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # job events reach the status store through the listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+
+    def jobs(group):
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    assert sorted(rows) == sorted(warm) and len(rows) == 3 * 5
+    assert 1 <= jobs("ann-request") <= 3, jobs("ann-request")
+    assert jobs("ann-result") == 0
 
 
 def test_scale_safe_dedup_no_hot_key_window(spark, sf_dir, force_df_path):

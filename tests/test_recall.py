@@ -192,13 +192,16 @@ def test_ivf_int8_composed_recall(spark, emb):
     assert {tuple(r) for r in full.collect()} == exact_rows
 
 
-def test_ivf_int8_indexed_equals_inmemory_and_prunes(spark, emb, tmp_path):
+def test_ivf_int8_indexed_equals_inmemory_and_prunes(spark, emb, tmp_path,
+                                                     monkeypatch):
     """The at-rest composed form (write_ivf_int8_index + index_path)
     must return EXACTLY the in-memory form's rows — same quantization
-    formula, same probe mask, two entrances — and the scan over the
-    index must resolve the probed-cell set as PartitionFilters at
-    planning time (directory pruning: unprobed cells are never
-    listed), reading only probed cells' files."""
+    formula, same probe mask, two entrances, and either side of the
+    request's size gates (one-task or split scan; IN-list or semi-join
+    candidate fetch) — and the scan over the index must resolve the
+    probed-cell set as PartitionFilters at planning time (directory
+    pruning: unprobed cells are never listed), reading only probed
+    cells' files."""
     import os
 
     from pyspark.sql import functions as F
@@ -226,6 +229,12 @@ def test_ivf_int8_indexed_equals_inmemory_and_prunes(spark, emb, tmp_path):
     idx_df = ann_ivf_int8_topk(emb, q, k=10, index_path=path)
     idx = {tuple(r) for r in idx_df.collect()}
     assert idx == mem and len(idx) == 20 * 10
+    from oracle_to_snowflake_etl_spark.operators import similarity
+
+    monkeypatch.setattr(similarity, "ANN_SCAN_ONE_TASK_WORK", 0)
+    monkeypatch.setattr(similarity, "ANN_FETCH_ISIN_MAX", 0)
+    assert {tuple(r) for r in ann_ivf_int8_topk(
+        emb, q, k=10, index_path=path).collect()} == mem
 
     # pruning is plan-real AND byte-real: the probed-cell isin shows up
     # as PartitionFilters, and only probed directories' files are read.

@@ -51,11 +51,13 @@ HEADLINERS = [
      "prefix, max-over-h marks shingles occurring in >=1 prefix (the "
      "lossless containing-side bound); one hash-join + exact rescore."),
     ("ann_ivf_int8_topk",
-     "Corpus never shuffles: the scan reads only the probed cells' "
-     "partitions of the int8 store (PartitionFilters), the quantized "
-     "query matrix and probe mask ride one broadcast, each task emits "
-     "its top k x rescore ids per query, and only those skinny "
-     "candidate rows shuffle for the cut and the float rescore."),
+     "Eager request, local result: three jobs run inside the call "
+     "(query collect; the scan of only the probed cells' partitions of "
+     "the int8 store, each task emitting its top k x rescore ids per "
+     "query; the fetch of only the cut candidates' float vectors), the "
+     "global cut and exact rescore run on the driver, and the returned "
+     "plan is a scan of at most |queries| x k local rows. Nothing "
+     "shuffles; the job count is pinned in tests/test_plans.py."),
     ("asof_click_attribution",
      "Union + single window sort (<=1 exchange) — the inequality-join "
      "formulation would plan BroadcastNestedLoopJoin."),
