@@ -38,9 +38,7 @@ north-star extension surface.
 
 from __future__ import annotations
 
-import functools
 import hashlib
-import inspect
 import threading
 from functools import lru_cache
 
@@ -1672,8 +1670,13 @@ ANN_GATHER_MIN_ROWS_PER_CELL = 64
 #: probed index bytes x queries (~ the scan's int8 multiply-adds at 1
 #: byte per code dim) up to which :func:`ann_ivf_int8_topk` scans the
 #: probed cells in ONE task instead of Spark's file splits. Measured on
-#: 4 vCPUs at 2000 vectors (24 of 64 cells, 8 queries, ~0.5M): the
-#: scan job takes 0.27 s as one task against 0.40 s as four.
+#: 4 vCPUs (local[4], 64-dim stores of 2k-200k vectors, nprobe 24 of 64,
+#: 4-64 queries; median scan-job time, one task / four tasks): 0.61 at
+#: 2.2e6, 0.83 at 1.4e7, 0.78 at 3.7e7, 0.97 at 5.0e7; past it mixed —
+#: 0.90, 0.83, 0.93, 0.91 at 5.8e7-1.2e8 on 60k vectors but 1.04, 1.07
+#: at 9.2e7 and 1.2e8 on 200k — and four tasks win from 2.5e8 (1.20,
+#: 1.60, 1.63 at 2.5e8, 5.1e8, 1.0e9). The gate sits where one task
+#: stops winning everywhere.
 ANN_SCAN_ONE_TASK_WORK = 50_000_000
 
 #: row schema of the at-rest int8 ANN store (:func:`write_ivf_int8_index`)
@@ -1865,9 +1868,11 @@ def _topk_frame(spark, query_id, neighbor_id, sim_q6) -> DataFrame:
 
 #: candidate-id count up to which the float-vector fetch of
 #: :func:`_rescore_candidates` filters with a literal IN; past it, a
-#: broadcast semi-join (one more job). Measured on 4 vCPUs: the IN
-#: costs ~60 us per id to parse and plan (0.15 s at 240 ids, 4.4 s at
-#: 69k), the semi-join 0.25 s at 240 ids and 0.8 s at 69k.
+#: broadcast semi-join (one more job). The IN costs ~60 us per id to
+#: parse and plan; the semi-join a near-flat job. Measured on 4 vCPUs
+#: over a 200k x 64 corpus (median fetch, IN / semi-join): 0.34 / 0.42 s
+#: at 240 ids, 0.38 / 0.45 at 1000, 0.41 / 0.42 at 2000, 0.59 / 0.46 at
+#: 4000, 0.61 / 0.46 at 8000, 1.05 / 0.55 at 16k, 4.4 / 0.8 at 69k.
 ANN_FETCH_ISIN_MAX = 2048
 
 
@@ -1901,16 +1906,17 @@ def _rescore_candidates(spark, cand, corpus: DataFrame,
                         r_cut: int, vec_col: str,
                         id_col: str) -> DataFrame:
     """Tail of :func:`ann_ivf_int8_topk`, run on the DRIVER: global
-    top-R cut over the collected per-partition candidates (``cand``, a
-    pyarrow table), ONE Spark job that fetches only the candidates'
-    float vectors from ``corpus`` (two past :data:`ANN_FETCH_ISIN_MAX`
-    ids), then the exact cos_q6 rescore with
-    :func:`_cos_q6_udf`'s cumsum fold (:func:`_exact_q6_rows`) and the
-    per-query top-k. The rows it works on are at most |queries| x k x
-    rescore, so a shuffle, a join and a second Python stage cost more
-    than the numpy they ran; row for row the result equals the Spark
-    window/join form it replaced (same total orders, same fold, same
-    join multiplicities)."""
+    top-R cut over the collected per-task candidates (``cand``, a
+    pyarrow table of at most defaultParallelism x |queries| x R rows),
+    ONE Spark job that fetches only the cut candidates' float vectors
+    from ``corpus`` (two past :data:`ANN_FETCH_ISIN_MAX` ids), then the
+    exact cos_q6 rescore with :func:`_cos_q6_udf`'s cumsum fold
+    (:func:`_exact_q6_rows`) and the per-query top-k. After the cut the
+    rows are at most |queries| x R (R = k x rescore), so a shuffle, a
+    join and a second Python stage cost more than the numpy they ran;
+    row for row the result equals the Spark window/join form it
+    replaced (same total orders, same fold, same join
+    multiplicities)."""
     cq = cand.column("query_id").to_numpy()
     cn = cand.column("neighbor_id").to_numpy()
     keep = _head_per_query(cq, cand.column("approx").to_numpy(), cn, r_cut)
@@ -1971,8 +1977,10 @@ def ann_ivf_int8_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
 
     The request is EAGER and the result LOCAL: three Spark jobs run
     inside the call — (1) collect the query set (capped at
-    ``max_queries``), (2) the scan kernel over the probed cells,
-    collecting each partition's top-``k x rescore`` candidates, (3)
+    ``max_queries``), (2) the scan kernel over the probed cells in at
+    most ``defaultParallelism`` tasks, collecting each task's
+    top-``k x rescore`` candidates per query (so the driver receives at
+    most defaultParallelism x |queries| x k x rescore rows), (3)
     fetch only the cut candidates' float vectors from ``corpus`` — and
     the global cut and exact rescore run on the driver in numpy
     (:func:`_rescore_candidates`). The returned DataFrame is a local
@@ -2124,11 +2132,10 @@ def ann_ivf_int8_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
         qc = qc.select(F.col("neighbor_id"), F.col("cell"),
                        F.col("scale").alias("c_scale"),
                        F.col("qb").alias("c_qb"))
-        if len(paths) * handle.dir_bytes * len(qrows) \
-                <= ANN_SCAN_ONE_TASK_WORK:
-            # a small scan runs as ONE Python task: below this size
-            # each extra task costs more than the work it takes over
-            qc = qc.coalesce(1)
+        # a small scan runs as ONE Python task: below this size an
+        # extra task costs more than the work it takes over
+        small = (len(paths) * handle.dir_bytes * len(qrows)
+                 <= ANN_SCAN_ONE_TASK_WORK)
         # purged-but-replay-resurrectable ids stay invisible to
         # serving until the flatten retires the sidecar
         deny = handle.tombstones
@@ -2138,12 +2145,19 @@ def ann_ivf_int8_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
                         F.col(vec_col).alias("c_vec"),
                         ivf_cell(F.col(vec_col), cells=cells,
                                  centroids=centroids).alias("cell"))
+        small = False
         deny = None
     bc = spark.sparkContext.broadcast(
         (q_ids, Qq, q_scale, allowed,
          _resolve_filter_ids(filter_ids, id_col), deny))
     r_cut = k * rescore
-    cand = qc.mapInPandas(
+    # every scan task emits at most |queries| x r_cut candidates (the
+    # kernel's per-task cut), so capping the task count caps what the
+    # driver collects whatever the corpus's split count: at most
+    # defaultParallelism x |queries| x r_cut rows (coalesce is narrow —
+    # it adds no exchange, and file scans already split about that fine)
+    n_tasks = 1 if small else spark.sparkContext.defaultParallelism
+    cand = qc.coalesce(n_tasks).mapInPandas(
         _int8_scan_kernel(bc, r_cut),
         schema="query_id long, neighbor_id long, approx double").toArrow()
     return _rescore_candidates(spark, cand, corpus, q_ids, Qf, k, r_cut,
@@ -2231,17 +2245,16 @@ def open_ann_index(spark, index_path: str) -> AnnIndexHandle:
     (:func:`write_ivf_int8_index`, :func:`append_ivf_int8_index`,
     :func:`purge_ann_index_keys`, :func:`compact_ivf_int8_index`,
     :func:`flatten_streamed_ann_index`, :func:`reindex_ann_store` and
-    the streamed fold, streaming/jobs.fold_ann_index_batch) drops the
-    handle of the path it wrote, so a change made in this process shows
-    in the next request. A writer in ANOTHER process is seen through
-    the root's modification time, which every one of those writers
-    moves (sidecars are staged and renamed in the root; Spark writes
-    stage under ``<root>/_temporary``). That holds on filesystems that
-    keep directory mtimes (local, HDFS) and is SINGLE-WRITER, the way
-    :func:`operators.merge.purge_keys` is: a write landing in the same
-    mtime tick as the open, or on an object store without directory
-    mtimes, is not seen until :func:`drop_ann_index_handle` is called
-    for the path in the serving process."""
+    the streamed fold, streaming/jobs.fold_ann_index_batch) moves the
+    root's modification time — sidecars are staged and renamed in the
+    root, Spark writes stage under ``<root>/_temporary``, and the
+    reindex swap replaces the root — so the next request after a write,
+    in this process or another, reopens the handle. That needs a
+    filesystem that keeps directory mtimes (local, HDFS; Hadoop reports
+    them in milliseconds) and is SINGLE-WRITER, the way
+    :func:`operators.merge.purge_keys` is: a write racing the open
+    within one mtime tick is not seen, and an object store without
+    directory mtimes is not supported for serving."""
     key = index_path.rstrip("/")
     with _ANN_HANDLES_LOCK:
         h = _ANN_HANDLES.get(key)
@@ -2252,31 +2265,6 @@ def open_ann_index(spark, index_path: str) -> AnnIndexHandle:
     with _ANN_HANDLES_LOCK:
         _ANN_HANDLES[key] = h
     return h
-
-
-def drop_ann_index_handle(index_path: str) -> None:
-    """Forget the handle of ``index_path`` (every writer calls this);
-    the next request reopens it."""
-    with _ANN_HANDLES_LOCK:
-        _ANN_HANDLES.pop(index_path.rstrip("/"), None)
-
-
-def _drops_ann_handle(path_arg: str):
-    """Decorator of the package's ANN index writers: drop the handle of
-    the path named by argument ``path_arg`` once the writer returns or
-    fails (a failed write may have changed the store too)."""
-    def deco(fn):
-        sig = inspect.signature(fn)
-
-        @functools.wraps(fn)
-        def writer(*args, **kwargs):
-            path = sig.bind(*args, **kwargs).arguments[path_arg]
-            try:
-                return fn(*args, **kwargs)
-            finally:
-                drop_ann_index_handle(path)
-        return writer
-    return deco
 
 
 def emb_cell_sample(df: DataFrame, fraction: float,
@@ -2486,7 +2474,6 @@ def read_ivf_index_meta(spark, index_path: str) -> dict | None:
             "centroid_md5": row["centroid_md5"]}
 
 
-@_drops_ann_handle("path")
 def write_ivf_int8_index(corpus: DataFrame, path: str,
                          vec_col: str = "embedding",
                          id_col: str = "vec_id",
@@ -2571,7 +2558,6 @@ def _int8_index_rows(corpus: DataFrame, centroids: tuple,
                 *[F.col(c) for c in meta_cols]))
 
 
-@_drops_ann_handle("path")
 def append_ivf_int8_index(batch: DataFrame, path: str,
                           vec_col: str = "embedding",
                           id_col: str = "vec_id",
@@ -2646,7 +2632,6 @@ def append_ivf_int8_index(batch: DataFrame, path: str,
     return n
 
 
-@_drops_ann_handle("dst_path")
 def flatten_streamed_ann_index(spark, src_path: str,
                                dst_path: str) -> int:
     """Fold a RETIRED streamed index (streaming/jobs.
@@ -2798,9 +2783,9 @@ def ann_topk(corpus: DataFrame, queries: DataFrame, index_path: str,
 
     The index is opened once per session (:func:`open_ann_index`: its
     centroids, cell directories and tombstones stay in driver memory,
-    re-validated by one filesystem metadata call per request); every
-    package writer of the index invalidates that handle, and a missing
-    index raises ValueError."""
+    re-validated by one filesystem metadata call per request, so any
+    write to the index shows in the next request), and a missing index
+    raises ValueError."""
     return ann_ivf_int8_topk(corpus, queries, k=k, nprobe=nprobe,
                              rescore=rescore, vec_col=vec_col,
                              id_col=id_col, index_path=index_path,
@@ -2808,7 +2793,6 @@ def ann_topk(corpus: DataFrame, queries: DataFrame, index_path: str,
                              filter_pred=filter_pred)
 
 
-@_drops_ann_handle("index_path")
 def reindex_ann_store(spark, corpus: DataFrame, index_path: str,
                       centroids: tuple | None = None,
                       cells: int = IVF_CELLS,
@@ -2947,7 +2931,6 @@ def _write_ann_tombstones(spark, index_path: str, keys,
     }))
 
 
-@_drops_ann_handle("index_path")
 def purge_ann_index_keys(spark, index_path: str, keys,
                          max_keys: int | None = None,
                          mode: str = "auto") -> int:
@@ -3089,7 +3072,6 @@ def purge_ann_index_keys(spark, index_path: str, keys,
     return removed
 
 
-@_drops_ann_handle("path")
 def compact_ivf_int8_index(spark, path: str,
                            max_files_per_cell: int = 4) -> int:
     """Per-cell small-file compaction of a :func:`write_ivf_int8_index`

@@ -31,7 +31,6 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..functions.exact import DEC
 from ..operators.incremental import _read_target_keys, incremental_delta
-from ..operators.similarity import _drops_ann_handle
 from ..schemas import ADS_DATA, ADS_KEY_COLS
 
 
@@ -1041,7 +1040,6 @@ def maintain_ann_index_stream(stream: DataFrame, index_path: str,
     )
 
 
-@_drops_ann_handle("index_path")
 def fold_ann_index_batch(spark: SparkSession, batch: DataFrame,
                          batch_id: int, index_path: str,
                          centroids: tuple,
@@ -1060,9 +1058,7 @@ def fold_ann_index_batch(spark: SparkSession, batch: DataFrame,
     writes them before its rewrite), so a replayed batch re-written
     from source data cannot resurrect purged rows. The sidecar is
     purge-request-sized (broadcast, zero shuffle) and read once per
-    micro-batch — one FS existence probe when no purge has run. Like
-    every index writer it drops the serving handle of ``index_path``
-    (operators/similarity.open_ann_index)."""
+    micro-batch — one FS existence probe when no purge has run."""
     from ..operators.similarity import (
         _int8_index_rows,
         _write_centroids,
