@@ -31,7 +31,7 @@ the north-star extension surface (SURVEY.md §7.5) built on the same
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 import hashlib
@@ -222,6 +222,119 @@ def _auto_scale_safe(docs: DataFrame,
     return est_rows >= row_threshold or hot
 
 
+def _shingle_hashes(docs: DataFrame, doc: str = "doc") -> DataFrame:
+    """(doc, h): one row per shingle of a (doc, sh) frame, the doc id
+    named ``doc`` and the shingle replaced by its xxhash64. Every
+    prefix filter here shuffles, sorts and joins on these fixed-width
+    longs instead of the multi-word strings (~5-10x less data, cheaper
+    comparisons); the rescore reads
+    the original string arrays, so a (2^-64-rare) collision can only
+    add a spurious CANDIDATE that the rescore discards — never a wrong
+    score, and never a lost pair (collisions merge index entries, they
+    never remove them)."""
+    return (docs.select("doc", F.explode("sh").alias("s"))
+            .select(F.col("doc").alias(doc), F.xxhash64("s").alias("h")))
+
+
+def _with_doc_freq(sh: DataFrame, partial_agg: bool) -> DataFrame:
+    """``sh`` (doc, h) annotated with ``_dfs``, the document frequency
+    of h (shingles are distinct per doc, so COUNT per h is DF), by the
+    path :func:`_auto_scale_safe` picked. Window path (``False``): a
+    COUNT window partitioned on h annotates every row in place in one
+    shuffle. Partial-agg path (``True``): ``groupBy("h").count()``,
+    whose map-side combine absorbs hot keys, joined back on h — a join
+    AQE can skew-split, where it cannot split a window exchange (see
+    :func:`ngram_jaccard_pairs`). Both give the same ``_dfs``."""
+    if partial_agg:
+        dfh = sh.groupBy("h").agg(F.count(F.lit(1)).alias("_dfs"))
+        # measured (round 9, sf10/sf30 A/B): hinting this join-back
+        # SHUFFLE_HASH wins at the second decade (163->135 s at sf10)
+        # but LOSES 1.6x at the third (630->1018 s at sf30) — the
+        # per-partition hash builds of ~90M mostly-distinct h stop
+        # fitting once AQE coalesces the 512-way shuffle, and SHJ
+        # spill is far costlier than SMJ's sort spill. Default SMJ
+        # kept deliberately; see SCALE.md third-decade analysis.
+        return sh.join(dfh, "h")
+    return sh.withColumn("_dfs",
+                         F.count(F.lit(1)).over(Window.partitionBy("h")))
+
+
+def _rank_rarest_first(wdf: DataFrame) -> DataFrame:
+    """``wdf`` (doc, h, _dfs) with ``_n``, its doc's shingle count, and
+    ``_r``, the rank of h within its doc in the global rarest-first
+    order (``_dfs`` asc, h asc). Both windows are partitioned on doc,
+    so a partition is one document's shingles whatever the corpus
+    size."""
+    by_doc = Window.partitionBy("doc")
+    return (wdf.withColumn("_n", F.count(F.lit(1)).over(by_doc))
+            .withColumn("_r",
+                        F.row_number().over(by_doc.orderBy("_dfs", "h"))))
+
+
+def _in_prefix(threshold: float) -> Column:
+    """True for the rows of :func:`_rank_rarest_first` inside their
+    doc's lossless prefix: the ``n - ceil(t*n) + 1`` rarest shingles
+    (the All-Pairs bound, see :func:`ngram_jaccard_pairs`)."""
+    return F.col("_r") <= (F.col("_n")
+                           - F.ceil(F.col("_n") * F.lit(float(threshold)))
+                           + 1)
+
+
+def _batch_prefix_candidates(batch: DataFrame, all_docs: DataFrame,
+                             threshold: float, new_col: str,
+                             other_col: str) -> DataFrame:
+    """(new_col, other_col) candidate rows of the incremental prefix
+    filters: each ``batch`` doc against every other doc of
+    ``all_docs`` (corpus index ∪ batch) that holds one of the batch
+    doc's prefix shingles. The prefix is ranked rarest-first by
+    BATCH-local DF, on the path :func:`_auto_scale_safe` picks from a
+    sample of the batch (the only frame a DF window is keyed on here).
+    Any prefix of the right size is lossless, so recall does not depend
+    on the order; rarest-first keeps frequent shingles out of the
+    prefixes and so keeps the candidate volume down (measured
+    6.0s -> ~2s at sf0.1 where the batch is corpus-sized, against a
+    plain-hash order). The ``all_docs`` side is bounded by a semi-join
+    against the batch's prefix-shingle set, so per-ingest SHUFFLED rows
+    are O(|batch| + prefix-hit index + matches), never a corpus pair
+    scan. Rows may repeat a pair; callers orient and deduplicate."""
+    bsh = _with_doc_freq(_shingle_hashes(batch), _auto_scale_safe(batch))
+    prefix = (_rank_rarest_first(bsh).where(_in_prefix(threshold))
+              .select(F.col("doc").alias(new_col), "h"))
+    pre_h = prefix.select("h").distinct()
+    idx = _shingle_hashes(all_docs, other_col).join(pre_h, "h", "left_semi")
+    return (prefix.join(idx, "h")
+            .where(F.col(new_col) != F.col(other_col)))
+
+
+def _exact_rescore(cand: DataFrame, a_docs: DataFrame, b_docs: DataFrame,
+                   threshold: float, score_col: str, score) -> DataFrame:
+    """(doc_a, doc_b, score_col) for the ``cand`` pairs whose exact
+    ``score(inter)`` over the full shingle arrays (``sh_a`` from
+    ``a_docs``, ``sh_b`` from ``b_docs``; ``inter`` = the intersection
+    size) reaches ``threshold``. The candidate side is output-bounded,
+    so AQE broadcasts it and the corpus never shuffles for the
+    rescore."""
+    da = a_docs.select(F.col("doc").alias("doc_a"), F.col("sh").alias("sh_a"))
+    db = b_docs.select(F.col("doc").alias("doc_b"), F.col("sh").alias("sh_b"))
+    inter = F.size(F.array_intersect("sh_a", "sh_b"))
+    return (
+        cand.join(da, "doc_a").join(db, "doc_b")
+        .withColumn(score_col, score(inter))
+        .where(F.col(score_col) >= threshold)
+        .select("doc_a", "doc_b", score_col)
+    )
+
+
+def _jaccard(inter: Column) -> Column:
+    """|A∩B| / |A∪B| for :func:`_exact_rescore`."""
+    return inter.cast("double") / (F.size("sh_a") + F.size("sh_b") - inter)
+
+
+def _containment(inter: Column) -> Column:
+    """|A∩B| / |A| for :func:`_exact_rescore` (A = the ``doc_a`` side)."""
+    return inter.cast("double") / F.size("sh_a")
+
+
 def ngram_jaccard_pairs(df: DataFrame, threshold: float = 0.5,
                         text_col: str = "text", id_col: str = "doc_id",
                         k: int = 3, materialize: bool = True,
@@ -312,36 +425,16 @@ def ngram_jaccard_pairs(df: DataFrame, threshold: float = 0.5,
     # a lazy frame the sample filter pushes below the shingle
     # projection, so only sampled docs are shingled
     partial_agg = _auto_scale_safe(docs)
-    # The candidate machinery runs on 64-bit shingle HASHES, not the
-    # strings: the DF shuffle, the order-join, the per-doc sort, and the
-    # bucket keys all move/compare fixed-width longs (~5-10x less data
-    # and cheaper comparisons than multi-word strings). Rescoring uses
-    # the original string arrays, so a (2^-64-rare) xxhash64 collision
-    # can only create one spurious CANDIDATE that rescoring discards —
-    # never a wrong score, and recall is unaffected (collisions merge
-    # index entries, they never remove them).
-    sh = (docs.select("doc", F.explode("sh").alias("s"))
-          .select("doc", F.xxhash64("s").alias("h")))
-    # DF per hash (shingles are distinct per doc, so COUNT per h ==
-    # document frequency): window form vs partial-agg join-back per the
-    # DF-path tradeoff in the docstring above
-    from pyspark.sql import Window as _W
-
-    sh_cached = False
-    if partial_agg:
-        # the scale path consumes sh TWICE (DF aggregate + join-back);
-        # persisting the two-long frame runs the explode+hash pass once
-        # (interleaved A/B at sf0.1: ~5-8% end-to-end — the join-back
-        # shuffle, not the recompute, dominates; at corpus scale the
-        # saved pass is a full re-read). Released in the finally.
-        if materialize:
-            sh = sh.persist(StorageLevel.MEMORY_AND_DISK)
-            sh_cached = True
-        dfh = sh.groupBy("h").agg(F.count(F.lit(1)).alias("_dfs"))
-        wdf = sh.join(dfh, "h")
-    else:
-        wdf = sh.withColumn("_dfs",
-                            F.count(F.lit(1)).over(_W.partitionBy("h")))
+    sh = _shingle_hashes(docs)
+    # the scale path consumes sh TWICE (DF aggregate + join-back);
+    # persisting the two-long frame runs the explode+hash pass once
+    # (interleaved A/B at sf0.1: ~5-8% end-to-end — the join-back
+    # shuffle, not the recompute, dominates; at corpus scale the saved
+    # pass is a full re-read). Released in the finally.
+    sh_cached = partial_agg and materialize
+    if sh_cached:
+        sh = sh.persist(StorageLevel.MEMORY_AND_DISK)
+    wdf = _with_doc_freq(sh, partial_agg)
     # global total order (df asc, hash asc) via struct sort; slice each
     # doc's prefix and explode it into the (much smaller) index
     ordered = (wdf.groupBy("doc")
@@ -394,17 +487,7 @@ def ngram_jaccard_pairs(df: DataFrame, threshold: float = 0.5,
         # |cand|/cores.
         cand = cand.repartition(
             docs.sparkSession.sparkContext.defaultParallelism)
-    da = docs.select(F.col("doc").alias("doc_a"), F.col("sh").alias("sh_a"))
-    db = docs.select(F.col("doc").alias("doc_b"), F.col("sh").alias("sh_b"))
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    out = (
-        cand.join(da, "doc_a").join(db, "doc_b")
-        .withColumn("jaccard",
-                    inter.cast("double")
-                    / (F.size("sh_a") + F.size("sh_b") - inter))
-        .where(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "jaccard")
-    )
+    out = _exact_rescore(cand, docs, docs, threshold, "jaccard", _jaccard)
     if not materialize:
         return out
     try:
@@ -1013,7 +1096,6 @@ def containment_pairs(df: DataFrame, threshold: float = 0.8,
     plan-asserted h-window-free.
     """
     from pyspark import StorageLevel
-    from pyspark.sql import Window as _W
 
     owned = docs is None
     if owned:
@@ -1023,35 +1105,15 @@ def containment_pairs(df: DataFrame, threshold: float = 0.8,
     # the decision's one action doubles as the cache materialization
     # (see ngram_jaccard_pairs)
     partial_agg = _auto_scale_safe(docs)
-    sh = (docs.select("doc", F.explode("sh").alias("s"))
-          .select("doc", F.xxhash64("s").alias("h")))
-    sh_cached = False
-    if partial_agg:
-        # two consumers of sh (DF agg + join-back) — persist the
-        # two-long frame so the explode+hash pass runs once (see
-        # ngram_jaccard_pairs), released in the finally
-        if materialize:
-            sh = sh.persist(StorageLevel.MEMORY_AND_DISK)
-            sh_cached = True
-        dfh = sh.groupBy("h").agg(F.count(F.lit(1)).alias("_dfs"))
-        # measured (round 9, sf10/sf30 A/B): hinting this join-back
-        # SHUFFLE_HASH wins at the second decade (163->135 s at sf10)
-        # but LOSES 1.6x at the third (630->1018 s at sf30) — the
-        # per-partition hash builds of ~90M mostly-distinct h stop
-        # fitting once AQE coalesces the 512-way shuffle, and SHJ
-        # spill is far costlier than SMJ's sort spill. Default SMJ
-        # kept deliberately; see SCALE.md third-decade analysis.
-        wdf = sh.join(dfh, "h")
-    else:
-        wdf = sh.withColumn("_dfs",
-                            F.count(F.lit(1)).over(_W.partitionBy("h")))
-    nn = F.count(F.lit(1)).over(_W.partitionBy("doc"))
-    rr = F.row_number().over(_W.partitionBy("doc").orderBy("_dfs", "h"))
-    ranked = (wdf.withColumn("_n", nn).withColumn("_r", rr)
-              .withColumn("_pf", F.col("_r")
-                          <= (F.col("_n")
-                              - F.ceil(F.col("_n") * F.lit(float(threshold)))
-                              + 1)))
+    sh = _shingle_hashes(docs)
+    # two consumers of sh (DF agg + join-back) on the partial-agg path —
+    # persist the two-long frame so the explode+hash pass runs once (see
+    # ngram_jaccard_pairs), released in the finally
+    sh_cached = partial_agg and materialize
+    if sh_cached:
+        sh = sh.persist(StorageLevel.MEMORY_AND_DISK)
+    ranked = (_rank_rarest_first(_with_doc_freq(sh, partial_agg))
+              .withColumn("_pf", _in_prefix(threshold)))
     # spill-width discipline: everything downstream needs only
     # (doc, h, _pf), so the persisted/window-carried frame drops the
     # rank/count scaffolding (_dfs, _n, _r: 3 of 6 columns) before it
@@ -1060,7 +1122,8 @@ def containment_pairs(df: DataFrame, threshold: float = 0.8,
     if not partial_agg:
         ranked = ranked.withColumn(
             "_any",
-            F.max(F.col("_pf").cast("int")).over(_W.partitionBy("h")) == 1)
+            F.max(F.col("_pf").cast("int")).over(Window.partitionBy("h"))
+            == 1)
     # the annotated frame feeds both index sides; fixed-width rows
     # (2 longs + counters), bounded by corpus shingle count — persist it
     # so the window chain runs once, released in the finally
@@ -1083,18 +1146,10 @@ def containment_pairs(df: DataFrame, threshold: float = 0.8,
             .select("doc_a", "doc_b").dropDuplicates())
     if materialize:
         cand = cand.persist(StorageLevel.MEMORY_AND_DISK)
-    da = docs.select(F.col("doc").alias("doc_a"), F.col("sh").alias("sh_a"))
-    db = docs.select(F.col("doc").alias("doc_b"), F.col("sh").alias("sh_b"))
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
 
     def rescore(c: DataFrame) -> DataFrame:
-        return (
-            c.join(da, "doc_a").join(db, "doc_b")
-            .withColumn("containment",
-                        inter.cast("double") / F.size("sh_a"))
-            .where(F.col("containment") >= threshold)
-            .select("doc_a", "doc_b", "containment")
-        )
+        return _exact_rescore(c, docs, docs, threshold, "containment",
+                              _containment)
 
     if not materialize:
         return rescore(cand)
@@ -1148,11 +1203,11 @@ def containment_pairs_incremental(new_df: DataFrame,
     Lossless by the same pigeonhole as :func:`containment_pairs`: if
     |A∩B|/|A| >= t then B misses fewer than |A| - ceil(t|A|) + 1 of
     A's shingles, so ANY batch-side prefix of that size hits B. The
-    batch prefix here orders by plain shingle hash (batch-local, no
-    global DF stats needed — recall is order-independent, rarest-first
-    ordering is only a candidate-volume optimization the full-corpus
-    operator can afford because it computes corpus-wide DF anyway).
-    The containing index is then LOSSLESSLY bounded by a semi-join
+    batch prefix here is ranked by BATCH-local DF
+    (:func:`_batch_prefix_candidates`, the core this form shares with
+    :func:`jaccard_pairs_incremental_from_index`; no corpus-wide DF
+    stats needed — recall is order-independent). The containing index
+    is then LOSSLESSLY bounded by a semi-join
     against the batch's prefix-shingle set — per-ingest cost
     O(|batch| + Σ_{h in batch prefixes} DF(h) + matches) in SHUFFLED
     rows, never a corpus pair scan. One term is honest-to-state
@@ -1170,57 +1225,15 @@ def containment_pairs_incremental(new_df: DataFrame,
     """
     batch = shingled_docs(new_df, text_col, id_col, k)
     all_docs = corpus_docs.unionByName(batch)
-    bsh = (batch.select("doc", F.explode("sh").alias("s"))
-           .select("doc", F.xxhash64("s").alias("h")))
-    from pyspark.sql import Window as _W
-
-    # rank by BATCH-LOCAL document frequency (rarest first): recall is
-    # prefix-order-independent (any prefix of the right size works),
-    # but candidate VOLUME is not — plain-hash prefixes admit frequent
-    # shingles and fan out against the whole containing index
-    # (measured 6.0s -> ~2s at sf0.1 where the batch is corpus-sized);
-    # batch-local DF approximates global DF without touching the corpus.
-    # DF path: same hot-shingle window hazard and partial-agg
-    # alternative as containment_pairs — the window partition here holds
-    # only BATCH occurrences of a shingle, so the hazard needs a large
-    # batch, but "large drop" is a normal backfill shape. The decision
-    # therefore samples the BATCH (the only window-keyed frame here),
-    # not the corpus.
-    if _auto_scale_safe(batch):
-        bdf = bsh.groupBy("h").agg(F.count(F.lit(1)).alias("_dfs"))
-        bsh = bsh.join(bdf, "h")
-    else:
-        bsh = bsh.withColumn(
-            "_dfs", F.count(F.lit(1)).over(_W.partitionBy("h")))
-    nn = F.count(F.lit(1)).over(_W.partitionBy("doc"))
-    rr = F.row_number().over(_W.partitionBy("doc").orderBy("_dfs", "h"))
-    prefix = (bsh.withColumn("_n", nn).withColumn("_r", rr)
-              .where(F.col("_r")
-                     <= (F.col("_n")
-                         - F.ceil(F.col("_n") * F.lit(float(threshold)))
-                         + 1))
-              .select(F.col("doc").alias("doc_a"), "h"))
-    pre_h = prefix.select("h").distinct()
-    ash = (all_docs.select("doc", F.explode("sh").alias("s"))
-           .select(F.col("doc").alias("doc_b"), F.xxhash64("s").alias("h")))
-    idx = ash.join(pre_h, "h", "left_semi")
-    cand = (prefix.join(idx, "h")
-            .where(F.col("doc_a") != F.col("doc_b"))
+    cand = (_batch_prefix_candidates(batch, all_docs, threshold,
+                                     "doc_a", "doc_b")
             .select("doc_a", "doc_b").dropDuplicates()
             # spread the CPU-dense exact rescore (r15, guide §2.5 —
             # the ngram_jaccard_pairs single-task-straggler fix)
             .repartition(
                 new_df.sparkSession.sparkContext.defaultParallelism))
-    da = batch.select(F.col("doc").alias("doc_a"), F.col("sh").alias("sh_a"))
-    db = all_docs.select(F.col("doc").alias("doc_b"),
-                         F.col("sh").alias("sh_b"))
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    return (
-        cand.join(da, "doc_a").join(db, "doc_b")
-        .withColumn("containment", inter.cast("double") / F.size("sh_a"))
-        .where(F.col("containment") >= threshold)
-        .select("doc_a", "doc_b", "containment")
-    )
+    return _exact_rescore(cand, batch, all_docs, threshold, "containment",
+                          _containment)
 
 
 def jaccard_pairs_incremental_from_index(batch: DataFrame,
@@ -1256,31 +1269,9 @@ def jaccard_pairs_incremental_from_index(batch: DataFrame,
     full-corpus run's pairs with at least one new side (no-drift, the
     oracle contract). The batch-local DF path is decided as in
     containment_pairs_incremental (the decision samples the BATCH)."""
-    from pyspark.sql import Window as _W
-
     all_docs = corpus_index.unionByName(batch)
-    bsh = (batch.select("doc", F.explode("sh").alias("s"))
-           .select("doc", F.xxhash64("s").alias("h")))
-    if _auto_scale_safe(batch):
-        bdf = bsh.groupBy("h").agg(F.count(F.lit(1)).alias("_dfs"))
-        bsh = bsh.join(bdf, "h")
-    else:
-        bsh = bsh.withColumn(
-            "_dfs", F.count(F.lit(1)).over(_W.partitionBy("h")))
-    nn = F.count(F.lit(1)).over(_W.partitionBy("doc"))
-    rr = F.row_number().over(_W.partitionBy("doc").orderBy("_dfs", "h"))
-    prefix = (bsh.withColumn("_n", nn).withColumn("_r", rr)
-              .where(F.col("_r")
-                     <= (F.col("_n")
-                         - F.ceil(F.col("_n") * F.lit(float(threshold)))
-                         + 1))
-              .select(F.col("doc").alias("doc_n"), "h"))
-    pre_h = prefix.select("h").distinct()
-    ash = (all_docs.select("doc", F.explode("sh").alias("s"))
-           .select(F.col("doc").alias("doc_o"), F.xxhash64("s").alias("h")))
-    idx = ash.join(pre_h, "h", "left_semi")
-    cand = (prefix.join(idx, "h")
-            .where(F.col("doc_n") != F.col("doc_o"))
+    cand = (_batch_prefix_candidates(batch, all_docs, threshold,
+                                     "doc_n", "doc_o")
             .select(F.least("doc_n", "doc_o").alias("doc_a"),
                     F.greatest("doc_n", "doc_o").alias("doc_b"))
             .dropDuplicates()
@@ -1288,19 +1279,8 @@ def jaccard_pairs_incremental_from_index(batch: DataFrame,
             # the ngram_jaccard_pairs single-task-straggler fix)
             .repartition(
                 batch.sparkSession.sparkContext.defaultParallelism))
-    da = all_docs.select(F.col("doc").alias("doc_a"),
-                         F.col("sh").alias("sh_a"))
-    db = all_docs.select(F.col("doc").alias("doc_b"),
-                         F.col("sh").alias("sh_b"))
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    return (
-        cand.join(da, "doc_a").join(db, "doc_b")
-        .withColumn("jaccard",
-                    inter.cast("double")
-                    / (F.size("sh_a") + F.size("sh_b") - inter))
-        .where(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "jaccard")
-    )
+    return _exact_rescore(cand, all_docs, all_docs, threshold, "jaccard",
+                          _jaccard)
 
 
 def ngram_jaccard_pairs_incremental(new_df: DataFrame,

@@ -768,6 +768,20 @@ def ahash_pairs_incremental(new_media: DataFrame, corpus_fps: DataFrame,
             new_fps.unpersist()
 
 
+def _digest_docs(samples: DataFrame, pos_col: str,
+                 md5_col: str) -> DataFrame:
+    """(doc_id, text): each media_id's ``md5_col`` digests in
+    ``pos_col`` order, space-joined — one hash shuffle on media_id."""
+    return (samples.groupBy("media_id")
+            .agg(F.array_join(
+                F.transform(
+                    F.sort_array(F.collect_list(
+                        F.struct(pos_col, md5_col))),
+                    lambda s: s[md5_col]),
+                " ").alias("text"))
+            .select(F.col("media_id").alias("doc_id"), "text"))
+
+
 def frame_docs(media: DataFrame) -> DataFrame:
     """(doc_id, text): each media payload reduced to its SAMPLED FRAME
     DIGEST SEQUENCE — frame_sample's md5s in frame order, space-joined.
@@ -777,15 +791,7 @@ def frame_docs(media: DataFrame) -> DataFrame:
     MinHash) applies verbatim to the video modality. One hash shuffle
     on media_id (the per-media digest collect); payload bytes die in
     frame_sample's map pass — only 32-char digests move."""
-    frames = frame_sample(media)
-    return (frames.groupBy("media_id")
-            .agg(F.array_join(
-                F.transform(
-                    F.sort_array(F.collect_list(
-                        F.struct("frame_no", "frame_md5"))),
-                    lambda s: s["frame_md5"]),
-                " ").alias("text"))
-            .select(F.col("media_id").alias("doc_id"), "text"))
+    return _digest_docs(frame_sample(media), "frame_no", "frame_md5")
 
 
 def video_neardup_pairs(media: DataFrame, threshold: float = 0.3,
@@ -928,15 +934,7 @@ def audio_docs(media: DataFrame) -> DataFrame:
     operators apply verbatim (the :func:`frame_docs` reduction, audio
     geometry). One hash shuffle on media_id (the per-media digest
     collect); payload bytes die in the map pass."""
-    wins = audio_window_sample(media)
-    return (wins.groupBy("media_id")
-            .agg(F.array_join(
-                F.transform(
-                    F.sort_array(F.collect_list(
-                        F.struct("win_no", "win_md5"))),
-                    lambda s: s["win_md5"]),
-                " ").alias("text"))
-            .select(F.col("media_id").alias("doc_id"), "text"))
+    return _digest_docs(audio_window_sample(media), "win_no", "win_md5")
 
 
 def audio_neardup_pairs(media: DataFrame, threshold: float = 0.3,

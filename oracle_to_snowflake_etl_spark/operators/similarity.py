@@ -181,59 +181,49 @@ def _gemm_certain_threshold(threshold_q6: int) -> float:
     return (threshold_q6 - 0.45) / Q_SCALE
 
 
-#: semantic dedup pair-stage prefilter kernel dial: int8-quantized
-#: float32 sgemm (the ANN family's exact-integer-GEMM trick applied to
-#: the within-cell pair stage — VERDICT r13 Missing #2) vs float64
-#: dgemm. Survivors are BIT-IDENTICAL either way (sound interval
-#: admission + exact rescore of the uncertainty band). Built, then
-#: MEASURED OFF as the default: the round-14 profiling that motivated
-#: it found the pair stage is RESCORE-bound, not GEMM-bound (~59M
-#: emitted pairs at the 1M decade), so the shipped win is the
-#: certain-emission interval test (:func:`_gemm_certain_threshold`,
-#: both kernels) — interleaved 1M medians: f64 30.4→26.4 s,
-#: int8 39.8→29.4 s. int8's raw GEMM is 1.2–1.8× faster in-kernel
-#: (OMP-pinned microbench), but its ±~0.015 quantization band keeps
-#: MORE pairs in the rescore path than the sgemm saves on dup-dense
-#: corpora; flip this on for corpora whose near-threshold pair density
-#: is low (isotropic/web-scale embeddings), where the band is nearly
-#: empty and the GEMM constant dominates (SCALE_SEMANTIC8.json records
-#: both kernels per decade).
-SEMANTIC_INT8_PREFILTER = False
+def _cell_gemm_hits(M: "np.ndarray", rows: "np.ndarray", pair_rule,
+                    threshold_q6: int
+                    ) -> tuple["np.ndarray", "np.ndarray"]:
+    """The one within-cell pair kernel of the semantic family: the
+    positions ``(gi, gj)`` of every pair of cell matrix ``M`` (one row
+    per member vector) with ``gi`` in ``rows``, ``pair_rule(gi, gj)``
+    true and quantized cosine >= ``threshold_q6``.
 
-
-def _int8_prefilter_mats(Mn: "np.ndarray"):
-    """(Qf, s, eb) of a row-NORMALIZED matrix for the int8 pair
-    prefilter: per-row int8 codes as float32 (``Qf @ Qf.T`` in sgemm is
-    the EXACT integer dot — products <= 127^2 and 64-dim sums <= ~1.03M
-    < 2^24, every intermediate exactly representable in float32, the
-    _int8_scan_kernel argument), per-row scales ``s`` (float32), and
-    the per-row quantization-residual norms ``eb`` (float64, COMPUTED
-    not estimated: eb_i = ||mn_i - s_i q_i||_2).
-
-    Soundness of the per-pair interval: with e_i = mn_i - s_i q_i and
-    approx = s_i s_j (q_i . q_j),
-    |cos(i,j) - approx| = |mn_i.mn_j - (mn_i-e_i).(mn_j-e_j)|
-    <= eb_i + eb_j + eb_i eb_j   (||mn|| = 1, Cauchy-Schwarz).
-    The kernels carry T = approx + eb_i + eb_j (two float32 rank-1
-    adds on the score block), so
-      true >= T - 2(eb_i + eb_j) - eb_max^2 - fp   (certainty test)
-      true <= T + eb_max^2 + fp                    (admission test)
-    with fp = 2e-6 covering every float32 rounding step (relative
-    2.4e-7 on values <= ~1.1 plus the float32 eb adds). Admission at
-    thr_pre - eb_max^2 - fp therefore never drops a pair the exact
-    rescore would keep, and certainty at thr_cert + eb_max^2 + fp
-    never emits one it would reject. Zero-norm rows quantize to
-    all-zero codes (T = eb_i + eb_j, small — never admitted at real
-    thresholds; the exact rescore arbitrates regardless).
-
-    Typical eb on unit 64-dim vectors: ~s*sqrt(d/12) ~ 0.007 — the
-    uncertainty band is ~0.03 cosine wide, and only pairs INSIDE it
-    pay the gather+fold rescore (the round-14 certain-emission
-    design; see :func:`_gemm_certain_threshold`)."""
-    Z = np.where(np.isfinite(Mn), Mn, 0.0)
-    Cq, s = _int8_quantize_np(Z)
-    eb = np.sqrt(((Z - s[:, None] * Cq) ** 2).sum(axis=1))
-    return Cq.astype(np.float32), s.astype(np.float32), eb
+    Blocked over ``rows`` so one score block stays within
+    ``_GEMM_BLOCK_ELEMS``: each block is one BLAS ``Mn[block] @ Mn.T``
+    over the row-normalized matrix; a pair enters at
+    :func:`_gemm_prefilter_threshold`, leaves as CERTAIN at
+    :func:`_gemm_certain_threshold` without rescoring, and only the
+    band in between pays the chunked exact rescore
+    (:func:`_exact_q6_rows`, the cumsum fold of the DuckDB oracle).
+    Hits are therefore bit-identical to scoring every pair exactly.
+    A zero-norm row normalizes to NaN and is never admitted."""
+    thr_pre = _gemm_prefilter_threshold(threshold_q6)
+    thr_cert = _gemm_certain_threshold(threshold_q6)
+    nsq = np.cumsum(M * M, axis=1)[:, -1]
+    with np.errstate(divide="ignore", invalid="ignore"):
+        Mn = M / np.sqrt(nsq)[:, None]
+    bs = max(16, _GEMM_BLOCK_ELEMS // len(M))
+    out_i, out_j = [], []
+    for i0 in range(0, len(rows), bs):
+        block = rows[i0:i0 + bs]
+        S = Mn[block] @ Mn.T
+        ii, jj = np.nonzero(S >= thr_pre)
+        gi = block[ii]
+        keep = pair_rule(gi, jj)
+        gi, jj, tvals = gi[keep], jj[keep], S[ii[keep], jj[keep]]
+        certain = tvals >= thr_cert + 1e-9
+        out_i.append(gi[certain])
+        out_j.append(jj[certain])
+        gi, jj = gi[~certain], jj[~certain]
+        for c0 in range(0, len(gi), _GEMM_RESCORE_CHUNK):
+            cg = gi[c0:c0 + _GEMM_RESCORE_CHUNK]
+            cj = jj[c0:c0 + _GEMM_RESCORE_CHUNK]
+            hit = _exact_q6_rows(M[cg], M[cj], nsq[cg], nsq[cj]) \
+                >= threshold_q6
+            out_i.append(cg[hit])
+            out_j.append(cj[hit])
+    return np.concatenate(out_i), np.concatenate(out_j)
 
 
 def _cell_pairs_gemm(assigned: DataFrame, threshold_q6: int) -> DataFrame:
@@ -252,31 +242,19 @@ def _cell_pairs_gemm(assigned: DataFrame, threshold_q6: int) -> DataFrame:
 
     Shape: ONE shuffle of the assignment rows (N x nprobe vectors,
     ~300 B each) into cell groups; all O(|cell|²) pair work happens
-    INSIDE a task as a blocked numpy matmul over the cell's matrix —
-    only pairs already >= threshold-margin leave the BLAS kernel, and
-    those are exact-rescored (:func:`_exact_q6_rows`) before emission.
-    Shuffle-scratch volume drops from O(pair-mass x vector-width) to
-    O(N x nprobe x vector-width + true-dup pairs). Per-cell memory is
-    |cell| x dims x 8 B plus a bounded score block
-    (``_GEMM_BLOCK_ELEMS``); the ``max_cell_pairs`` guard and √N cell
-    sizing keep |cell| bounded, same as before.
+    INSIDE a task in :func:`_cell_gemm_hits`, under the pair rule
+    ``j > i`` (each unordered pair once). Shuffle-scratch volume drops
+    from O(pair-mass x vector-width) to O(N x nprobe x vector-width +
+    true-dup pairs). Per-cell memory is |cell| x dims x 8 B plus a
+    bounded score block (``_GEMM_BLOCK_ELEMS``); the
+    ``max_cell_pairs`` guard and √N cell sizing keep |cell| bounded.
 
-    Round 14 rebuilt the emission path on profiling evidence: the
-    stage is RESCORE-bound, not GEMM-bound (~59M emitted pairs at the
-    1M decade — each paying a 2x64-float64 gather + cumsum fold), so
-    pairs whose interval lower bound already clears the q6 floor
-    boundary are emitted WITHOUT rescoring (:func:`
-    _gemm_certain_threshold`; measured 1M interleaved median 30.4 →
-    26.4 s) and only the razor-thin uncertainty band pays the fold.
-    An int8/float32-sgemm prefilter kernel is available behind
-    :data:`SEMANTIC_INT8_PREFILTER` (sound per-pair interval bounds,
-    :func:`_int8_prefilter_mats`; survivors bit-identical either way)
-    — measured and documented as the non-default (see the flag). The
-    flag is read HERE at plan-build time and captured in the closure —
-    a worker-side module re-import would not see a driver toggle."""
-    thr_pre = _gemm_prefilter_threshold(threshold_q6)
-    thr_cert = _gemm_certain_threshold(threshold_q6)
-    use_int8 = SEMANTIC_INT8_PREFILTER
+    Round 14 found the stage RESCORE-bound, not GEMM-bound (~59M
+    emitted pairs at the 1M decade), so the kernel emits pairs above
+    its certainty bound without rescoring (measured 1M interleaved
+    median 30.4 → 26.4 s). An int8/float32 prefilter kernel measured
+    slower than this float64 one at every decade (SCALE_SEMANTIC8.json)
+    and was removed."""
     empty = pd.DataFrame({"doc_a": pd.Series([], dtype="int64"),
                           "doc_b": pd.Series([], dtype="int64")})
 
@@ -286,59 +264,11 @@ def _cell_pairs_gemm(assigned: DataFrame, threshold_q6: int) -> DataFrame:
             return empty
         ids = pdf["_sd_id"].to_numpy(dtype=np.int64)
         M = np.stack(pdf["_sd_vec"].to_numpy()).astype(np.float64)
-        nsq = np.cumsum(M * M, axis=1)[:, -1]
-        with np.errstate(divide="ignore", invalid="ignore"):
-            Mn = M / np.sqrt(nsq)[:, None]
-        if use_int8:
-            Qf, sc, eb = _int8_prefilter_mats(Mn)
-            eb32, ebm = eb.astype(np.float32), float(eb.max())
-            # T = approx + eb_i + eb_j; true in [T - 2(eb_i+eb_j) -
-            # ebm^2 - fp, T + ebm^2 + fp] (see _int8_prefilter_mats)
-            adm = np.float32(thr_pre - ebm * ebm - 2e-6)
-        bs = max(16, _GEMM_BLOCK_ELEMS // n)
-        outs_a, outs_b = [], []
-        for i0 in range(0, n - 1, bs):
-            i1 = min(i0 + bs, n)
-            if use_int8:
-                S = Qf[i0:i1] @ Qf.T  # float32 sgemm, exact int dot
-                S *= sc[i0:i1, None]
-                S *= sc[None, :]
-                S += eb32[i0:i1, None]
-                S += eb32[None, :]
-                ii, jj = np.nonzero(S >= adm)
-            else:
-                S = Mn[i0:i1] @ Mn.T
-                # NaN (zero-norm) never admits
-                ii, jj = np.nonzero(S >= thr_pre)
-            tvals = S[ii, jj].astype(np.float64)
-            gi = ii + i0
-            keep = jj > gi  # each unordered pair once, positional i<j
-            gi, jj, tvals = gi[keep], jj[keep], tvals[keep]
-            # CERTAIN emission: pairs whose interval lower bound clears
-            # the floor boundary skip the (dominant) gather+fold rescore
-            if use_int8:
-                certain = (tvals - 2.0 * (eb[gi] + eb[jj])
-                           >= thr_cert + ebm * ebm + 2e-6)
-            else:
-                certain = tvals >= thr_cert + 1e-9
-            if certain.any():
-                a, b = ids[gi[certain]], ids[jj[certain]]
-                outs_a.append(np.minimum(a, b))
-                outs_b.append(np.maximum(a, b))
-            gi, jj = gi[~certain], jj[~certain]
-            for c0 in range(0, len(gi), _GEMM_RESCORE_CHUNK):
-                cg = gi[c0:c0 + _GEMM_RESCORE_CHUNK]
-                cj = jj[c0:c0 + _GEMM_RESCORE_CHUNK]
-                q = _exact_q6_rows(M[cg], M[cj], nsq[cg], nsq[cj])
-                hit = q >= threshold_q6
-                if hit.any():
-                    a, b = ids[cg[hit]], ids[cj[hit]]
-                    outs_a.append(np.minimum(a, b))
-                    outs_b.append(np.maximum(a, b))
-        if not outs_a:
-            return empty
-        return pd.DataFrame({"doc_a": np.concatenate(outs_a),
-                             "doc_b": np.concatenate(outs_b)})
+        gi, gj = _cell_gemm_hits(M, np.arange(n - 1),
+                                 lambda i, j: j > i, threshold_q6)
+        a, b = ids[gi], ids[gj]
+        return pd.DataFrame({"doc_a": np.minimum(a, b),
+                             "doc_b": np.maximum(a, b)})
 
     return (assigned.groupBy("_sd_cell")
             .applyInPandas(gen, "doc_a long, doc_b long"))
@@ -355,70 +285,26 @@ def _cell_dropped_gemm_incr(unioned: DataFrame,
     cosine >= threshold — exactly semantic_dedup_incremental's rule.
 
     Work is the asymmetric GEMM |new_in_cell| x |cell| (never
-    corpus x corpus — the whole point of the incremental form), with
-    the same prefilter-margin + exact-rescore bit-parity contract
-    (and, since round 14, the batch form's certain-emission interval
-    test and optional int8 prefilter kernel —
-    :data:`SEMANTIC_INT8_PREFILTER`, captured at plan-build time).
-    Output may repeat an id across probe cells; callers
-    ``.distinct()``."""
-    thr_pre = _gemm_prefilter_threshold(threshold_q6)
-    thr_cert = _gemm_certain_threshold(threshold_q6)
-    use_int8 = SEMANTIC_INT8_PREFILTER
+    corpus x corpus — the whole point of the incremental form): the
+    same :func:`_cell_gemm_hits` kernel as the batch form, run over
+    the new rows only under the domination rule. Output may repeat an
+    id across probe cells; callers ``.distinct()``."""
     empty = pd.DataFrame({"_sd_id": pd.Series([], dtype="int64")})
 
     def gen(pdf: pd.DataFrame) -> pd.DataFrame:
         is_new = pdf["_sd_new"].to_numpy(dtype=bool)
         if not is_new.any() or len(pdf) < 2:
             return empty
-        ids_all = pdf["_sd_id"].to_numpy(dtype=np.int64)
+        ids = pdf["_sd_id"].to_numpy(dtype=np.int64)
         M = np.stack(pdf["_sd_vec"].to_numpy()).astype(np.float64)
-        nsq = np.cumsum(M * M, axis=1)[:, -1]
-        with np.errstate(divide="ignore", invalid="ignore"):
-            Mn = M / np.sqrt(nsq)[:, None]
-        if use_int8:
-            Qf, sc, eb = _int8_prefilter_mats(Mn)
-            eb32, ebm = eb.astype(np.float32), float(eb.max())
-            adm = np.float32(thr_pre - ebm * ebm - 2e-6)
-        new_pos = np.nonzero(is_new)[0]
-        ids_new = ids_all[new_pos]
-        dropped = np.zeros(len(new_pos), dtype=bool)
-        bs = max(16, _GEMM_BLOCK_ELEMS // len(pdf))
-        for i0 in range(0, len(new_pos), bs):
-            rows = new_pos[i0:i0 + bs]
-            if use_int8:
-                S = Qf[rows] @ Qf.T  # float32 sgemm, exact int dot
-                S *= sc[rows, None]
-                S *= sc[None, :]
-                S += eb32[rows, None]
-                S += eb32[None, :]
-                ii, jj = np.nonzero(S >= adm)
-            else:
-                S = Mn[rows] @ Mn.T
-                ii, jj = np.nonzero(S >= thr_pre)
-            tvals = S[ii, jj].astype(np.float64)
-            # domination: corpus side always; new side on strictly
-            # lower id (strict also excludes the row's own echo in the
-            # unioned frame).
-            dom = (~is_new[jj]) | (ids_all[jj] < ids_new[i0 + ii])
-            ii, jj, tvals = ii[dom], jj[dom], tvals[dom]
-            # certain drops skip the rescore (see _cell_pairs_gemm)
-            if use_int8:
-                certain = (tvals - 2.0 * (eb[rows[ii]] + eb[jj])
-                           >= thr_cert + ebm * ebm + 2e-6)
-            else:
-                certain = tvals >= thr_cert + 1e-9
-            dropped[i0 + ii[certain]] = True
-            ii, jj = ii[~certain], jj[~certain]
-            for c0 in range(0, len(ii), _GEMM_RESCORE_CHUNK):
-                ci = ii[c0:c0 + _GEMM_RESCORE_CHUNK]
-                cj = jj[c0:c0 + _GEMM_RESCORE_CHUNK]
-                gr = rows[ci]
-                q = _exact_q6_rows(M[gr], M[cj], nsq[gr], nsq[cj])
-                dropped[i0 + ci[q >= threshold_q6]] = True
-        if not dropped.any():
-            return empty
-        return pd.DataFrame({"_sd_id": ids_new[dropped]})
+        # domination: corpus side always; new side on strictly lower id
+        # (strict also excludes the row's own echo in the unioned frame)
+        gi, _ = _cell_gemm_hits(
+            M, np.nonzero(is_new)[0],
+            lambda i, j: (~is_new[j]) | (ids[j] < ids[i]), threshold_q6)
+        dropped = np.zeros(len(pdf), dtype=bool)
+        dropped[gi] = True
+        return pd.DataFrame({"_sd_id": ids[dropped]})
 
     return (unioned.groupBy("_sd_cell")
             .applyInPandas(gen, "_sd_id long"))
@@ -557,8 +443,6 @@ def centroid_weights(cells: int = IVF_CELLS, dims: int = DEFAULT_DIMS) -> tuple:
             / float(1 << 60) * 2.0 - 1.0
             for d in range(dims))
         for c in range(cells))
-
-
 
 
 def _cell_sims(V: "np.ndarray", C: "np.ndarray") -> "np.ndarray":
@@ -912,6 +796,17 @@ def _resolve_cells(df: DataFrame, cells, centroids) -> int:
     return cells
 
 
+def _semantic_cells(vec_col: str, cells: int, centroids,
+                    nprobe: int) -> Column:
+    """The semantic family's cell assignment: the nearest cell
+    (:func:`ivf_cell`) at ``nprobe == 1``, else one row per probe cell
+    (``explode`` of :func:`ivf_probe_cells`)."""
+    if nprobe == 1:
+        return ivf_cell(F.col(vec_col), cells=cells, centroids=centroids)
+    return F.explode(ivf_probe_cells(F.col(vec_col), nprobe=nprobe,
+                                     cells=cells, centroids=centroids))
+
+
 #: cap on how many over-budget cells :func:`semantic_dedup` will
 #: sub-cluster per call (on_hot_cell="subdivide"): each hot cell costs
 #: one bounded training collect + one assignment pass, and a geometry
@@ -1063,8 +958,10 @@ def semantic_dedup(df: DataFrame, threshold_q6: int = 350_000,
     2M-point sweep (SCALE_SEMANTIC5B.json, local exponent ~2.0 vs the
     1.5 design) showed spilling through the single host volume.
     Bit-parity with the join form (and the DuckDB oracle) is kept by
-    exact-rescoring GEMM candidates through the same cumsum fold
-    (:func:`_exact_q6_rows`). Cell count is the cost
+    the one pair kernel :func:`_cell_gemm_hits`, which this form and
+    :func:`semantic_dedup_incremental` share: it emits only pairs
+    certain to clear the threshold and exact-rescores the band below
+    through the oracle's cumsum fold. Cell count is the cost
     dial: train cells ~ N / target_cell_size so per-cell work stays
     bounded (FAISS-style sqrt(N) cells gives N^1.5 total pair work
     spread over N/sqrt(N) independent tasks); a skewed giant cell is
@@ -1175,14 +1072,10 @@ def semantic_dedup(df: DataFrame, threshold_q6: int = 350_000,
             raise ValueError(
                 f"semantic_dedup cell workload over budget "
                 f"(max_cell_pairs={max_cell_pairs}): {detail}. {why}")
-    cell_expr = (
-        ivf_cell(F.col(vec_col), cells=cells, centroids=centroids)
-        if nprobe == 1 else
-        F.explode(ivf_probe_cells(F.col(vec_col), nprobe=nprobe,
-                                  cells=cells, centroids=centroids)))
     assigned = df.select(
         F.col(id_col).alias("_sd_id"), F.col(vec_col).alias("_sd_vec"),
-        cell_expr.alias("_sd_cell"))
+        _semantic_cells(vec_col, cells, centroids, nprobe)
+        .alias("_sd_cell"))
     if hot:
         assigned = _subdivide_hot_cells(
             assigned, hot, base_cells=cells, nprobe=nprobe,
@@ -1233,8 +1126,9 @@ def semantic_dedup_incremental(new_df: DataFrame, corpus: DataFrame,
     the batch actually touches. Since round 11 the per-cell cosines run
     as an asymmetric blocked GEMM inside each task
     (:func:`_cell_dropped_gemm_incr`) — only assignment rows shuffle,
-    never candidate-pair rows; bit-parity via the same
-    prefilter-margin + exact-rescore contract as the batch form.
+    never candidate-pair rows. The GEMM is the batch form's own pair
+    kernel (:func:`_cell_gemm_hits`) run over the new rows under the
+    domination rule, so both forms score every pair identically.
 
     ``nprobe`` mirrors the batch form's multi-probe dial (pass the
     SAME value the full runs use — the no-drift contract holds per
@@ -1257,20 +1151,14 @@ def semantic_dedup_incremental(new_df: DataFrame, corpus: DataFrame,
     if centroids is None:
         centroids = ivf_train_centroids(corpus.unionByName(new_df),
                                         vec_col=vec_col, id_col=id_col)
-
-    def cell_expr():
-        return (ivf_cell(F.col(vec_col), cells=cells, centroids=centroids)
-                if nprobe == 1 else
-                F.explode(ivf_probe_cells(F.col(vec_col), nprobe=nprobe,
-                                          cells=cells,
-                                          centroids=centroids)))
-
     new_a = new_df.select(
-        cell_expr().alias("_sd_cell"),
+        _semantic_cells(vec_col, cells, centroids, nprobe)
+        .alias("_sd_cell"),
         F.col(id_col).alias("_sd_id"), F.col(vec_col).alias("_sd_vec"),
         F.lit(True).alias("_sd_new"))
     corpus_a = corpus.select(
-        cell_expr().alias("_sd_cell"),
+        _semantic_cells(vec_col, cells, centroids, nprobe)
+        .alias("_sd_cell"),
         F.lit(0).cast("long").alias("_sd_id"),  # placeholder, never read
         F.col(vec_col).alias("_sd_vec"),
         F.lit(False).alias("_sd_new"))
@@ -1329,12 +1217,8 @@ def semantic_cell_report(df: DataFrame, vec_col: str = "embedding",
     both defaults are ``SEMDEDUP_NPROBE``, so default mirrors default
     and Sum(n) = nprobe × corpus)."""
     cells = _resolve_cells(df, cells, centroids)
-    cell_expr = (
-        ivf_cell(F.col(vec_col), cells=cells, centroids=centroids)
-        if nprobe == 1 else
-        F.explode(ivf_probe_cells(F.col(vec_col), nprobe=nprobe,
-                                  cells=cells, centroids=centroids)))
-    assigned = df.select(cell_expr.alias("cell"))
+    assigned = df.select(
+        _semantic_cells(vec_col, cells, centroids, nprobe).alias("cell"))
     n = F.count(F.lit(1))
     return (assigned.groupBy("cell")
             .agg(n.alias("n"),

@@ -17,7 +17,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.hashing import hash60
-from .dedup import shingles
+from .dedup import exact_dedup, shingles, tokens
 from .util import ensure_parallelism
 
 # Tiny per-language function-word lists for the n-gram/stopword heuristic
@@ -39,10 +39,6 @@ BPE_RE = "[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]"
 # keep each window's minimum.
 WINNOW_K = 8
 WINNOW_W = 4
-
-
-def tokens(col: Column) -> Column:
-    return F.split(F.trim(col), " +")
 
 
 def n_tokens(col: Column) -> Column:
@@ -177,9 +173,6 @@ def corpus_prep(df: DataFrame, quality_min_q6: int = 400_000,
     through dedup keeper changes, which content addressing makes
     stable: the min-id keeper only changes if a SMALLER id arrives).
     """
-    from .dedup import exact_dedup
-    from ..functions.hashing import hash60
-
     keep = exact_dedup(df, text_col, id_col) \
         .select(F.col("keep_id").alias(id_col))
     surv = df.join(keep, id_col, "left_semi")

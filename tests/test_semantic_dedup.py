@@ -11,6 +11,7 @@ a statistical tolerance.
 
 from __future__ import annotations
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -152,6 +153,65 @@ def test_incremental_no_drift_multiprobe(spark, emb):
     n_single = semantic_dedup(planted, threshold_q6=TWIN_Q6,
                               centroids=centroids, nprobe=1).count()
     assert n_full < n_single
+
+
+def _q6_boundary_pair():
+    """Two 64-d float32 vectors whose exact cumsum-fold cosine ``c`` (the
+    DuckDB oracle's fold) sits just above a quantization step:
+    c*1e6 = T + f with f in [0.1, 0.4), so T = floor(c*1e6 + 0.5). The
+    search is seeded, so the pair is the same every run."""
+    rng = np.random.default_rng(7)
+    a = rng.standard_normal(64).astype(np.float32)
+    for _ in range(1000):
+        b = (a + 0.3 * rng.standard_normal(64)).astype(np.float32)
+        A, B = a.astype(np.float64), b.astype(np.float64)
+        c = np.cumsum(A * B)[-1] / np.sqrt(np.cumsum(A * A)[-1]
+                                           * np.cumsum(B * B)[-1])
+        if 0.1 <= c * 1e6 - np.floor(c * 1e6) < 0.4:
+            return a, b, float(c)
+    raise AssertionError("no boundary pair in 1000 draws")
+
+
+def test_q6_boundary_through_the_rescore_band(spark):
+    """Both semantic pair kernels decide a pair one quantization step
+    either side of its exact q6 cosine T the way the oracle does. At
+    threshold T the pair clears its certainty bound and the higher id
+    is dropped; at T+1 it is admitted by the BLAS prefilter but not
+    certain, so only the exact rescore can reject it, and both ids
+    survive. Checked for semantic_dedup and for
+    semantic_dedup_incremental (corpus domination and lower-id
+    domination inside the batch)."""
+    from oracle_to_snowflake_etl_spark.operators.similarity import (
+        _gemm_certain_threshold,
+        _gemm_prefilter_threshold,
+        semantic_dedup_incremental,
+    )
+
+    a, b, c = _q6_boundary_pair()
+    frac = c * 1e6 - np.floor(c * 1e6)
+    T = int(np.floor(c * 1e6 + 0.5))
+    assert 0.0 <= frac < 0.5 and T == int(np.floor(c * 1e6))
+    assert c >= _gemm_certain_threshold(T) + 1e-9
+    assert _gemm_prefilter_threshold(T + 1) <= c \
+        < _gemm_certain_threshold(T + 1)
+    df = spark.createDataFrame([(1, a.tolist()), (2, b.tolist())],
+                               "vec_id long, embedding array<float>")
+    # two cells, both probed by default: the pair meets in each
+    cents = (tuple(float(x) for x in a), tuple(-float(x) for x in a))
+
+    def ids(frame):
+        return sorted(r.vec_id for r in frame.select("vec_id").collect())
+
+    for thr, expect in ((T, [1]), (T + 1, [1, 2])):
+        assert ids(semantic_dedup(df, threshold_q6=thr,
+                                  centroids=cents)) == expect, thr
+        kept_new = ids(semantic_dedup_incremental(
+            df.where("vec_id = 2"), df.where("vec_id = 1"),
+            threshold_q6=thr, cells=2, centroids=cents))
+        assert kept_new == expect[1:], thr
+        assert ids(semantic_dedup_incremental(
+            df, df.limit(0), threshold_q6=thr, cells=2,
+            centroids=cents)) == expect, thr
 
 
 def test_cell_report_conserves_rows_and_pair_math(spark, emb):

@@ -60,11 +60,6 @@ def main() -> None:
     # round 10, so the sweep pins nprobe explicitly to stay comparable
     # across rounds — pass --nprobe 2 to sweep the new default's slope.
     ap.add_argument("--nprobe", type=int, default=1)
-    # round-14 (VERDICT r13 #2): A/B the pair-stage prefilter kernel —
-    # int8/float32 sgemm (the shipped default) vs the round-11 float64
-    # dgemm — inside ONE run, same data, same geometry, interleave-free.
-    # Survivor counts are asserted equal (the bit-parity contract).
-    ap.add_argument("--ab-int8", action="store_true")
     ap.add_argument("--skip-decon", action="store_true")
     ap.add_argument("--out", default=os.path.join(REPO,
                                                   "SCALE_SEMANTIC.json"))
@@ -115,23 +110,6 @@ def main() -> None:
                "t_train": round(t_train, 3),
                "hot_pairs": hot_pairs,
                "t_dedup": round(t_dedup, 3), "survivors": survivors}
-        if args.ab_int8:
-            from oracle_to_snowflake_etl_spark.operators import (
-                similarity as _sim,
-            )
-            row["int8_prefilter"] = _sim.SEMANTIC_INT8_PREFILTER
-            _sim.SEMANTIC_INT8_PREFILTER = \
-                not _sim.SEMANTIC_INT8_PREFILTER
-            try:
-                t_b, surv_b = best_of(
-                    lambda: semantic_dedup(
-                        emb, threshold_q6=args.threshold_q6,
-                        cells=cells, centroids=cents,
-                        nprobe=args.nprobe).count())
-            finally:
-                _sim.SEMANTIC_INT8_PREFILTER = row["int8_prefilter"]
-            assert surv_b == survivors, (surv_b, survivors)
-            row["t_dedup_other_kernel"] = round(t_b, 3)
         if not args.skip_decon:
             t_decon, kept = best_of(
                 lambda: semantic_decontaminate(
@@ -142,8 +120,6 @@ def main() -> None:
         print(f"{d:28s} n={n:>9,} cells={cells:>5} train={t_train:6.2f}s "
               f"hot_pairs={hot_pairs:>10,} dedup={t_dedup:7.2f}s "
               f"(keep {survivors:,})"
-              + (f" other_kernel={row['t_dedup_other_kernel']:7.2f}s"
-                 if args.ab_int8 else "")
               + (f" decon={row['t_decon']:7.2f}s (keep "
                  f"{row['decon_kept']:,})"
                  if not args.skip_decon else ""), flush=True)
